@@ -379,6 +379,7 @@ def incremental_minhash_keepers(
     """
     import math
 
+    shingle_k = 5  # the inline path's width; a store reloads its own
     if (existing is None) == (store_prefix is None):
         raise ValueError(
             "pass exactly one of existing (inline store derivation) or "
@@ -387,14 +388,17 @@ def incremental_minhash_keepers(
     if store_prefix is not None:
         # the PERSISTED store path (build_minhash_store): the stored side is
         # one bucketed-table scan — zero scans of the raw store documents —
-        # and the banding is reloaded from the store's frozen meta (caller
-        # banding literals are ignored; the frozen-parameter rule)
+        # and the banding AND shingle width are reloaded from the store's
+        # frozen meta (caller banding literals are ignored; the
+        # frozen-parameter rule): batch shingles of another width would
+        # hash to signatures that never match the stored ones
         from bigdata_rags_spark.dedup.stores import read_store_meta
 
         spark = batch.sparkSession
         meta = read_store_meta(spark, f"{store_prefix}_meta")
         num_hashes = int(meta["num_hashes"])
         rows_per_band = int(meta["rows_per_band"])
+        shingle_k = int(meta["shingle_k"])
         sig_ex = spark.table(f"{store_prefix}_sig")
     else:
         # the two parameters are a unit (the stored index's frozen banding):
@@ -419,7 +423,9 @@ def incremental_minhash_keepers(
     # intra-batch join) plus the two verify joins: without materialization
     # the signature pass re-executed ~6x (measured r16: 60 parquet scans in
     # one plan; CLAUDE.md multi-branch rule).  One row per doc — small.
-    sig_b = minhash_signatures(batch, id_col, text_col, num_hashes).localCheckpoint()
+    sig_b = minhash_signatures(
+        batch, id_col, text_col, num_hashes, shingle_k
+    ).localCheckpoint()
     bands_ex = lsh_bands(sig_ex, rows_per_band)
     bands_b = lsh_bands(sig_b, rows_per_band)
 

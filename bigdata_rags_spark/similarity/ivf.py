@@ -58,6 +58,42 @@ def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
     return F.slice(F.sort_array(scored, asc=False), 1, n).getField("cell")
 
 
+def _vector_matrix(values):
+    """(n, dim) float64 matrix from a pandas column of array values."""
+    import numpy as np
+
+    return np.array([np.asarray(v, dtype=np.float64) for v in values], dtype=np.float64)
+
+
+def _cell_sims(vecs, centroids: list[list[float]]):
+    """(n, n_cells) dot products, each an EXPLICIT left fold of float64
+    elementwise ops from 0.0 (``s = s + x_i * c_i``) — bit-identical per
+    element to ``_nearest_cells``' SQL ``aggregate`` (the Janino-wall
+    rule, CLAUDE.md).  The one numpy kernel behind every Arrow assignment
+    pass and the driver-side serving probes."""
+    import numpy as np
+
+    n = len(vecs)
+    sims = np.empty((n, len(centroids)), dtype=np.float64)
+    for ci, c in enumerate(centroids):
+        s = np.zeros(n, dtype=np.float64)
+        for i, x in enumerate(c):
+            s = s + vecs[:, i] * x
+        sims[:, ci] = s
+    return sims
+
+
+def _best_cells(sims, n: int):
+    """(rows, min(n, n_cells)) int32 cell ids best first — the descending
+    (sim, cell) order of ``_nearest_cells``: ties break to the HIGHER cell
+    (a stable sort over the column-reversed scores)."""
+    import numpy as np
+
+    k = sims.shape[1]
+    order = np.argsort(-sims[:, ::-1], axis=1, kind="stable")[:, :n]
+    return ((k - 1) - order).astype(np.int32)
+
+
 def fixed_centroids(dim: int = 64, n_cells: int = 16, seed: str = "ivfc") -> list[list[float]]:
     """A deterministic LITERAL codebook (md5-derived, exact multiples of
     1/256 — the same repr-stable construction as the LSH hyperplanes), for
@@ -200,29 +236,17 @@ def assign_cells(
             _nearest_cells(as_double_array(F.col(vec_col)), centroids, 1)[0].alias("cell"),
         )
 
-    import numpy as np
     import pandas as pd
 
     cents = [list(c) for c in centroids]
-    k = len(cents)
-    dim = len(cents[0])
 
     def assign(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["v"]], dtype=np.float64
-            )
-            sims = np.empty((n, k), dtype=np.float64)
-            for ci, c in enumerate(cents):
-                s = np.zeros(n, dtype=np.float64)
-                for i in range(dim):
-                    s = s + vecs[:, i] * c[i]
-                sims[:, ci] = s
-            cells = (k - 1) - sims[:, ::-1].argmax(axis=1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "cell": cells.astype(np.int32)})
+            sims = _cell_sims(_vector_matrix(pdf["v"]), cents)
+            cells = _best_cells(sims, 1)[:, 0]
+            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "cell": cells})
 
     prepped = df.select(
         F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("v")
@@ -253,32 +277,16 @@ def attach_cells(
             _nearest_cells(as_double_array(F.col(vec_col)), centroids, 1)[0],
         )
 
-    import numpy as np
-    import pandas as pd
-
     cents = [list(c) for c in centroids]
-    k = len(cents)
-    dim = len(cents[0])
     in_cols = list(df.columns)
 
     def assign(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__acv"]],
-                dtype=np.float64,
-            )
-            sims = np.empty((n, k), dtype=np.float64)
-            for ci, c in enumerate(cents):
-                s = np.zeros(n, dtype=np.float64)
-                for i in range(dim):
-                    s = s + vecs[:, i] * c[i]
-                sims[:, ci] = s
-            cells = (k - 1) - sims[:, ::-1].argmax(axis=1)
+            sims = _cell_sims(_vector_matrix(pdf["__acv"]), cents)
             out = pdf[in_cols].copy()
-            out["cell"] = cells.astype(np.int32)
+            out["cell"] = _best_cells(sims, 1)[:, 0]
             yield out
 
     # build a FRESH StructType: StructType.add mutates in place, and

@@ -64,6 +64,74 @@ def pq_codebooks(
     return [_deterministic_hyperplanes(sub, k, seed=f"{seed}{j}") for j in range(m)]
 
 
+def _subspace_dots(vecs, codebooks: list[list[list[float]]]):
+    """(n, m*k) float64 dots of every subvector with every centroid of its
+    subspace, column ``j*k + code``.  Each dot is an EXPLICIT left fold of
+    float64 elementwise ops from 0.0 (``s = s + x_i * c_i``) — bit-identical
+    per element to the SQL fold the oracle replays.  The one kernel behind
+    the corpus encode (``_pq_codes``) and the query lookup table
+    (``_lut_micro``)."""
+    import numpy as np
+
+    n, k = len(vecs), len(codebooks[0])
+    dots = np.empty((n, len(codebooks) * k), dtype=np.float64)
+    for j, book in enumerate(codebooks):
+        sub = len(book[0])
+        x = vecs[:, j * sub : (j + 1) * sub]
+        for code, c in enumerate(book):
+            s = np.zeros(n, dtype=np.float64)
+            for i in range(sub):
+                s = s + x[:, i] * c[i]
+            dots[:, j * k + code] = s
+    return dots
+
+
+def _pq_codes(vecs, codebooks: list[list[list[float]]]):
+    """(n, m) int32 codes: per-subspace argmax of dot - ||c||^2/2 (argmin
+    L2 without the per-vector constant); ties break to the HIGHER code via
+    a reversed argmax, matching the oracle's ORDER BY score DESC, code
+    DESC."""
+    import numpy as np
+
+    n, m, k = len(vecs), len(codebooks), len(codebooks[0])
+    half_norms = np.array(
+        [[sum(x * x for x in c) / 2.0 for c in book] for book in codebooks],
+        dtype=np.float64,
+    )
+    scores = _subspace_dots(vecs, codebooks).reshape(n, m, k) - half_norms
+    return ((k - 1) - scores[:, :, ::-1].argmax(axis=2)).astype(np.int32)
+
+
+def _lut_micro(vecs, codebooks: list[list[list[float]]]):
+    """(n, m*k) int64 lookup table: subspace dots rounded to integer
+    micro-units, so the downstream M-way sum is exact.  Rounding is HALF_UP
+    away from zero — floor(x+0.5)/ceil(x-0.5) on the binary double equals
+    Spark ROUND's BigDecimal HALF_UP and DuckDB's ROUND for every
+    representable input."""
+    import numpy as np
+
+    scaled = _subspace_dots(vecs, codebooks) * 1_000_000.0
+    return np.where(
+        scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
+    ).astype(np.int64)
+
+
+def _lut_frame(query_ids, micro, m: int, k: int):
+    """(query_id, m, code, dot_micro) pandas rows of a ``_lut_micro`` table."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(query_ids)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(query_ids, m * k),
+            "m": np.tile(np.repeat(np.arange(m, dtype=np.int32), k), n),
+            "code": np.tile(np.tile(np.arange(k, dtype=np.int32), m), n),
+            "dot_micro": micro.reshape(-1),
+        }
+    )
+
+
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
@@ -81,16 +149,13 @@ def pq_encode(
     # struct-sort and a flat greatest+CASE formulation produced generated
     # code Janino could not compile (method too large), falling back to
     # interpreted evaluation at ~8-50 s for 2k vectors.  The numpy form is
-    # milliseconds AND parity-exact: each score is accumulated with an
-    # EXPLICIT left fold of float64 elementwise ops (s = s + x_i * c_i,
-    # starting from 0.0), which is bit-identical per element to the SQL
-    # fold the oracle replays; ties argmax to the HIGHEST code via a
-    # reversed argmax, matching the oracle's ORDER BY score DESC, code DESC.
+    # milliseconds AND parity-exact (``_subspace_dots``' explicit left fold).
     import numpy as np
     import pandas as pd
 
-    m, k, sub = len(codebooks), len(codebooks[0]), SUB_DIM
-    half_norms = [[sum(x * x for x in c) / 2.0 for c in book] for book in codebooks]
+    from bigdata_rags_spark.similarity.ivf import _vector_matrix
+
+    m = len(codebooks)
     ms = np.arange(m, dtype=np.int32)
 
     def enc(batches):
@@ -98,19 +163,7 @@ def pq_encode(
             n = len(pdf)
             if n == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["v"]], dtype=np.float64
-            )
-            codes = np.empty((n, m), dtype=np.int32)
-            for j, book in enumerate(codebooks):
-                x = vecs[:, j * sub : (j + 1) * sub]
-                scores = np.empty((n, k), dtype=np.float64)
-                for code, c in enumerate(book):
-                    s = np.zeros(n, dtype=np.float64)
-                    for i in range(sub):
-                        s = s + x[:, i] * c[i]
-                    scores[:, code] = s - half_norms[j][code]
-                codes[:, j] = (k - 1) - scores[:, ::-1].argmax(axis=1)
+            codes = _pq_codes(_vector_matrix(pdf["v"]), codebooks)
             yield pd.DataFrame(
                 {
                     "id": np.repeat(pdf["id"].to_numpy(), m),
@@ -143,50 +196,34 @@ def _encode_with_cells(
       expression ``assign_cells`` uses, computed on the scan projection and
       passed THROUGH the Arrow batch (replicated M-fold per id);
     - wider codebooks: the cell is computed inside the same numpy pass with
-      the EXACT explicit left-fold float64 accumulation and
-      tie-to-higher-cell rule of ``assign_cells``' numpy branch.
+      ``assign_cells``' own numpy kernels (``_cell_sims``/``_best_cells``).
     """
     import numpy as np
     import pandas as pd
 
-    from bigdata_rags_spark.similarity.ivf import _nearest_cells
+    from bigdata_rags_spark.similarity.ivf import (
+        _best_cells,
+        _cell_sims,
+        _nearest_cells,
+        _vector_matrix,
+    )
 
-    m, k, sub = len(codebooks), len(codebooks[0]), SUB_DIM
-    half_norms = [[sum(x * x for x in c) / 2.0 for c in book] for book in codebooks]
+    m = len(codebooks)
     ms = np.arange(m, dtype=np.int32)
     narrow = len(centroids) <= 32
     cents = [list(c) for c in centroids]
-    n_cells = len(cents)
-    dim = len(cents[0])
 
     def enc(batches):
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["v"]], dtype=np.float64
-            )
-            codes = np.empty((n, m), dtype=np.int32)
-            for j, book in enumerate(codebooks):
-                x = vecs[:, j * sub : (j + 1) * sub]
-                scores = np.empty((n, k), dtype=np.float64)
-                for code, c in enumerate(book):
-                    s = np.zeros(n, dtype=np.float64)
-                    for i in range(sub):
-                        s = s + x[:, i] * c[i]
-                    scores[:, code] = s - half_norms[j][code]
-                codes[:, j] = (k - 1) - scores[:, ::-1].argmax(axis=1)
+            vecs = _vector_matrix(pdf["v"])
+            codes = _pq_codes(vecs, codebooks)
             if narrow:
                 cells = pdf["cell"].to_numpy()
             else:
-                sims = np.empty((n, n_cells), dtype=np.float64)
-                for ci, c in enumerate(cents):
-                    s = np.zeros(n, dtype=np.float64)
-                    for i in range(dim):
-                        s = s + vecs[:, i] * c[i]
-                    sims[:, ci] = s
-                cells = ((n_cells - 1) - sims[:, ::-1].argmax(axis=1)).astype(np.int32)
+                cells = _best_cells(_cell_sims(vecs, cents), 1)[:, 0]
             yield pd.DataFrame(
                 {
                     "id": np.repeat(pdf["id"].to_numpy(), m),
@@ -213,46 +250,19 @@ def pq_lut(
 ) -> DataFrame:
     """(query_id, m, code, dot_micro): per-query lookup table of subspace
     dots against every centroid, rounded to integer micro-units so the
-    downstream M-way sum is exact."""
+    downstream M-way sum is exact (``_lut_micro``)."""
     # Same Arrow-vectorized left-fold as pq_encode (one 256-expression
     # Catalyst projection here OOM'd codegen on the default driver heap).
-    # Rounding is HALF_UP away from zero — floor(x+0.5)/ceil(x-0.5) on the
-    # binary double equals Spark ROUND's BigDecimal HALF_UP and DuckDB's
-    # ROUND for every representable input.
-    import numpy as np
-    import pandas as pd
+    from bigdata_rags_spark.similarity.ivf import _vector_matrix
 
-    m, k, sub = len(codebooks), len(codebooks[0]), SUB_DIM
-    half = m * k
+    m, k = len(codebooks), len(codebooks[0])
 
     def lut(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["v"]], dtype=np.float64
-            )
-            dots = np.empty((n, m * k), dtype=np.float64)
-            for j, book in enumerate(codebooks):
-                x = vecs[:, j * sub : (j + 1) * sub]
-                for code, c in enumerate(book):
-                    s = np.zeros(n, dtype=np.float64)
-                    for i in range(sub):
-                        s = s + x[:, i] * c[i]
-                    dots[:, j * k + code] = s
-            scaled = dots * 1_000_000.0
-            micro = np.where(
-                scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
-            ).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["id"].to_numpy(), half),
-                    "m": np.tile(np.repeat(np.arange(m, dtype=np.int32), k), n),
-                    "code": np.tile(np.tile(np.arange(k, dtype=np.int32), m), n),
-                    "dot_micro": micro.reshape(-1),
-                }
-            )
+            micro = _lut_micro(_vector_matrix(pdf["v"]), codebooks)
+            yield _lut_frame(pdf["id"].to_numpy(), micro, m, k)
 
     prepped = queries.select(
         F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("v")
@@ -622,7 +632,7 @@ def _read_index_meta(
     return cents, books, num_buckets
 
 
-_CODES_RESERVED = ("id", "m", "code", "cell")
+_CODES_RESERVED = ("id", "m", "code", "cell", "seq")
 
 
 def _attach_metadata(codes: DataFrame, metadata: DataFrame | None) -> DataFrame:
@@ -646,6 +656,64 @@ def _attach_metadata(codes: DataFrame, metadata: DataFrame | None) -> DataFrame:
     return codes.join(md, "id", "left")
 
 
+def _with_liveness(spark, table_prefix: str, rows: DataFrame, key: str) -> DataFrame:
+    """``rows`` of an index table plus a boolean ``__live`` column — THE
+    live-row rule of the log-structured index, shared by every reader:
+
+        a row is live unless a tombstone for its id has a LARGER ``seq``.
+
+    ``{prefix}_codes``/``_vectors`` rows carry the ``seq`` they were written
+    at (0 at build) and ``{prefix}_tombstones`` holds (vec_id, seq) pairs.
+    An upsert at ``s`` writes (id, s) tombstones and then its rows at
+    ``s``, so it masks every older copy of its ids and stays live itself; a
+    delete at ``s`` masks every stored copy.  Tombstones are reduced to one
+    (id, max seq) row per id BEFORE the join, so an id deleted or upserted
+    repeatedly never multiplies the rows it is joined against."""
+    tomb_table = f"{table_prefix}_tombstones"
+    if not spark.catalog.tableExists(tomb_table):
+        return rows.withColumn("__live", F.lit(True))
+    last = (
+        spark.table(tomb_table)
+        .groupBy(F.col("vec_id").alias("__tid"))
+        .agg(F.max("seq").alias("__tseq"))
+    )
+    return (
+        rows.join(F.broadcast(last), F.col(key) == F.col("__tid"), "left")
+        .withColumn(
+            "__live", F.col("__tseq").isNull() | (F.col("seq") >= F.col("__tseq"))
+        )
+        .drop("__tid", "__tseq")
+    )
+
+
+def _live_rows(spark, table_prefix: str, rows: DataFrame, key: str) -> DataFrame:
+    """The live rows of ``rows`` (``_with_liveness``), schema unchanged."""
+    return (
+        _with_liveness(spark, table_prefix, rows, key)
+        .filter(F.col("__live"))
+        .drop("__live")
+    )
+
+
+def _next_seq(spark, table_prefix: str) -> int:
+    """The ``seq`` of the next upsert or delete: a logical counter, 1 + the
+    tombstone table's max ``seq`` (0 when there is none).  Every row written
+    since the last compaction has a tombstone with an equal ``seq``, and
+    compaction resets the rows it keeps to 0 when it drops the tombstones,
+    so the new ``seq`` exceeds every stored row's."""
+    tomb_table = f"{table_prefix}_tombstones"
+    top = None
+    if spark.catalog.tableExists(tomb_table):
+        # a per-partition top-1 merged on the driver: one single-stage job,
+        # where an aggregate would add a shuffle stage and a second job
+        top = spark.table(tomb_table).select("seq").orderBy(F.desc("seq")).first()
+    return 1 + (top[0] if top else 0)
+
+
+def _with_seq(df: DataFrame, seq: int) -> DataFrame:
+    return df.withColumn("seq", F.lit(int(seq)).cast("long"))
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     table_prefix: str = "ivfpq_idx",
@@ -667,7 +735,7 @@ def build_ivfpq_index(
 
     Writes two managed tables and returns their names:
 
-    - ``{prefix}_codes``  (id, m, code, cell, *predicate columns): the
+    - ``{prefix}_codes``  (id, m, code, cell, *predicate columns, seq): the
       PQ-encoded corpus with its coarse-quantizer cell, bucketed AND
       sorted on ``cell`` — serving filters ``cell IN (probed cells)``, so
       only the probed buckets are read off disk (bucket pruning, pinned
@@ -681,9 +749,14 @@ def build_ivfpq_index(
       (low-cardinality categoricals cost ~1 byte/row); vectors missing
       from ``metadata`` keep NULL attributes (LEFT join — the index never
       silently drops vectors; NULL never matches a predicate).
-    - ``{prefix}_vectors`` (vec_id, embedding): full vectors bucketed on
-      ``vec_id`` for the rerank point-lookup join — the corpus side of the
-      |Q| x shortlist rerank fetch never shuffles.
+    - ``{prefix}_vectors`` (vec_id, embedding, seq): full vectors bucketed
+      on ``vec_id`` for the rerank point-lookup join — the corpus side of
+      the |Q| x shortlist rerank fetch never shuffles.
+
+    Every row is written at ``seq = 0`` (a constant column, run-length
+    encoded to almost nothing): upserts and deletes append rows and
+    tombstones at higher ``seq`` and readers apply the live-row rule of
+    ``_with_liveness``.
 
     The corpus is scanned exactly twice at build time (encode+assign, and
     the vector copy) and never again: serving touches codes (bytes) for
@@ -726,7 +799,7 @@ def build_ivfpq_index(
     # one-pass encode+assign (r16): both frames derive from the same scan,
     # so the former pq_encode ⋈ assign_cells shuffle join is removable
     codes = _encode_with_cells(corpus, books, cents, id_col=id_col, vec_col=vec_col)
-    codes = _attach_metadata(codes, metadata)
+    codes = _with_seq(_attach_metadata(codes, metadata), 0)
 
     # The three index writes are INDEPENDENT jobs the driver used to call
     # sequentially, so each write's task tail left the executors idle
@@ -743,8 +816,11 @@ def build_ivfpq_index(
     def _w_vectors() -> None:
         drop_managed_table(spark, vectors_table)
         write_bucketed(
-            corpus.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+            _with_seq(
+                corpus.select(
+                    F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+                ),
+                0,
             ),
             vectors_table,
             "vec_id",
@@ -754,8 +830,10 @@ def build_ivfpq_index(
     def _w_meta() -> None:
         _write_index_meta(spark, f"{table_prefix}_meta", cents, books, num_buckets)
         # a rebuild starts clean: stale tombstones from a prior index under
-        # the same prefix must not mask freshly-indexed vectors
+        # the same prefix must not mask freshly-indexed vectors, nor may an
+        # interrupted compaction's marker swap its stale staging tables in
         drop_managed_table(spark, f"{table_prefix}_tombstones")
+        drop_managed_table(spark, f"{table_prefix}_compacting")
 
     _run_overlapped(_w_codes, _w_vectors, _w_meta)
     return codes_table, vectors_table
@@ -797,21 +875,36 @@ def ivfpq_index_serve(
     both compose when given together.
 
     Serving shape, in scan order:
-    1. probe cells for each query (codegen'd literal projection, query side
-       only) and push the distinct probed cells into the codes scan as a
-       literal ``cell IN (...)`` filter — a bounded driver action (at most
-       ``n_cells`` ints, n_cells <= 256 by ``auto_n_cells``) that turns the
-       coarse quantizer into BUCKET PRUNING: unprobed buckets of the codes
-       table are never read (SelectedBucketsCount < total, plan-pinned);
-    2. ADC-score the surviving codes: broadcast the per-query LUT, equi-join
-       on (query_id, m, code), integer-micro partial+final SUM, window
+    1. the request's queries reach the driver ONCE, as one Arrow batch
+       (queries are the small side by contract — the three frames derived
+       from them were broadcast anyway).  The driver derives each query's
+       probe cells, the distinct probed-cell literal and the per-query LUT
+       with the same left-fold numpy kernels the Arrow passes use
+       (``_cell_sims``/``_best_cells``, ``_lut_micro``), so the plan never
+       re-runs the caller's frame and holds no query-side Python stage;
+    2. the probed cells filter the codes scan as a literal ``cell IN
+       (...)`` — BUCKET PRUNING: unprobed buckets of the codes table are
+       never read (SelectedBucketsCount < total, plan-pinned);
+    3. ADC-score the surviving live codes: broadcast the LUT, equi-join on
+       (query_id, m, code), integer-micro partial+final SUM, window
        shortlist — identical math to ``pq_adc_topk``;
-    3. exact-cosine rerank fetches full vectors for |Q| x shortlist ids
-       from the vec_id-bucketed vectors table (point-lookup join; the big
-       side is pre-bucketed so only the tiny shortlist side moves).
+    4. exact-cosine rerank fetches full live vectors for |Q| x shortlist
+       ids from the vec_id-bucketed vectors table (point-lookup join; the
+       big side is pre-bucketed so only the tiny shortlist side moves).
+
+    Both index reads apply the live-row rule (``_live_rows``): a deleted
+    id is never scored or reranked, and an upserted id is scored and
+    reranked from its newest rows only.
     """
+    import numpy as np
+    import pandas as pd
+
     from bigdata_rags_spark.functions.vectors import cosine
-    from bigdata_rags_spark.similarity.ivf import _nearest_cells
+    from bigdata_rags_spark.similarity.ivf import (
+        _best_cells,
+        _cell_sims,
+        _vector_matrix,
+    )
 
     spark = queries.sparkSession
     if centroids is None or codebooks is None:
@@ -823,19 +916,32 @@ def ivfpq_index_serve(
     else:
         cents, books = centroids, codebooks
 
-    qvec = queries.select(
+    qtype = queries.schema["vec_id"].dataType.simpleString()
+    qpdf = queries.select(
         F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
+    ).toPandas()
+    if qpdf.empty:
+        return spark.createDataFrame(
+            [],
+            f"query_id {qtype}, neighbor_id long, similarity double, rank int",
+        )
+    qids = qpdf["query_id"].to_numpy()
+    qmat = _vector_matrix(qpdf["qv"])
+    cells = _best_cells(_cell_sims(qmat, cents), n_probe)
+    # the literal probed-cell set is what lets the bucketed scan prune — a
+    # join alone cannot skip file reads
+    probe_cells = sorted(set(cells.reshape(-1).tolist()))
+    probes = spark.createDataFrame(
+        pd.DataFrame(
+            {"query_id": np.repeat(qids, cells.shape[1]), "cell": cells.reshape(-1)}
+        ),
+        f"query_id {qtype}, cell int",
     )
-    probes = qvec.select(
-        "query_id",
-        F.explode(_nearest_cells(F.col("qv"), cents, n_probe)).alias("cell"),
+    lut = spark.createDataFrame(
+        _lut_frame(qids, _lut_micro(qmat, books), len(books), len(books[0])),
+        f"query_id {qtype}, m int, code int, dot_micro long",
     )
-    # Bounded driver action (<= n_cells ints, the FPS/centroid-training
-    # contract): literalizing the probed cells is what lets the bucketed
-    # scan prune — a join alone cannot skip file reads.
-    probe_cells = sorted(
-        r["cell"] for r in probes.select("cell").distinct().collect()
-    )
+    qvec = spark.createDataFrame(qpdf, f"query_id {qtype}, qv array<double>")
 
     codes = spark.table(f"{table_prefix}_codes").filter(
         F.col("cell").isin(probe_cells)
@@ -857,19 +963,7 @@ def ivfpq_index_serve(
             "id",
             "left_semi",
         )
-    tomb_table = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_table):
-        # logical deletes (delete_from_ivfpq_index): broadcast anti-join on
-        # the tombstone set — a deleted id can then never reach the rerank,
-        # so only the codes side needs filtering
-        codes = codes.join(
-            F.broadcast(
-                spark.table(tomb_table).select(F.col("vec_id").alias("id"))
-            ),
-            "id",
-            "left_anti",
-        )
-    lut = pq_lut(queries, books)
+    codes = _live_rows(spark, table_prefix, codes, "id")
     scored = (
         codes.join(F.broadcast(probes), "cell")
         .join(F.broadcast(lut), ["query_id", "m", "code"])
@@ -893,7 +987,9 @@ def ivfpq_index_serve(
         .filter(F.col("r") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-    cvec = spark.table(f"{table_prefix}_vectors").select(
+    cvec = _live_rows(
+        spark, table_prefix, spark.table(f"{table_prefix}_vectors"), "vec_id"
+    ).select(
         F.col("vec_id").alias("neighbor_id"),
         as_double_array(F.col("embedding")).alias("cv"),
     )
@@ -921,61 +1017,47 @@ def append_ivfpq_index(
     vec_col: str = "embedding",
     metadata: DataFrame | None = None,
 ) -> tuple[str, str]:
-    """Ingest a new vector batch into an EXISTING persisted IVFPQ index —
-    build-once/serve-many becomes build-once/APPEND-many/serve-many
+    """Upsert a vector batch into an EXISTING persisted IVFPQ index —
+    build-once/serve-many becomes build-once/UPSERT-many/serve-many
     (VERDICT r9 gap #5: without this, every ingest is a full rebuild).
+    A batch id that is new is inserted; one already in the index (live or
+    deleted) is replaced.  Batch ids must be unique
+    (``ingest_vectors_batch`` collapses duplicates first).
 
     The batch is encoded and cell-assigned under the index's OWN persisted
     quantizers (``{prefix}_meta`` — never re-derived, so old and new codes
-    live in the same code space), then appended into both bucketed tables
-    with the index's recorded bucket count: ``saveAsTable`` in append mode
-    adds new per-bucket files under the SAME bucket spec, so cell-bucket
-    pruning and the vec_id point-lookup layout keep holding after any
-    number of appends (FAISS ``add`` semantics; the IVF lists just grow).
+    live in the same code space).  With ``s = _next_seq``, the upsert then
+    appends, in this order:
 
-    Cost: one scan of the BATCH (encode+assign) + one batch-sized bucketed
-    write — the stored corpus is never read, never rewritten.  Serving
-    after append is value-identical to a rebuild over the unioned corpus
-    (pinned in tests/test_ann_index.py) because serving math depends only
-    on table CONTENT, not file layout.
+    1. ``(batch ids, s)`` to ``{prefix}_tombstones`` — masking every older
+       copy of the ids;
+    2. the batch's rows at ``seq = s`` to both bucketed tables (two
+       overlapped writes) — live, because only a LARGER tombstone masks.
+
+    ``saveAsTable`` in append mode adds new per-bucket files under the
+    SAME bucket spec, so cell-bucket pruning and the vec_id point-lookup
+    layout keep holding after any number of upserts (FAISS ``add``
+    semantics; the IVF lists just grow).  A crash between 1 and 2 leaves
+    the ids masked, never half-visible, and a retry writes at a larger
+    ``seq`` that masks whatever the failed attempt left behind.
+
+    Cost: one scan of the BATCH (encode+assign) + batch-sized appends — the
+    stored corpus is never read and never rewritten; replaced rows stay on
+    disk, masked, until ``compact_ivfpq_index``.  Serving after an upsert is
+    value-identical to a rebuild over the live set (pinned in
+    tests/test_ann_index.py) because serving math depends only on the live
+    rows, not on file layout.
     """
     from bigdata_rags_spark.io.bucketing import write_bucketed
 
     spark = batch.sparkSession
     cents, books, num_buckets = _read_index_meta(spark, f"{table_prefix}_meta")
+    seq = _next_seq(spark, table_prefix)
 
     codes_table = f"{table_prefix}_codes"
     vectors_table = f"{table_prefix}_vectors"
-
-    # Re-appending a previously deleted id REVIVES it (ADVICE r10 #1), and
-    # the delete was LOGICAL — the old physical rows for a revived id are
-    # still sitting in {prefix}_codes/_vectors.  Clearing the tombstone
-    # alone would unmask BOTH the stale rows and the fresh batch rows
-    # (ADVICE r11 high): serving then double-counts the ADC score and emits
-    # the neighbor at two ranks, displacing a real top-k hit — and a later
-    # compact keeps the duplicates forever (the tombstone is gone).  So
-    # BEFORE the bucketed insert, physically purge batch∩tombstone ids via
-    # the same staging-swap machinery as compact.  The rewrite is bounded
-    # (it only fires when the batch actually intersects a live tombstone),
-    # and purge-before-insert makes a crashed-then-retried append
-    # idempotent: the retry's purge removes the prior attempt's batch rows
-    # (same ids, still tombstone-masked) before re-inserting them.
-    tomb_table = f"{table_prefix}_tombstones"
-    batch_ids = None
-    if spark.catalog.tableExists(tomb_table):
-        batch_ids = (
-            batch.select(F.col(id_col).cast("long").alias("vec_id")).distinct().localCheckpoint()
-        )
-        revived = (
-            spark.table(tomb_table)
-            .join(F.broadcast(batch_ids), "vec_id", "semi")
-            .localCheckpoint()
-        )
-        if revived.count() > 0:
-            _purge_ids(spark, table_prefix, revived, num_buckets)
-
     codes = _encode_with_cells(batch, books, cents, id_col=id_col, vec_col=vec_col)
-    codes = _attach_metadata(codes, metadata)
+    codes = _with_seq(_attach_metadata(codes, metadata), seq)
     # the batch must carry exactly the predicate columns the index was
     # built with: a silent schema drift here would leave appended rows
     # invisible to (or wrongly visible to) every predicate serve
@@ -987,6 +1069,9 @@ def append_ivfpq_index(
             f"supplies {sorted(set(codes.columns) - set(_CODES_RESERVED))} "
             "— pass the same metadata columns the index was built with"
         )
+    _with_seq(batch.select(F.col(id_col).cast("long").alias("vec_id")), seq).write.mode(
+        "append"
+    ).format("parquet").saveAsTable(f"{table_prefix}_tombstones")
     # the two batch-sized appends are independent jobs: overlap them so the
     # vectors insert back-fills the codes insert's task tail (guide §2.6)
     _run_overlapped(
@@ -994,8 +1079,11 @@ def append_ivfpq_index(
             codes.select(*existing_cols), codes_table, "cell", num_buckets, mode="append"
         ),
         lambda: write_bucketed(
-            batch.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+            _with_seq(
+                batch.select(
+                    F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+                ),
+                seq,
             ),
             vectors_table,
             "vec_id",
@@ -1003,14 +1091,6 @@ def append_ivfpq_index(
             mode="append",
         ),
     )
-    # Only after the fresh rows are durably in place does the batch leave
-    # the tombstone set — a crash between purge/insert and this clear keeps
-    # the ids masked (correct: serving never sees a partial revive).
-    if batch_ids is not None:
-        tombs = spark.table(tomb_table)
-        live = tombs.join(F.broadcast(batch_ids), "vec_id", "left_anti").localCheckpoint()
-        if live.count() < tombs.count():
-            live.write.mode("overwrite").format("parquet").saveAsTable(tomb_table)
     return codes_table, vectors_table
 
 
@@ -1019,95 +1099,79 @@ def delete_from_ivfpq_index(
     table_prefix: str = "ivfpq_idx",
     id_col: str = "vec_id",
 ) -> str:
-    """Logically delete vectors from a persisted IVFPQ index: append their
-    ids to ``{prefix}_tombstones``; serving anti-joins the (broadcast)
-    tombstone set.  This is the LSM/FAISS `remove_ids`-with-selector shape:
-    a delete never rewrites the bucketed codes/vectors tables — at 100 TB a
-    physical per-delete rewrite would re-shuffle the whole index for a
-    handful of ids.  Reclaim space with ``compact_ivfpq_index`` once the
-    tombstone fraction justifies one rebuild-sized write."""
+    """Logically delete vectors from a persisted IVFPQ index: append
+    ``(ids, _next_seq)`` to ``{prefix}_tombstones``, which masks every
+    stored copy of the ids (the live-row rule, ``_with_liveness``).  This
+    is the LSM/FAISS `remove_ids`-with-selector shape: a delete never
+    rewrites the bucketed codes/vectors tables — at 100 TB a physical
+    per-delete rewrite would re-shuffle the whole index for a handful of
+    ids.  Reclaim space with ``compact_ivfpq_index`` once the tombstone
+    fraction justifies one rebuild-sized write."""
     spark = ids.sparkSession
     table = f"{table_prefix}_tombstones"
-    out = ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
-    mode = "append" if spark.catalog.tableExists(table) else "overwrite"
-    out.write.mode(mode).format("parquet").saveAsTable(table)
+    seq = _next_seq(spark, table_prefix)
+    out = _with_seq(ids.select(F.col(id_col).cast("long").alias("vec_id")), seq)
+    out.write.mode("append").format("parquet").saveAsTable(table)
     return table
-
-
-def _purge_ids(
-    spark,
-    table_prefix: str,
-    ids: DataFrame,
-    num_buckets: int,
-) -> tuple[int, int]:
-    """Physically rewrite ``{prefix}_codes`` and ``{prefix}_vectors`` without
-    the given ``vec_id`` rows, preserving the bucket spec (so cell pruning
-    and vec_id point lookups survive).  Shared by ``compact_ivfpq_index``
-    (full tombstone set) and ``append_ivfpq_index`` (the batch∩tombstone
-    revive purge, ADVICE r11 high).  Returns rows removed per table.
-
-    Crash-safety: write-then-swap (ADVICE r10 #2) — survivors land in a
-    staging table FIRST, so the data always exists in full somewhere: the
-    old table (any failure before the drop) or the fully-written staging
-    table (failure between drop and rename).  The drop->rename window gets
-    EXPLICIT recovery: a rerun finishes the rename BEFORE the stale-staging
-    cleanup, or it would destroy the only copy.  Staging is complete
-    whenever the serving table is missing, because the drop only ever runs
-    after write_bucketed returned.  NOTE (ADVICE r11 low): on that recovery
-    path ``before`` is counted on the already-filtered staging contents, so
-    the removed counts for the recovered run understate the true delta —
-    counts reset after crash recovery; labels/content are always correct.
-    """
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
-
-    removed = []
-    for table, key, bucket_col in (
-        (f"{table_prefix}_codes", "id", "cell"),
-        (f"{table_prefix}_vectors", "vec_id", "vec_id"),
-    ):
-        staging = f"{table}__compacting"
-        if not spark.catalog.tableExists(table):
-            if not spark.catalog.tableExists(staging):
-                raise RuntimeError(
-                    f"IVFPQ compact: neither {table} nor its staging table "
-                    "exists — the index was never built or was dropped externally"
-                )
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        drop_managed_table(spark, staging)  # stale partial from a prior crash
-        cur = spark.table(table)
-        before = cur.count()
-        keep = cur.join(
-            F.broadcast(ids.select(F.col("vec_id").alias(key))), key, "left_anti"
-        )
-        write_bucketed(keep, staging, bucket_col, num_buckets)
-        after = spark.table(staging).count()
-        drop_managed_table(spark, table)
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        removed.append(before - after)
-    return (removed[0], removed[1])
 
 
 def compact_ivfpq_index(
     spark,
     table_prefix: str = "ivfpq_idx",
 ) -> tuple[int, int]:
-    """Physically apply accumulated tombstones: rewrite ``{prefix}_codes``
-    and ``{prefix}_vectors`` without the deleted ids (same bucket spec, so
-    every serving plan property — cell pruning, vec_id point lookups —
-    survives the rewrite) and clear the tombstone table.  Returns
-    (codes_rows_removed, vectors_rows_removed); after a mid-compact crash
-    the recovered run's counts reset (see ``_purge_ids``).  One index-sized
-    write, paid when the operator chooses, not per delete."""
-    from bigdata_rags_spark.io.bucketing import drop_managed_table
+    """Physically apply accumulated tombstones — the ONLY operation that
+    rewrites index tables: rewrite ``{prefix}_codes`` and
+    ``{prefix}_vectors`` keeping only their live rows, reset to ``seq = 0``
+    (same bucket spec, so every serving plan property — cell pruning,
+    vec_id point lookups — survives the rewrite), and drop the tombstone
+    table.  Returns (codes_rows_removed, vectors_rows_removed).  One
+    index-sized write, paid when the operator chooses, not per delete.
+
+    Crash-safety: write-then-swap.  Both tables' survivors
+    land in ``{table}__compacting`` staging tables FIRST; only then is the
+    ``{prefix}_compacting`` marker created, the two tables swapped in, the
+    tombstones dropped and the marker removed.  A rerun that finds the
+    marker finishes the swaps and the tombstone drop and returns (0, 0).
+    It must not recompute: a swapped table's rows are already reset to seq
+    0, so the still-present tombstones would mask the upserted ones, and a
+    table dropped before its rename exists only as its staging table.
+    Without the marker, staging tables are partial leftovers and are
+    rebuilt."""
+    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
 
     tomb_table = f"{table_prefix}_tombstones"
+    marker = f"{table_prefix}_compacting"
+    tables = (
+        (f"{table_prefix}_codes", "id", "cell"),
+        (f"{table_prefix}_vectors", "vec_id", "vec_id"),
+    )
+
+    def finish() -> None:
+        for table, _, _ in tables:
+            if spark.catalog.tableExists(f"{table}__compacting"):
+                drop_managed_table(spark, table)
+                spark.sql(f"ALTER TABLE {table}__compacting RENAME TO {table}")
+        drop_managed_table(spark, tomb_table)
+        drop_managed_table(spark, marker)
+
+    if spark.catalog.tableExists(marker):
+        finish()
+        return (0, 0)
     if not spark.catalog.tableExists(tomb_table):
         return (0, 0)
     _, _, num_buckets = _read_index_meta(spark, f"{table_prefix}_meta")
-    tombs = spark.table(tomb_table).select("vec_id").distinct().localCheckpoint()
-    removed = _purge_ids(spark, table_prefix, tombs, num_buckets)
-    drop_managed_table(spark, tomb_table)
-    return removed
+    removed = []
+    for table, key, bucket_col in tables:
+        staging = f"{table}__compacting"
+        drop_managed_table(spark, staging)
+        cur = spark.table(table)
+        before = cur.count()
+        keep = _with_seq(_live_rows(spark, table_prefix, cur, key), 0)
+        write_bucketed(keep, staging, bucket_col, num_buckets)
+        removed.append(before - spark.table(staging).count())
+    spark.sql(f"CREATE TABLE {marker} (staged INT) USING parquet")
+    finish()
+    return (removed[0], removed[1])
 
 
 def merge_ivfpq_indexes(
@@ -1128,16 +1192,22 @@ def merge_ivfpq_indexes(
       index in the first place;
     - the sources' codes tables carry the same predicate-column schema
       (the `build_ivfpq_index(metadata=...)` columns);
-    - source id sets are DISJOINT (the FAISS merge contract) — an id
-      indexed by two shards would double-count its ADC score and surface
-      at two ranks, so the overlap check is worth its one id-level
-      aggregate against an index-sized write.
+    - source LIVE id sets are DISJOINT (the FAISS merge contract) — an id
+      live in two shards would double-count its ADC score and surface at
+      two ranks, so the overlap check is worth its one id-level aggregate
+      against an index-sized write.
 
-    Tombstones union: an id deleted in any source stays masked in the
-    merged index (delete survives merge; compact when it suits).  The
-    merged tables keep the shared bucket spec, so cell pruning and vec_id
-    point lookups hold on the merged index unchanged — pinned in
-    tests/test_ann_index.py."""
+    Only live rows are merged (``_live_rows``), reset to ``seq = 0``, and
+    the merged index starts without tombstones: an id deleted in a source
+    stays absent (delete survives merge), and each source's private
+    ``seq`` counter never meets another's.  The merged tables keep the
+    shared bucket spec, so cell pruning and vec_id point lookups hold on
+    the merged index unchanged — pinned in tests/test_ann_index.py.
+
+    The merged tables are written under ``{dst}_*__merging`` staging names
+    and swapped in only after the duplicate-id check returned 0: a refused
+    merge drops the staging tables and leaves any index already at
+    ``dst_prefix`` untouched and servable."""
     from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
 
     if len(src_prefixes) < 2:
@@ -1160,63 +1230,48 @@ def merge_ivfpq_indexes(
                 f"{p} stores {sorted(cf.columns)} — rebuild with matching "
                 "predicate columns before merging"
             )
-    # disjointness: m = 0 is the one-row-per-vector slice of each codes table
-    ids = None
-    for cf in codes_frames:
-        s = cf.filter(F.col("m") == 0).select("id")
+    codes = vectors = ids = None
+    for p, cf in zip(src_prefixes, codes_frames):
+        live = _with_seq(_live_rows(spark, p, cf, "id"), 0)
+        vec = _with_seq(
+            _live_rows(spark, p, spark.table(f"{p}_vectors"), "vec_id"), 0
+        )
+        # m = 0 is the one-row-per-vector slice of the live codes
+        s = live.filter(F.col("m") == 0).select("id")
+        live = live.select(*codes_frames[0].columns)
+        codes = live if codes is None else codes.unionByName(live)
+        vectors = vec if vectors is None else vectors.unionByName(vec)
         ids = s if ids is None else ids.unionByName(s)
     dup = ids.groupBy("id").count().filter(F.col("count") > 1)
 
-    codes = codes_frames[0].select(*codes_frames[0].columns)
-    for cf in codes_frames[1:]:
-        codes = codes.unionByName(cf)
-    vectors = None
-    for p in src_prefixes:
-        v = spark.table(f"{p}_vectors")
-        vectors = v if vectors is None else vectors.unionByName(v)
-    # deletes survive the merge: union any source tombstones
-    tombs = None
-    for p in src_prefixes:
-        t = f"{p}_tombstones"
-        if spark.catalog.tableExists(t):
-            s = spark.table(t).select("vec_id")
-            tombs = s if tombs is None else tombs.unionByName(s)
-
-    # The disjointness aggregate and the four dst writes are independent
-    # jobs over the already-persisted source tables — overlap them from a
-    # driver thread pool (guide §2.6; VERDICT r16 #3): the id-level check
-    # back-fills the co-bucketed writes' task tails instead of serializing
-    # a full extra pass ahead of them.  A detected overlap still fails
-    # LOUDLY — and now also drops the partially-merged dst tables so a
-    # failed merge can never be served.
+    # The disjointness aggregate and the three staging writes are
+    # independent jobs over the already-persisted source tables — overlap
+    # them from a driver thread pool: the id-level check back-fills the
+    # co-bucketed writes' task tails instead of serializing a full extra
+    # pass ahead of them.
+    parts = ("codes", "vectors", "meta")
+    staged = {t: f"{dst_prefix}_{t}__merging" for t in parts}
+    for t in parts:
+        drop_managed_table(spark, staged[t])  # stale leftovers of a crash
     n_dup_box: list[int] = []
-
-    def _w_codes() -> None:
-        drop_managed_table(spark, f"{dst_prefix}_codes")
-        write_bucketed(codes, f"{dst_prefix}_codes", "cell", num_buckets)
-
-    def _w_vectors() -> None:
-        drop_managed_table(spark, f"{dst_prefix}_vectors")
-        write_bucketed(vectors, f"{dst_prefix}_vectors", "vec_id", num_buckets)
-
-    def _w_meta_tombs() -> None:
-        _write_index_meta(spark, f"{dst_prefix}_meta", cents, books, num_buckets)
-        drop_managed_table(spark, f"{dst_prefix}_tombstones")
-        if tombs is not None:
-            tombs.distinct().write.mode("overwrite").format("parquet").saveAsTable(
-                f"{dst_prefix}_tombstones"
-            )
-
     _run_overlapped(
-        lambda: n_dup_box.append(dup.count()), _w_codes, _w_vectors, _w_meta_tombs
+        lambda: n_dup_box.append(dup.count()),
+        lambda: write_bucketed(codes, staged["codes"], "cell", num_buckets),
+        lambda: write_bucketed(vectors, staged["vectors"], "vec_id", num_buckets),
+        lambda: _write_index_meta(spark, staged["meta"], cents, books, num_buckets),
     )
     if n_dup_box[0] > 0:
-        for t in ("codes", "vectors", "meta", "tombstones"):
-            drop_managed_table(spark, f"{dst_prefix}_{t}")
+        for t in parts:
+            drop_managed_table(spark, staged[t])
         raise ValueError(
             f"{n_dup_box[0]} vector id(s) appear in more than one source index — "
             "merged serving would double-count them; deduplicate shards first"
         )
+    for t in parts:
+        drop_managed_table(spark, f"{dst_prefix}_{t}")
+        spark.sql(f"ALTER TABLE {staged[t]} RENAME TO {dst_prefix}_{t}")
+    drop_managed_table(spark, f"{dst_prefix}_tombstones")
+    drop_managed_table(spark, f"{dst_prefix}_compacting")
     return f"{dst_prefix}_codes", f"{dst_prefix}_vectors"
 
 
@@ -1228,21 +1283,19 @@ def ivfpq_index_stats(spark, table_prefix: str = "ivfpq_idx") -> DataFrame:
     run ``compact_ivfpq_index``).
 
     One scan of the codes table restricted to m = 0 (exactly one code row
-    per vector per subspace, so m = 0 is a 1/M-cost proxy for the vector
-    set), one broadcast anti/semi pair against the tombstones.  Returns
-    (cell, n_vectors, n_live, n_tombstoned, occupancy_micro) where
-    occupancy_micro is the cell's integer-micro share of all vectors.
+    per stored vector copy, so m = 0 is a 1/M-cost proxy for the vector
+    rows), flagged by the live-row rule (``_with_liveness``, which reduces
+    the tombstones to one row per id before its broadcast join, so an id
+    deleted twice is still counted once).  Returns (cell, n_vectors,
+    n_live, n_tombstoned, occupancy_micro): n_vectors counts stored rows,
+    n_live the live ones and n_tombstoned the masked ones (deleted ids and
+    the replaced copies of upserted ids) — until ``compact_ivfpq_index``;
+    occupancy_micro is the cell's integer-micro share of all stored rows.
     """
     codes = spark.table(f"{table_prefix}_codes").filter(F.col("m") == 0)
-    tomb_table = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_table):
-        tombs = spark.table(tomb_table).select(F.col("vec_id").alias("id"))
-        dead = F.broadcast(tombs)
-        flagged = codes.join(
-            dead.withColumn("__dead", F.lit(1)), "id", "left"
-        ).withColumn("__dead", F.coalesce(F.col("__dead"), F.lit(0)))
-    else:
-        flagged = codes.withColumn("__dead", F.lit(0))
+    flagged = _with_liveness(spark, table_prefix, codes, "id").withColumn(
+        "__dead", F.when(F.col("__live"), 0).otherwise(1)
+    )
     per_cell = flagged.groupBy("cell").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
         F.sum(1 - F.col("__dead")).cast("bigint").alias("n_live"),
@@ -1313,12 +1366,9 @@ def ivfpq_tuning_report(
     ).select("query_id", (F.col("pos") + 1).cast("int").alias("cell_rank"), "cell")
 
     codes = spark.table(f"{table_prefix}_codes").filter(F.col("m") == 0)
+    codes = _live_rows(spark, table_prefix, codes, "id")
     vecs = spark.table(f"{table_prefix}_vectors")
-    tomb_table = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_table):
-        tombs = F.broadcast(spark.table(tomb_table).select("vec_id"))
-        codes = codes.join(tombs.withColumnRenamed("vec_id", "id"), "id", "left_anti")
-        vecs = vecs.join(tombs, "vec_id", "left_anti")
+    vecs = _live_rows(spark, table_prefix, vecs, "vec_id")
 
     # exact brute-force truth: per query the k nearest live vectors
     cvec = vecs.select(

@@ -12,25 +12,23 @@ and batch ingest are the same code path and serve value-identically
 Exactly-once contract: a micro-batch can be REPLAYED after a crash
 (foreachBatch is at-least-once; only the checkpoint commit is
 transactional), and a bucketed-table append is not idempotent by itself.
-Each batch therefore runs DELETE-then-APPEND — upsert semantics:
-
-1. ``delete_from_ivfpq_index(batch ids)`` tombstones every id in the
-   batch (masking any prior copies — an older version of the id OR the
-   rows a crashed previous attempt of this same batch already wrote);
-2. ``append_ivfpq_index`` physically purges batch∩tombstone rows before
-   inserting (the ADVICE r11 revive fix), inserts the fresh rows, and
-   clears the batch's tombstones only after they are durable.
-
-Replaying the batch repeats 1-2 and converges to exactly one live copy
-per id, and a crash between the steps leaves the ids masked (serving
-never sees a partial ingest).  The TWO-WIDTHS rule holds by construction:
-append always reloads the frozen quantizers from ``{prefix}_meta``
-(CLAUDE.md) — a stream never retrains the code space.
+Each batch is therefore an UPSERT under the index's log-structured rule
+(`similarity/pq.py:_with_liveness` — a row is live unless a tombstone for
+its id has a larger ``seq``): ``append_ivfpq_index`` writes ``(batch ids,
+s)`` tombstones and then the batch rows at ``seq = s``, masking every
+older copy of the ids — an earlier version of an id OR the rows a crashed
+previous attempt of this same batch already wrote.  Replaying the batch
+writes at a larger ``s`` and converges to exactly one live copy per id,
+and a crash between the tombstone and row writes leaves the ids masked
+(serving never sees a partial ingest).  The TWO-WIDTHS rule holds by
+construction: the upsert always reloads the frozen quantizers from
+``{prefix}_meta`` (CLAUDE.md) — a stream never retrains the code space.
 
 100-TB shape: per micro-batch cost is one batch scan (encode+assign) +
-one batch-sized bucketed write + a tombstone anti-join; the stored corpus
-is never read.  Compaction cadence stays an offline concern
-(`compact_ivfpq_index`) exactly as in the batch lifecycle.
+batch-sized appends to the tombstone, codes and vectors tables; the
+stored corpus is never read and never rewritten.  Compaction cadence
+stays an offline concern (`compact_ivfpq_index`) exactly as in the batch
+lifecycle.
 """
 
 from __future__ import annotations
@@ -45,37 +43,30 @@ def ingest_vectors_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """One micro-batch's upsert into the persisted IVFPQ index — the
-    delete-then-append composition described in the module docstring.
-    Also the right call for BATCH upserts (replace-or-insert by id); the
-    streaming sink below is just this per trigger.
+    """One micro-batch's upsert into the persisted IVFPQ index (the
+    module docstring's contract).  Also the right call for BATCH upserts
+    (replace-or-insert by id); the streaming sink below is just this per
+    trigger.
 
     INTRA-BATCH duplicates (the CDC/update-stream case: two rows for one
     id inside a single micro-batch) are collapsed to ONE deterministic row
-    per id BEFORE the delete-then-append (ADVICE r13): without this, the
-    id is tombstoned once and then BOTH rows insert and clear the
-    tombstone — two live copies, the exact duplicate-rank/double-ADC bug
-    the purge exists to prevent.  The input carries no version column, so
-    the documented rule is ``max(vec)`` under Spark's lexicographic array
-    order — arbitrary but DETERMINISTIC, hence replay-idempotent (a
-    replayed batch collapses to the same survivor).  Callers with a real
-    version column should pre-resolve to latest-per-id upstream."""
-    from bigdata_rags_spark.similarity.pq import (
-        append_ivfpq_index,
-        delete_from_ivfpq_index,
-    )
+    per id first: both rows would otherwise land at the same
+    ``seq`` and BOTH stay live — the duplicate-rank/double-ADC bug.  The
+    input carries no version column, so the documented rule is
+    ``max(vec)`` under Spark's lexicographic array order — arbitrary but
+    DETERMINISTIC, hence replay-idempotent (a replayed batch collapses to
+    the same survivor).  Callers with a real version column should
+    pre-resolve to latest-per-id upstream."""
+    from bigdata_rags_spark.similarity.pq import append_ivfpq_index
 
-    one_per_id = batch.groupBy(F.col(id_col)).agg(
-        F.max(F.col(vec_col)).alias(vec_col)
+    # materialized once: the upsert reads the collapsed batch three times
+    # (tombstones, encode, vectors) — CLAUDE.md multi-branch rule
+    one_per_id = (
+        batch.groupBy(F.col(id_col))
+        .agg(F.max(F.col(vec_col)).alias(vec_col))
+        .localCheckpoint()
     )
-    ids = one_per_id.select(F.col(id_col))
-    delete_from_ivfpq_index(ids, table_prefix, id_col=id_col)
-    append_ivfpq_index(
-        one_per_id.select(id_col, vec_col),
-        table_prefix,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+    append_ivfpq_index(one_per_id, table_prefix, id_col=id_col, vec_col=vec_col)
 
 
 def stream_vectors_into_ivfpq(

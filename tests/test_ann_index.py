@@ -55,12 +55,12 @@ def _n_arrow_stages(plan: str) -> int:
 def test_serving_plan_has_no_corpus_encode(spark, built_index):
     q = built_index.filter(F.col("vec_id") < 5)
     plan = _plan(ivfpq_index_serve(q, k=5, table_prefix=PREFIX))
-    # exactly two Arrow stages: the per-QUERY lookup table + the r13
-    # partition-local pre-top-k ahead of the shortlist window
-    # (similarity/topk.py).  The corpus encode (pq_encode's MapInPandas)
-    # must not appear — that's the build half, paid once at
+    # exactly one Arrow stage: the partition-local pre-top-k ahead of
+    # the shortlist window (similarity/topk.py).  The per-query lookup
+    # table is built on the driver, and the corpus encode (pq_encode's
+    # MapInPandas) must not appear — that's the build half, paid once at
     # build_ivfpq_index time.
-    assert _n_arrow_stages(plan) == 2, plan[:3000]
+    assert _n_arrow_stages(plan) == 1, plan[:3000]
     # and the on-the-fly sibling DOES encode the corpus in-plan (one MORE
     # Arrow stage), which is exactly the repeated cost the split amortizes
     fly = _plan(ivfpq_search_rerank(q, built_index, k=5, n_probe=4, shortlist=50))
@@ -82,7 +82,7 @@ def _drop_tables(spark):
     created: list[str] = []
     yield created
     for prefix in created:
-        for suffix in ("_codes", "_vectors", "_meta", "_tombstones"):
+        for suffix in ("_codes", "_vectors", "_meta", "_tombstones", "_compacting"):
             drop_managed_table(spark, f"{prefix}{suffix}")
 
 
@@ -140,7 +140,7 @@ def test_trained_index_serves_its_own_quantizers(spark, sf_smoke, _drop_tables):
         key=key,
     )
     assert served == fly and len(served) == 25
-    assert _n_arrow_stages(_plan(ivfpq_index_serve(q, k=5, table_prefix="t_ann_tr"))) == 2
+    assert _n_arrow_stages(_plan(ivfpq_index_serve(q, k=5, table_prefix="t_ann_tr"))) == 1
 
     def recall(rows) -> float:
         truth: dict[int, set[int]] = {}
@@ -191,14 +191,24 @@ def test_delete_then_compact_lifecycle(spark, sf_smoke, _drop_tables):
     assert compacted == deleted
     # plan properties survive compaction
     plan = _plan(ivfpq_index_serve(e.filter(F.col("vec_id") == 1), k=5, table_prefix="t_ann_del"))
-    assert _n_arrow_stages(plan) == 2
+    assert _n_arrow_stages(plan) == 1
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     assert m and int(m.group(1)) < int(m.group(2)), plan[:3000]
 
+
+def _live_count(spark, prefix: str, table: str, key: str, ident: int) -> int:
+    """Live rows of one id in an index table, read through the index's own
+    live-row rule."""
+    from bigdata_rags_spark.similarity.pq import _live_rows
+
+    rows = spark.table(f"{prefix}_{table}").filter(F.col(key) == ident)
+    return _live_rows(spark, prefix, rows, key).count()
+
+
 @pytest.mark.slow  # ~35 s measured r17
 def test_reappend_revives_deleted_id(spark, sf_smoke, _drop_tables):
-    """Appending a previously deleted id clears its tombstone (ADVICE r10
-    #1): the vector is visible at serve time again, and a later compact
+    """Appending a previously deleted id revives it: the vector is visible
+    at serve time again, with exactly one live copy, and a later compact
     keeps its rows instead of silently dropping the re-ingest."""
     from bigdata_rags_spark.similarity.pq import (
         append_ivfpq_index,
@@ -216,42 +226,37 @@ def test_reappend_revives_deleted_id(spark, sf_smoke, _drop_tables):
     # cosine with the live victim is 1.0 -> rank 1 whenever 7 is visible
     clone = victim.select(F.lit(99999).cast("long").alias("vec_id"), "embedding")
 
-    def neighbors(prefix: str) -> set[int]:
-        return {
+    def neighbors(prefix: str) -> list[int]:
+        return [
             r["neighbor_id"]
             for r in ivfpq_index_serve(clone, k=5, table_prefix=prefix).collect()
-        }
+        ]
 
     assert 7 in neighbors("t_ann_rev")  # live before the delete
     delete_from_ivfpq_index(victim.select("vec_id"), table_prefix="t_ann_rev")
     assert 7 not in neighbors("t_ann_rev")  # tombstone masks the id
-    # re-ingest: dedupe the physical rows is NOT needed — the tombstone
-    # clear is.  Delete-then-compact first so the stale rows are gone,
-    # mirroring the documented re-ingest flow.
-    compact_ivfpq_index(spark, table_prefix="t_ann_rev")
+    # re-ingest without a compact in between: the new rows outrank the
+    # delete's tombstone, the build-time rows stay masked
     append_ivfpq_index(victim, table_prefix="t_ann_rev")
-    assert 7 in neighbors("t_ann_rev")  # revived
-    # tombstone table is gone or no longer lists 7
-    if spark.catalog.tableExists("t_ann_rev_tombstones"):
-        assert (
-            spark.table("t_ann_rev_tombstones").filter(F.col("vec_id") == 7).count() == 0
-        )
-    # compacting after the re-ingest must keep the revived rows
+    assert neighbors("t_ann_rev").count(7) == 1  # revived, served once
+    assert _live_count(spark, "t_ann_rev", "vectors", "vec_id", 7) == 1
+    # compacting after the re-ingest must keep the revived rows, once
     compact_ivfpq_index(spark, table_prefix="t_ann_rev")
     assert spark.table("t_ann_rev_vectors").filter(F.col("vec_id") == 7).count() == 1
-    assert 7 in neighbors("t_ann_rev")
+    assert neighbors("t_ann_rev").count(7) == 1
 
 
 @pytest.mark.slow  # ~20 s measured r17
-def test_reappend_without_compact_clears_tombstone(spark, sf_smoke, _drop_tables):
+def test_reappend_over_tombstone_keeps_one_live_copy(spark, sf_smoke, _drop_tables):
     """Append directly over a live tombstone (no compact in between): the
-    batch's ids leave the tombstone set, others stay masked — AND the
-    revived id exists physically exactly once (ADVICE r11 high: the logical
-    delete left the old code/vector rows in place, so the append must purge
-    them before inserting, or serving double-counts the ADC score and emits
-    the revived neighbor at two ranks)."""
+    batch's ids are live again and others stay masked — and the revived id
+    has exactly ONE live copy: the logical delete left the old code/vector
+    rows in place, and if they were live beside the new ones serving would
+    double-count the ADC score and emit the revived neighbor at two ranks.
+    Compaction then leaves exactly one physical copy."""
     from bigdata_rags_spark.similarity.pq import (
         append_ivfpq_index,
+        compact_ivfpq_index,
         delete_from_ivfpq_index,
     )
 
@@ -262,30 +267,28 @@ def test_reappend_without_compact_clears_tombstone(spark, sf_smoke, _drop_tables
         e.filter(F.col("vec_id").isin(11, 12)).select("vec_id"), table_prefix="t_ann_rev2"
     )
     append_ivfpq_index(e.filter(F.col("vec_id") == 11), table_prefix="t_ann_rev2")
-    left = {r["vec_id"] for r in spark.table("t_ann_rev2_tombstones").collect()}
-    assert left == {12}  # 11 revived, 12 still masked
-    # physical uniqueness: the stale pre-delete rows for 11 were purged —
-    # exactly one code row per subquantizer (same as a never-deleted id)
-    codes = spark.table("t_ann_rev2_codes")
-    per_sub = codes.filter(F.col("id") == 13).count()  # never deleted
-    assert codes.filter(F.col("id") == 11).count() == per_sub
-    assert spark.table("t_ann_rev2_vectors").filter(F.col("vec_id") == 11).count() == 1
-    # serving returns each neighbor at most once per query (the ADVICE r11
-    # repro: without the purge, the duplicated vectors row made the rerank
-    # join emit the revived neighbor at two ranks).  Self-matches are
-    # excluded by design, so probe with OTHER vectors as queries.
+    # 11 revived, 12 still masked: one live copy per subquantizer for 11
+    # (same as a never-deleted id), none for 12
+    per_sub = _live_count(spark, "t_ann_rev2", "codes", "id", 13)  # never deleted
+    assert _live_count(spark, "t_ann_rev2", "codes", "id", 11) == per_sub
+    assert _live_count(spark, "t_ann_rev2", "codes", "id", 12) == 0
+    assert _live_count(spark, "t_ann_rev2", "vectors", "vec_id", 11) == 1
+    assert _live_count(spark, "t_ann_rev2", "vectors", "vec_id", 12) == 0
+    # serving returns each neighbor at most once per query (a second live
+    # vectors row would make the rerank join emit the revived neighbor at
+    # two ranks).  Self-matches are excluded by design,
+    # so probe with OTHER vectors as queries.
     served = ivfpq_index_serve(
         e.filter(F.col("vec_id").between(13, 20)), k=5, table_prefix="t_ann_rev2"
     ).collect()
     pairs = [(r["query_id"], r["neighbor_id"]) for r in served]
     assert len(pairs) == len(set(pairs)), pairs
-    # and a later compact (tombstone for 12 still live) keeps 11 unique
-    from bigdata_rags_spark.similarity.pq import compact_ivfpq_index
-
+    # compaction keeps exactly one physical copy of 11 and none of 12
     compact_ivfpq_index(spark, table_prefix="t_ann_rev2")
     codes2 = spark.table("t_ann_rev2_codes")
     assert codes2.filter(F.col("id") == 11).count() == per_sub
     assert codes2.filter(F.col("id") == 12).count() == 0
+    assert spark.table("t_ann_rev2_vectors").filter(F.col("vec_id") == 11).count() == 1
 
 
 @pytest.mark.slow  # ~14 s measured r17
@@ -349,53 +352,66 @@ def test_tuning_report_monotone_and_complete(spark, sf_smoke, _drop_tables):
     assert 0 < recalls[0] < 1_000_000    # partial probing is genuinely partial
 
 
-@pytest.mark.slow  # ~18 s measured r17
-def test_compact_recovers_from_drop_rename_crash_window(spark, sf_smoke, _drop_tables):
-    """Simulate a crash between compact's drop and rename (codes table
-    gone, fully-written staging left behind): a compact rerun must finish
-    the rename FIRST — not destroy the staging as 'stale' — and serving
-    afterwards equals the uninterrupted-compact result."""
-    from bigdata_rags_spark.io.bucketing import drop_managed_table
+@pytest.mark.parametrize(
+    "crash_at",
+    [
+        "ALTER TABLE t_ann_crash_codes__compacting RENAME",
+        "DROP TABLE IF EXISTS t_ann_crash_tombstones",
+    ],
+    ids=["codes_drop_rename_window", "before_tombstone_drop"],
+)
+def test_compact_rerun_after_crash(spark, sf_smoke, _drop_tables, monkeypatch, crash_at):
+    """A compact that crashes after staging both tables must be finished,
+    not redone, by the rerun.  Between the codes table's drop and its
+    rename the staging table is the only copy of the codes; after both
+    swaps the live rows are reset to seq 0, so recomputing liveness against
+    the not-yet-dropped tombstones would drop every upserted row.  Either
+    way the rerun must serve exactly what an uninterrupted compact serves,
+    with the exact live count and no staging, marker or tombstone left."""
     from bigdata_rags_spark.similarity.pq import (
+        append_ivfpq_index,
         compact_ivfpq_index,
         delete_from_ivfpq_index,
+        ivfpq_index_stats,
     )
 
-    _drop_tables.extend(["t_ann_crash"])
+    prefix = "t_ann_crash"
+    _drop_tables.append(prefix)
     e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 5)
+    build_ivfpq_index(e, table_prefix=prefix)
+    # ids 0-19 replaced (reversed vectors), ids 15-24 then deleted
+    append_ivfpq_index(
+        e.filter(F.col("vec_id") < 20).select(
+            "vec_id", F.reverse("embedding").alias("embedding")
+        ),
+        table_prefix=prefix,
+    )
+    delete_from_ivfpq_index(e.filter(F.col("vec_id").between(15, 24)).select("vec_id"), prefix)
+    q = e.filter(F.col("vec_id").between(100, 104))
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    expected = sorted(ivfpq_index_serve(q, k=5, table_prefix=prefix).collect(), key=key)
+    n_live = e.count() - 10
 
-    build_ivfpq_index(e, table_prefix="t_ann_crash")
-    delete_from_ivfpq_index(
-        e.filter(F.col("vec_id") % 4 == 0).select("vec_id"), table_prefix="t_ann_crash"
-    )
-    expected = sorted(
-        ivfpq_index_serve(q, k=5, table_prefix="t_ann_crash").collect(), key=key
-    )
+    sql = spark.sql
 
-    # reproduce the exact crash window: survivors staged, old table dropped,
-    # rename never ran
-    tombs = spark.table("t_ann_crash_tombstones").select("vec_id").distinct()
-    staged = spark.table("t_ann_crash_codes").join(
-        tombs.withColumnRenamed("vec_id", "id"), "id", "left_anti"
-    )
-    staged.write.saveAsTable("t_ann_crash_codes__compacting")
-    drop_managed_table(spark, "t_ann_crash_codes")
-    try:
-        removed_codes, _ = compact_ivfpq_index(spark, table_prefix="t_ann_crash")
-        # the recovered table had the tombstoned rows already removed, so
-        # the rerun's own anti-join removes nothing more from codes
-        assert removed_codes == 0
-        assert spark.catalog.tableExists("t_ann_crash_codes")
-        assert not spark.catalog.tableExists("t_ann_crash_codes__compacting")
-        assert not spark.catalog.tableExists("t_ann_crash_tombstones")
-        got = sorted(
-            ivfpq_index_serve(q, k=5, table_prefix="t_ann_crash").collect(), key=key
-        )
-        assert got == expected
-    finally:
-        drop_managed_table(spark, "t_ann_crash_codes__compacting")
+    def crashing_sql(query, *args, **kwargs):
+        if query.startswith(crash_at):
+            raise RuntimeError("simulated crash")
+        return sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", crashing_sql)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact_ivfpq_index(spark, prefix)
+    monkeypatch.undo()
+    assert spark.catalog.tableExists(f"{prefix}_compacting")
+
+    assert compact_ivfpq_index(spark, prefix) == (0, 0)
+    for t in ("_compacting", "_tombstones", "_codes__compacting", "_vectors__compacting"):
+        assert not spark.catalog.tableExists(f"{prefix}{t}")
+    assert spark.table(f"{prefix}_vectors").count() == n_live
+    assert ivfpq_index_stats(spark, prefix).agg(F.sum("n_live")).first()[0] == n_live
+    got = sorted(ivfpq_index_serve(q, k=5, table_prefix=prefix).collect(), key=key)
+    assert got == expected and len(got) == 25
 
 
 @pytest.mark.slow  # ~16 s measured r17
@@ -612,3 +628,108 @@ def test_predicate_columns_append_and_validation(spark, sf_smoke, _drop_tables):
     bad_md = docs.select("doc_id", F.col("lang").alias("cell"))
     with _pytest.raises(ValueError, match="collide with the codes schema"):
         build_ivfpq_index(e, table_prefix="t_ann_predapp", metadata=bad_md)
+
+
+def test_upsert_delete_compact_lifecycle_equals_rebuild(spark, sf_smoke, _drop_tables):
+    """The log-structured lifecycle: upsert -> delete -> re-upsert ->
+    compact -> upsert.  After every step the index serves exactly what a
+    fresh build over the live set serves, each neighbor at most once per
+    query, and its live count is exact; compaction leaves one physical
+    row per live vector and no tombstones, and the upsert after it (whose
+    seq restarts at 1) still replaces the compacted rows."""
+    from bigdata_rags_spark.similarity.pq import (
+        compact_ivfpq_index,
+        delete_from_ivfpq_index,
+        ivfpq_index_stats,
+    )
+    from bigdata_rags_spark.streaming.ingest import ingest_vectors_batch
+
+    prefix, ref = "t_ann_lsm", "t_ann_lsm_ref"
+    _drop_tables.extend([prefix, ref])
+    e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"].select(
+        "vec_id", "embedding"
+    )
+    schema = e.schema
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in e.collect()}
+    live = {i: v for i, v in vecs.items() if i % 4 != 0}
+    build_ivfpq_index(spark.createDataFrame(sorted(live.items()), schema), table_prefix=prefix)
+    # queries arrive by value under fresh ids, so no hit is a self-match
+    queries = spark.createDataFrame(
+        [(-1 - j, vecs[i]) for j, i in enumerate((1, 4, 8, 123, 250))], schema
+    )
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+
+    def upsert(rows: dict[int, list[float]]) -> None:
+        ingest_vectors_batch(spark.createDataFrame(sorted(rows.items()), schema), prefix)
+        live.update(rows)
+
+    def check(step: str) -> None:
+        got = sorted(ivfpq_index_serve(queries, k=5, table_prefix=prefix).collect(), key=key)
+        build_ivfpq_index(spark.createDataFrame(sorted(live.items()), schema), table_prefix=ref)
+        want = sorted(ivfpq_index_serve(queries, k=5, table_prefix=ref).collect(), key=key)
+        assert got == want and len(got) == 25, step
+        pairs = [(r["query_id"], r["neighbor_id"]) for r in got]
+        assert len(pairs) == len(set(pairs)), step
+        n_live = ivfpq_index_stats(spark, prefix).agg(F.sum("n_live")).first()[0]
+        assert n_live == len(live), step
+
+    # new ids (multiples of 4) plus in-place updates of existing ids, each
+    # re-pointed at another vector so its old rows would rank differently
+    upsert({**{i: vecs[i] for i in range(0, 200, 4)}, **{i: vecs[i + 1] for i in (5, 9, 250)}})
+    check("upsert")
+    gone = [4, 9, 13, 250, 301]  # new, updated and built ids
+    delete_from_ivfpq_index(spark.createDataFrame([(i,) for i in gone], "vec_id long"), prefix)
+    for i in gone:
+        del live[i]
+    check("delete")
+    upsert({4: vecs[6], 9: vecs[9], 250: vecs[2]})
+    check("re-upsert")
+    compact_ivfpq_index(spark, prefix)
+    assert not spark.catalog.tableExists(f"{prefix}_tombstones")
+    assert spark.table(f"{prefix}_vectors").count() == len(live)
+    assert spark.table(f"{prefix}_vectors").filter(F.col("seq") != 0).count() == 0
+    check("compact")
+    upsert({5: vecs[7], 204: vecs[204]})
+    check("upsert after compact")
+
+
+def test_stats_count_an_id_deleted_twice_once(spark, sf_smoke, _drop_tables):
+    """Two tombstones for one id (deleted twice) must not double its row in
+    ivfpq_index_stats: the counts add up to the stored vectors."""
+    from bigdata_rags_spark.similarity.pq import delete_from_ivfpq_index, ivfpq_index_stats
+
+    _drop_tables.append("t_ann_st2")
+    e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"]
+    build_ivfpq_index(e, table_prefix="t_ann_st2")
+    for _ in range(2):
+        delete_from_ivfpq_index(e.filter(F.col("vec_id") == 3).select("vec_id"), "t_ann_st2")
+    totals = ivfpq_index_stats(spark, "t_ann_st2").agg(
+        F.sum("n_vectors"), F.sum("n_live"), F.sum("n_tombstoned")
+    ).first()
+    n = e.count()
+    assert tuple(totals) == (n, n - 1, 1)
+
+
+def test_refused_merge_keeps_destination_index(spark, sf_smoke, _drop_tables):
+    """A merge refused by the duplicate-id check must leave an index that
+    already lives at the destination prefix intact: it still serves the
+    same results, and no staging table is left behind."""
+    import pytest as _pytest
+
+    from bigdata_rags_spark.similarity.pq import merge_ivfpq_indexes
+
+    _drop_tables.extend(["t_mrg2_a", "t_mrg2_b", "t_mrg2_out"])
+    e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"]
+    build_ivfpq_index(e.filter(F.col("vec_id") % 2 == 0), table_prefix="t_mrg2_a")
+    build_ivfpq_index(e.filter(F.col("vec_id") % 2 == 1), table_prefix="t_mrg2_b")
+    build_ivfpq_index(e, table_prefix="t_mrg2_out")
+    q = e.filter(F.col("vec_id") < 5)
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    before = sorted(ivfpq_index_serve(q, k=5, table_prefix="t_mrg2_out").collect(), key=key)
+    with _pytest.raises(ValueError, match="more than one source index"):
+        merge_ivfpq_indexes(spark, ["t_mrg2_a", "t_mrg2_b", "t_mrg2_a"], "t_mrg2_out")
+    after = sorted(ivfpq_index_serve(q, k=5, table_prefix="t_mrg2_out").collect(), key=key)
+    assert after == before and len(after) == 25
+    for t in ("codes", "vectors", "meta"):
+        assert not spark.catalog.tableExists(f"t_mrg2_out_{t}__merging")
+

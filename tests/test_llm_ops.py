@@ -2500,6 +2500,35 @@ def test_text_dedup_store_params_frozen_from_meta(spark):
         drop_managed_table(spark, t)
 
 
+def test_minhash_store_path_uses_frozen_shingle_k(spark):
+    """A MinHash store built at shingle_k=3 must shingle ingest batches at 3
+    too: a 4-token batch doc identical to a stored one is a duplicate under
+    3-shingles, but would have no signature (and survive) under the default
+    width of 5."""
+    from bigdata_rags_spark.dedup.minhash import (
+        build_minhash_store,
+        incremental_minhash_keepers,
+    )
+    from bigdata_rags_spark.io.bucketing import drop_managed_table
+
+    existing = spark.createDataFrame(
+        [(1, "apple banana cherry date")], ["doc_id", "text"]
+    )
+    batch = spark.createDataFrame(
+        [(10, "apple banana cherry date"), (11, "zulu yankee xray whiskey")],
+        ["doc_id", "text"],
+    )
+    try:
+        build_minhash_store(
+            existing, "t_mh_k3", num_hashes=12, rows_per_band=2, shingle_k=3
+        )
+        kept = incremental_minhash_keepers(batch, store_prefix="t_mh_k3")
+        assert sorted(r["doc_id"] for r in kept.collect()) == [11]
+    finally:
+        for t in ("t_mh_k3_sig", "t_mh_k3_meta"):
+            drop_managed_table(spark, t)
+
+
 def test_epoch_shuffle_plan_properties(spark):
     """Each epoch is a complete permutation (every row exactly once),
     epochs order rows DIFFERENTLY, positions are dense 1..n per shard, and

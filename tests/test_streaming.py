@@ -771,17 +771,27 @@ def test_stream_ingest_into_ivfpq_equals_batch_append(spark, sf_smoke, tmp_path)
 
 
 def test_ingest_batch_with_intra_batch_duplicate_ids_converges(spark, sf_smoke):
-    """ADVICE r13 (medium): a micro-batch carrying TWO rows for one id
+    """A micro-batch carrying TWO rows for one id
     (the CDC/update-stream case) must still converge to exactly one live
-    copy — delete-then-append alone tombstones the id once and then
-    inserts both rows, leaving duplicates.  The fix collapses the batch to
-    one deterministic row per id (max(vec) lexicographic) pre-append."""
+    copy — both rows would otherwise land at the same seq and both stay
+    live.  The fix collapses the batch to one deterministic row per id
+    (max(vec) lexicographic) pre-upsert; a replay masks the first copy."""
     from bigdata_rags_spark.io.bucketing import drop_managed_table
     from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.pq import build_ivfpq_index
+    from bigdata_rags_spark.similarity.pq import (
+        _live_rows,
+        build_ivfpq_index,
+        compact_ivfpq_index,
+        ivfpq_index_serve,
+    )
     from bigdata_rags_spark.streaming.ingest import ingest_vectors_batch
 
     prefix = "t_dup_ing"
+
+    def live(table: str, key: str):
+        rows = spark.table(f"{prefix}_{table}").filter(F.col(key) == dup_id)
+        return _live_rows(spark, prefix, rows, key)
+
     try:
         e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"]
         build_ivfpq_index(e.filter(F.col("vec_id") % 3 != 0), table_prefix=prefix)
@@ -794,29 +804,33 @@ def test_ingest_batch_with_intra_batch_duplicate_ids_converges(spark, sf_smoke):
         assert batch.count() == 2
         expected_vec = batch.agg(F.max("embedding")).collect()[0][0]
 
-        ingest_vectors_batch(batch, prefix)
-        live_vecs = (
-            spark.table(f"{prefix}_vectors").filter(F.col("vec_id") == dup_id).collect()
-        )
-        assert len(live_vecs) == 1
-        assert list(live_vecs[0]["embedding"]) == list(expected_vec)
-        # codes table: exactly one row per subquantizer for the id, and no
-        # lingering tombstone masking it
-        codes = spark.table(f"{prefix}_codes").filter(F.col("id") == dup_id)
-        assert codes.count() == codes.select("m").distinct().count()
-        assert (
-            spark.table(f"{prefix}_tombstones")
-            .filter(F.col("vec_id") == dup_id)
-            .count()
-            == 0
-        )
+        for attempt in ("first", "replay"):
+            ingest_vectors_batch(batch, prefix)
+            live_vecs = live("vectors", "vec_id").collect()
+            assert len(live_vecs) == 1, attempt
+            assert list(live_vecs[0]["embedding"]) == list(expected_vec), attempt
+            # codes: exactly one live row per subquantizer for the id
+            codes = live("codes", "id")
+            assert codes.count() == codes.select("m").distinct().count() > 0, attempt
+            # served at most once per query (a clone query under a fresh id
+            # finds it at cosine 1.0)
+            clone = spark.createDataFrame(
+                [(-1, list(expected_vec))], "vec_id long, embedding array<float>"
+            )
+            hits = [
+                r["neighbor_id"]
+                for r in ivfpq_index_serve(clone, k=5, table_prefix=prefix).collect()
+            ]
+            assert hits.count(dup_id) == 1, attempt
 
-        # replaying the same duplicate-carrying batch is still idempotent
-        ingest_vectors_batch(batch, prefix)
+        # compaction leaves exactly one physical copy
+        compact_ivfpq_index(spark, prefix)
         again = (
             spark.table(f"{prefix}_vectors").filter(F.col("vec_id") == dup_id).collect()
         )
         assert len(again) == 1 and list(again[0]["embedding"]) == list(expected_vec)
+        codes = spark.table(f"{prefix}_codes").filter(F.col("id") == dup_id)
+        assert codes.count() == codes.select("m").distinct().count()
     finally:
         for suffix in ("_codes", "_vectors", "_meta", "_tombstones"):
             drop_managed_table(spark, f"{prefix}{suffix}")
