@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bigdata_rags_spark.queries.catalog import REGISTRY, ordered_registry  # noqa: E402
+from bigdata_rags_spark.queries.catalog import REGISTRY  # noqa: E402
 
 _SMOKE_DIR = "/root/testdata/sf0.001"
 _FLAGSHIP = "flagship_revenue_by_nation"
@@ -31,15 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator (SURVEY.md §2 + extensions).
-
-    Ordered so the driver's first-50 correctness window lands on queries
-    without a prior driver row (see catalog.ordered_registry).
-    """
-    return {name: spec.spark for name, spec in ordered_registry().items()}
+    """One entry per implemented operator (SURVEY.md §2 + extensions), in
+    registration order."""
+    return {name: spec.spark for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL for every SQL-expressible query; omitted keys
     get the driver's weaker rows-only check."""
-    return {name: spec.oracle for name, spec in ordered_registry().items() if spec.oracle}
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle}

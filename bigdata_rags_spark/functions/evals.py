@@ -356,7 +356,7 @@ def bradley_terry_ratings(
         # subtrees: measured r16, a 508-Exchange / 84-BNLJ plan whose
         # Catalyst planning dwarfed its |models|-row execution; plan
         # collapsed to 14 Exchanges).  |models| rows — the checkpoint is
-        # free (the CC loop-state rule from bench.py applied to MM).
+        # free (dedup/clusters.py's loop-state rule applied to MM).
         raw = raw.localCheckpoint()
         tot = raw.agg(F.sum("r").cast("bigint").alias("t"))
         r = raw.crossJoin(F.broadcast(tot)).crossJoin(n_models).select(

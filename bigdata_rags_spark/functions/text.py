@@ -63,10 +63,6 @@ def punct_count(text: Column) -> Column:
     return F.length(F.regexp_replace(text, "[A-Za-z0-9\\s]", ""))
 
 
-def digit_count(text: Column) -> Column:
-    return F.length(F.regexp_replace(text, "[^0-9]", ""))
-
-
 def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), F.lit(0)))
 

@@ -97,12 +97,6 @@ def derive_metrics(df: DataFrame, formulas: Mapping[str, str]) -> DataFrame:
     return df.select("*", *[F.expr(sql).alias(name) for name, sql in formulas.items()])
 
 
-def filter_where(df: DataFrame, predicate: str | Column) -> DataFrame:
-    """Extension (absent from the reference, SURVEY.md §2.4): declarative
-    filter — Catalyst pushes it into the scan when the source supports it."""
-    return df.filter(predicate)
-
-
 def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
     """Extension: deterministic top-k.  Spark plans orderBy+limit as
     TakeOrderedAndProject — each partition keeps k rows, the driver merges

@@ -259,402 +259,3 @@ from bigdata_rags_spark.queries import extensions as _extensions  # noqa: E402,F
 from bigdata_rags_spark.queries import llm_ops as _llm_ops  # noqa: E402,F401
 from bigdata_rags_spark.queries import streaming_batch as _streaming_batch  # noqa: E402,F401
 from bigdata_rags_spark.queries import retrieval_ops as _retrieval_ops  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering.
-#
-# The verify driver checks only the FIRST 50 entries of ``queries()``
-# iteration order (measured: CORRECTNESS_r02 keys == list(REGISTRY)[:50]).
-# With >50 registered queries, registration order silently decides which
-# operators ever get a driver CORRECTNESS row.  ``ordered_registry()`` makes
-# that choice explicit: queries without a driver row yet (plus any whose
-# semantics changed since their last row) come first, tier-prioritized
-# streaming -> llm -> extension (the tiers the r1/r2 windows never reached);
-# already-driver-verified queries fill the tail.  Rotate _DRIVER_CHECKED
-# forward each round by appending the new CORRECTNESS keys.
-# ---------------------------------------------------------------------------
-
-# Queries that can NEVER turn green: registered rows-only (no oracle SQL) by
-# design, so the driver records ``err: no_oracle`` forever.  Kept out of the
-# fresh front so they stop burning window slots every round (VERDICT r4 #2);
-# the staleness sort in ordered_registry() additionally pushes every
-# oracle-less query (checked or not) behind all re-greenable ones.
-_PERMANENT_NO_ORACLE: frozenset[str] = frozenset({
-    # (embedding_ivf_topk, rows-only since r4, was retired from the
-    # registry in r13 — superseded by embedding_ivf_probe_fixed)
-    "embedding_near_dup_pairs_mm",
-    "approx_percentile_prices",
-    "approx_count_distinct_orders",
-    # rows-only filesystem invariant by design (VERDICT r6 #5); its driver row
-    # (err: no_oracle) landed in CORRECTNESS_r07 — never re-greenable
-    "zone_compaction_invariant",
-    # rows-only by construction (float-drifty k-means training, VERDICT r7 #4 /
-    # r8 #1); its driver row (err: no_oracle) landed in CORRECTNESS_r08
-    "embedding_pq_trained_rerank",
-    # rows-only by the same rule: trained quantizers are float-drifty; the
-    # persisted-index serving path is hash-anchored by its fixed-literal
-    # siblings (embedding_ivfpq_index_serve / _append)
-    "embedding_ivfpq_trained_serve",
-    # rows-only by nature (zlib deflate is not SQL-expressible); its driver
-    # row (err: no_oracle, spark_rows=500) landed in CORRECTNESS_r12
-    "doc_compression_ratio",
-})
-
-# Every query's LAST driver CORRECTNESS row (name -> round), rebuilt each
-# round from CORRECTNESS_r{N}.json.  The tail of ordered_registry() sorts
-# ascending on this so the STALEST confirmations refresh first (VERDICT r5
-# #2): with all 125 queries checked at least once, the window now rotates
-# through vintages instead of re-confirming last round's greens.
-_DRIVER_CHECKED: dict[str, int] = {
-    # --- last driver row: round 1 ---
-    "embedding_near_dup_pairs_mm": 1,
-    # --- last driver row: round 2 ---
-    "approx_count_distinct_orders": 2,
-    "approx_percentile_prices": 2,
-    # --- last driver row: round 7 ---
-    "zone_compaction_invariant": 7,
-    # --- last driver row: round 8 ---
-    "embedding_pq_trained_rerank": 8,
-    # --- last driver row: round 9 ---
-    # --- last driver row: round 10 ---
-    "benchmark_decontamination": 10,
-    "bpe_merge_training": 10,
-    "bpe_subword_stats": 10,
-    "correlation_price_quantity": 10,
-    "dedup_surviving_docs": 10,
-    "dup_bigram_fraction_docs": 10,
-    "embedding_ivf_probe_fixed": 10,
-    "epoch_shuffle_assignment": 10,
-    "events_click_attribution": 10,
-    "events_cohort_retention": 10,
-    "events_conversion_funnel": 10,
-    "events_hourly_gapfill": 10,
-    "events_unattributed_clicks": 10,
-    "exact_dedup_docs": 10,
-    "multimodal_png_features": 10,
-    "ngram_jaccard_near_dups": 10,
-    "null_safe_join_semantics": 10,
-    "prefix_dup_docs": 10,
-    "retrieval_ranking_eval": 10,
-    "segment_dedup_docs": 10,
-    "simhash_fingerprints": 10,
-    # --- last driver row: round 11 ---
-    "balanced_corpus_quota": 11,
-    "bigram_lm_doc_scores": 11,
-    "collect_sorted_lists": 11,
-    "corpus_health_report": 11,
-    "corpus_training_selection": 11,
-    "correlated_scalar_above_avg": 11,
-    "date_arithmetic_orders": 11,
-    "domain_temperature_mixing": 11,
-    "dup_cluster_assignment": 11,
-    "dup_cluster_size_histogram": 11,
-    "edit_distance_near_dups": 11,
-    "embedding_fuzzy_dedup_vectors": 11,
-    "embedding_ivfpq_trained_serve": 11,
-    "events_attribution_first_vs_last": 11,
-    "events_debounce_dedup": 11,
-    "events_dedup_replayed": 11,
-    "events_hourly_anomaly": 11,
-    "events_hourly_unique_users_sketch": 11,
-    "events_time_weighted_value": 11,
-    "fuzzy_dedup_surviving_docs": 11,
-    "hash_functions_documents": 11,
-    "multimodal_png_resize_features": 11,
-    "near_dup_graph_clustering": 11,
-    "near_dup_pagerank": 11,
-    "pandas_udaf_geometric_mean": 11,
-    "pandas_udf_harmonic_price": 11,
-    "salted_join_revenue_by_priority": 11,
-    "scd2_point_in_time_lookup": 11,
-    "sequence_packing_plan": 11,
-    "simhash_idf_near_dup_pairs": 11,
-    "simhash_near_dup_pairs": 11,
-    "soft_dedup_sampling": 11,
-    "split_leakage_audit": 11,
-    "sql_grouping_sets": 11,
-    "string_functions_extended": 11,
-    "tpch_q13_customer_distribution": 11,
-    "tpch_q4_order_priority": 11,
-    "train_test_split_assignment": 11,
-    "unigram_piece_training": 11,
-    "window_ntile_lead_firstvalue": 11,
-    "winnowed_fingerprints": 11,
-    "winnowed_plagiarism_pairs": 11,
-    "wordpiece_merge_training": 11,
-    "zorder_file_skipping_stats": 11,
-    # --- last driver row: round 12 ---
-    "basket_affinity_lift": 12,
-    "bigram_collocation_lift": 12,
-    "bitext_margin_mining": 12,
-    "bloom_prefilter_incremental_dedup": 12,
-    "bpe_decode_roundtrip": 12,
-    "bpe_encode_docs": 12,
-    "bpe_sequence_packing": 12,
-    "cdc_apply_log_compaction": 12,
-    "cluster_topic_terms": 12,
-    "doc_boilerplate_ngram_coverage": 12,
-    "doc_compression_ratio": 12,
-    "doc_hashed_features": 12,
-    "embedding_diversity_fps": 12,
-    "eval_bootstrap_ci": 12,
-    "eval_self_consistency": 12,
-    "events_cep_view_purchase": 12,
-    "events_heavy_hitters_cms": 12,
-    "events_hourly_value_percentiles": 12,
-    "events_rollup_cascade": 12,
-    "events_run_length_islands": 12,
-    "events_running_user_totals": 12,
-    "events_transition_matrix": 12,
-    "gini_revenue_concentration": 12,
-    "html_text_extraction": 12,
-    "length_bucket_batching": 12,
-    "lsh_tuning_planner": 12,
-    "ngram_diversity_report": 12,
-    "pareto_abc_customers": 12,
-    "priority_sample_docs": 12,
-    "quality_classifier_scores": 12,
-    "quality_weighted_mixing": 12,
-    "retrieval_mmr_rerank": 12,
-    "rfm_customer_segmentation": 12,
-    "snapshot_drift_report": 12,
-    "source_pair_overlap_kmv": 12,
-    "text_hashed_idf_near_dups": 12,
-    "unigram_encode_docs": 12,
-    "url_canonical_dedup": 12,
-    "vocab_coverage_curve": 12,
-    "wordpiece_encode_docs": 12,
-    # --- last driver row: round 13 ---
-    "chunk_dedup_embedding_cache": 13,
-    "corpus_top_tokens": 13,
-    "embedding_binary_hamming_topk": 13,
-    "embedding_cosine_topk": 13,
-    "embedding_decontamination": 13,
-    "embedding_hard_negatives": 13,
-    "embedding_int8_quantization": 13,
-    "embedding_label_centroids": 13,
-    "embedding_lsh_topk": 13,
-    "embedding_matryoshka_recall": 13,
-    "embedding_near_dup_pairs_lsh": 13,
-    "embedding_norm_stats": 13,
-    "embedding_pq_adc_topk": 13,
-    "embedding_pq_rerank_topk": 13,
-    "embedding_random_projection": 13,
-    "eval_best_of_n": 13,
-    "eval_pass_at_k": 13,
-    "events_ab_experiment_lift": 13,
-    "events_dau_wau_stickiness": 13,
-    "events_new_vs_returning": 13,
-    "events_seasonal_baseline_error": 13,
-    "exact_dup_clusters": 13,
-    "langid_ngram_profiles": 13,
-    "langid_ngram_scores": 13,
-    "map_functions_status_scores": 13,
-    "preference_pair_mining": 13,
-    "quality_nb_fit": 13,
-    "quality_nb_scores": 13,
-    "rrf_fusion_search": 13,
-    "simhash64_fingerprints": 13,
-    "stratified_sample_docs": 13,
-    "tfidf_top_terms": 13,
-    "tpch_q10_returned_items": 13,
-    "tpch_q11_important_parts": 13,
-    "tpch_q14_promo_effect": 13,
-    "tpch_q16_supplier_part_counts": 13,
-    "tpch_q18_large_volume_customers": 13,
-    "tpch_q5_local_supplier_volume": 13,
-    "tpch_q6_forecast_revenue": 13,
-    "tpch_q7_volume_shipping": 13,
-    # --- last driver row: round 14 ---
-    "agg_suite_by_segment": 14,
-    "anti_join_customers_no_orders": 14,
-    "attack_shape_metrics": 14,
-    "contrastive_negatives_sample": 14,
-    "corpus_health_by_lang": 14,
-    "defense_shape_metrics": 14,
-    "discipline_shape_metrics": 14,
-    "distinct_nation_segments": 14,
-    "doc_fingerprint_minshingle": 14,
-    "doc_pii_scan": 14,
-    "domain_blocklist_filter": 14,
-    "domain_corpus_stats": 14,
-    "domain_psl_extraction": 14,
-    "domain_quota_selection": 14,
-    "embedding_matryoshka_funnel_topk": 14,
-    "events_sliding_topk_types": 14,
-    "filter_pushdown_highvalue": 14,
-    "flagship_revenue_by_nation": 14,
-    "full_outer_join_supplier_customer_nations": 14,
-    "intra_doc_repeated_spans": 14,
-    "jaccard_prefix_filter_pairs": 14,
-    "langid_stopword_heuristic": 14,
-    "left_join_customer_orders": 14,
-    "length_weighted_sample_docs": 14,
-    "multimodal_video_framesample": 14,
-    "projection_rename_quoted": 14,
-    "quality_aware_dedup_keepers": 14,
-    "quality_nb_calibration": 14,
-    "query_likelihood_search": 14,
-    "rm3_expansion_search": 14,
-    "rollup_sum_by_supplier": 14,
-    "semi_join_customers_with_urgent": 14,
-    "sequence_packing_bins": 14,
-    "source_token_drift": 14,
-    "substring_dedup_docs": 14,
-    "text_quality_scores": 14,
-    "token_count_stats": 14,
-    "tokenizer_fertility_report": 14,
-    "topk_orders_by_price": 14,
-    "training_mixture_plan": 14,
-    "unigram_lm_doc_scores": 14,
-    "zone_time_travel_read": 14,
-    # --- last driver row: round 15 ---
-    "asof_join_events_orders": 15,
-    "audio_capstone_retrieval": 15,
-    "audio_fingerprint_near_dups": 15,
-    "bpe_byte_encode_docs": 15,
-    "bpe_byte_roundtrip": 15,
-    "cross_modal_dedup_gate": 15,
-    "cross_modal_training_selection": 15,
-    "cube_returnflag_linestatus": 15,
-    "curation_funnel_capstone": 15,
-    "curriculum_anneal_plan": 15,
-    "date_functions_orders": 15,
-    "embedding_rocchio_confusion": 15,
-    "eval_paired_bootstrap_delta": 15,
-    "events_decayed_trending": 15,
-    "events_sliding_halfhour": 15,
-    "events_tumbling_hourly": 15,
-    "events_user_sessions": 15,
-    "gopher_quality_filters": 15,
-    "image_phash_near_dups": 15,
-    "incremental_curation_funnel": 15,
-    "incremental_dedup_new_docs": 15,
-    "minhash_jaccard_estimates": 15,
-    "minhash_lsh_candidates": 15,
-    "multimodal_capstone_retrieval": 15,
-    "multimodal_wav_features": 15,
-    "near_dup_candidate_eval": 15,
-    "ngram_containment_pairs": 15,
-    "proximity_boosted_search": 15,
-    "rollup_status_priority": 15,
-    "set_ops_nation_membership": 15,
-    "string_functions_parts": 15,
-    "stupid_backoff_doc_scores": 15,
-    "tpch_q12_priority_by_returnflag": 15,
-    "tpch_q15_top_supplier": 15,
-    "tpch_q17_small_quantity_revenue": 15,
-    "tpch_q19_disjunctive_predicates": 15,
-    "tpch_q1_pricing_summary": 15,
-    "tpch_q20_concentrated_suppliers": 15,
-    "tpch_q21_sole_blamed_supplier": 15,
-    "tpch_q22_dormant_rich_customers": 15,
-    "tpch_q8_market_share": 15,
-    "video_temporal_near_dups": 15,
-    "window_lag_running_sum": 15,
-    "window_rank_orders_in_segment": 15,
-    "winsorized_price_stats": 15,
-    # --- last driver row: round 16 ---
-    "ann_filtered_serving_report": 16,
-    "ann_predicate_serving": 16,
-    "bm25_keyword_search": 16,
-    "conditional_agg_priority_matrix": 16,
-    "data_quality_report": 16,
-    "decimal_exact_revenue": 16,
-    "document_chunking": 16,
-    "dsir_importance_resampling": 16,
-    "embedding_ivfpq_index_append": 16,
-    "embedding_ivfpq_index_delete": 16,
-    "embedding_ivfpq_index_merge": 16,
-    "embedding_ivfpq_index_serve": 16,
-    "embedding_ivfpq_index_stats": 16,
-    "embedding_ivfpq_rerank_topk": 16,
-    "embedding_ivfpq_tuning_planner": 16,
-    "eval_bradley_terry": 16,
-    "events_json_extraction": 16,
-    "events_pii_redaction": 16,
-    "events_segment_enrichment": 16,
-    "explode_embedding_dim_stats": 16,
-    "gate_agreement_kappa": 16,
-    "histogram_order_prices": 16,
-    "histogram_quantile_prices": 16,
-    "hybrid_rag_search": 16,
-    "incremental_minhash_dedup": 16,
-    "incremental_ppjoin_dedup": 16,
-    "incremental_semantic_dedup": 16,
-    "incremental_winnow_dedup": 16,
-    "ivfpq_recall_report": 16,
-    "join_key_skew_report": 16,
-    "loglog_distinct_customers": 16,
-    "lsh_bucket_skew_preflight": 16,
-    "mad_outlier_orders": 16,
-    "math_functions_lineitem": 16,
-    "percentiles_by_priority": 16,
-    "pivot_returnflag_by_status": 16,
-    "quality_threshold_ablation": 16,
-    "rag_capstone_retrieval": 16,
-    "range_join_shipments_in_window": 16,
-    "scd2_current_rows": 16,
-    "semantic_dedup_cells": 16,
-    "text_hashed_ann_topk": 16,
-    "tpch_q2_cheapest_supplier": 16,
-    "tpch_q3_shipping_priority": 16,
-    "tpch_q9_profit_by_nation_year": 16,
-    "unpivot_lineitem_measures": 16,
-    "upsert_current_rows": 16,
-    "video_capstone_retrieval": 16,
-    "window_trailing_7d_range_frame": 16,
-    "zone_snapshot_diff": 16,
-}
-
-# Checked queries whose semantics/plan changed this round -> re-check first.
-# (All r16 entries were confirmed green by the r16 driver window and are
-# folded into _DRIVER_CHECKED above; this tuple holds the r17 changes.)
-_RECHECK: tuple[str, ...] = (
-    # r17 optimization: the incremental text-dedup family ingests against
-    # PERSISTED store tables (build_*_store + frozen meta) instead of
-    # re-deriving the store's fingerprints/signatures/prefix order from the
-    # raw documents per call (VERDICT r16 #5) — results identical (pinned by
-    # tests/test_llm_ops.py::test_text_dedup_store_paths_match_inline),
-    # plans now scan the store tables.
-    "incremental_winnow_dedup",
-    "incremental_minhash_dedup",
-    "incremental_ppjoin_dedup",
-    # r17 optimization: both quantizer-sizing counts collapsed into ONE
-    # aggregate action (VERDICT r16 #4) and the batch-side attach_cells
-    # frames materialized (ADVICE r16) — widths and results unchanged.
-    "incremental_semantic_dedup",
-    # r17 optimization: the two shard builds + the merge's four dst writes
-    # and its disjointness aggregate now overlap on driver threads (guide
-    # §2.6, VERDICT r16 #3) — same tables, same serve plan, same rows.
-    "embedding_ivfpq_index_merge",
-)
-
-_TIER_PRIORITY = {TIER_STREAMING: 0, TIER_LLM: 1, TIER_EXTENSION: 2, TIER_REFERENCE: 3}
-
-
-def ordered_registry() -> dict[str, QuerySpec]:
-    """REGISTRY reordered so the driver's first-50 window hits unverified work.
-
-    Front: _RECHECK (changed since last driver row), then never-driver-checked
-    queries tier-ordered streaming -> llm -> extension (registration order
-    within a tier).  Tail: already-checked queries, STALEST first (ascending
-    last-checked round, registration order as tiebreak) so old confirmations
-    refresh as the window rotates; oracle-less queries sort behind everything
-    re-greenable because their driver row can never improve.
-    """
-    names = list(REGISTRY)
-    reg_idx = {n: i for i, n in enumerate(names)}
-    front = [n for n in _RECHECK if n in REGISTRY]
-    skip_fresh = set(_DRIVER_CHECKED) | _PERMANENT_NO_ORACLE | set(front)
-    fresh = [n for n in names if n not in skip_fresh]
-    fresh.sort(key=lambda n: _TIER_PRIORITY[REGISTRY[n].tier])  # stable within tier
-    tail = [n for n in names if n in skip_fresh and n not in front]
-    tail.sort(
-        key=lambda n: (
-            REGISTRY[n].oracle is None,
-            _DRIVER_CHECKED.get(n, 0),
-            reg_idx[n],
-        )
-    )
-    return {n: REGISTRY[n] for n in (*front, *fresh, *tail)}

@@ -4779,7 +4779,8 @@ def embedding_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_llm("embedding_pq_rerank_topk", _pq_adc_oracle(rerank_shortlist=100))
 def embedding_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production PQ serving path (`similarity/pq.py:pq_search_rerank`):
+    """PQ serving (`similarity/pq.py:pq_search_rerank` — the production
+    ``_serve`` plan over a single coarse cell):
     ADC shortlists 100 candidates per query in code space (bytes, not
     vectors), then an EXACT cosine rerank of the shortlist alone picks the
     top-5 — FAISS's IVFPQ+refine shape.  Recall is bounded by shortlist

@@ -11,9 +11,18 @@ per vector (here 16 codes in [0,16) — a nibble each at scale, 8 bytes vs
 table lookups instead of a d-dim dot product — the asymmetric distance
 computation (ADC).  Raw ADC ranking is lossy (the codebooks here are
 untrained md5 literals and the fixture embeddings are near-random — the
-ANN adversarial case, same note as the LSH recall test), so the production
-serving path is `pq_search_rerank`: ADC shortlist, then EXACT cosine
-rerank of the shortlist only — FAISS's IVFPQ+refine shape.
+ANN adversarial case, same note as the LSH recall test), so every serve is
+ADC shortlist, then EXACT cosine rerank of the shortlist only — FAISS's
+IVFPQ+refine shape.
+
+One scoring plan serves all four entry points: ``_query_side`` (the
+request's queries read to the driver once; probes, probed-cell literal and
+LUT built there), ``_adc_topk`` (the ADC shortlist) and ``_serve`` (the
+exact rerank).  The production path is ``ivfpq_index_serve`` over the
+persisted index; ``ivfpq_search_rerank`` runs the same plan over a corpus
+frame it encodes per call; ``pq_adc_topk``/``pq_search_rerank`` are IVFPQ
+with a single coarse list (Jégou et al. §V), one all-zero centroid
+(``_ONE_CELL``) holding every vector.
 
 Spark-first, fully oracle-checkable (the whole reason this exists next to
 `embedding_ivf_probe_fixed`):
@@ -31,13 +40,16 @@ Spark-first, fully oracle-checkable (the whole reason this exists next to
   bit-stable under any partitioning/engine (a float sum would not be).
 
 100 TB shape: corpus vectors are read ONCE to encode; after that only
-(id, m, code) rows — a few bytes — cross any exchange.  The query-side
-lookup table is |Q| x M x K rows (tiny, broadcast); the ADC join is an
-equi-join on (m, code) followed by a partial+final SUM and a per-query
-window top-k.  No full-dim vector ever moves after encoding.
+(id, m, code, cell) rows — a few bytes — cross any exchange.  The
+query-side lookup table is |Q| x M x K rows (tiny, broadcast); the ADC
+join is an equi-join on (query_id, m, code) followed by a partial+final
+SUM and a per-query window top-k.  Full vectors move only for the
+|Q| x shortlist rerank fetch.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -114,22 +126,6 @@ def _lut_micro(vecs, codebooks: list[list[list[float]]]):
     return np.where(
         scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
     ).astype(np.int64)
-
-
-def _lut_frame(query_ids, micro, m: int, k: int):
-    """(query_id, m, code, dot_micro) pandas rows of a ``_lut_micro`` table."""
-    import numpy as np
-    import pandas as pd
-
-    n = len(query_ids)
-    return pd.DataFrame(
-        {
-            "query_id": np.repeat(query_ids, m * k),
-            "m": np.tile(np.repeat(np.arange(m, dtype=np.int32), k), n),
-            "code": np.tile(np.tile(np.arange(k, dtype=np.int32), m), n),
-            "dot_micro": micro.reshape(-1),
-        }
-    )
 
 
 def pq_encode(
@@ -242,34 +238,134 @@ def _encode_with_cells(
     )
 
 
-def pq_lut(
+# PQ alone is IVFPQ with a single coarse list (Jégou et al. 2011 §V): one
+# all-zero centroid puts every vector in cell 0, so the PQ-only serves run
+# the IVFPQ plan unchanged
+_ONE_CELL = [[0.0]]
+
+
+class _QuerySide(NamedTuple):
+    """A request's query side, built on the driver by ``_query_side``."""
+
+    cells: list[int]  # distinct probed cells: the codes-scan literal
+    probes: DataFrame  # (query_id, cell)
+    lut: DataFrame  # (query_id, m, code, dot_micro)
+    qvec: DataFrame  # (query_id, qv)
+
+
+def _query_side(
     queries: DataFrame,
+    centroids: list[list[float]],
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, m, code, dot_micro): per-query lookup table of subspace
-    dots against every centroid, rounded to integer micro-units so the
-    downstream M-way sum is exact (``_lut_micro``)."""
-    # Same Arrow-vectorized left-fold as pq_encode (one 256-expression
-    # Catalyst projection here OOM'd codegen on the default driver heap).
-    from bigdata_rags_spark.similarity.ivf import _vector_matrix
+    n_probe: int,
+) -> _QuerySide:
+    """Read the request's queries to the driver ONCE, as one Arrow batch
+    (queries are the small side by contract — every frame derived from them
+    is broadcast), and derive each query's ``n_probe`` cells, the distinct
+    probed-cell literal and the per-query LUT there with the same left-fold
+    numpy kernels the Arrow passes use (``_cell_sims``/``_best_cells``,
+    ``_lut_micro``).  The plan never re-runs the caller's frame and holds no
+    query-side Python stage.  A request with no queries yields empty frames
+    (every kernel accepts a (0, dim) matrix), so its serve returns no rows."""
+    import numpy as np
+    import pandas as pd
 
+    from bigdata_rags_spark.similarity.ivf import (
+        _best_cells,
+        _cell_sims,
+        _vector_matrix,
+    )
+
+    spark = queries.sparkSession
+    qtype = queries.schema["vec_id"].dataType.simpleString()
+    qpdf = queries.select(
+        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
+    ).toPandas()
+    qids = qpdf["query_id"].to_numpy()
+    dim = sum(len(book[0]) for book in codebooks)
+    qmat = _vector_matrix(qpdf["qv"]).reshape(len(qpdf), dim)
+    cells = _best_cells(_cell_sims(qmat, centroids), n_probe)
+    probes = pd.DataFrame(
+        {"query_id": np.repeat(qids, cells.shape[1]), "cell": cells.reshape(-1)}
+    )
     m, k = len(codebooks), len(codebooks[0])
-
-    def lut(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            micro = _lut_micro(_vector_matrix(pdf["v"]), codebooks)
-            yield _lut_frame(pdf["id"].to_numpy(), micro, m, k)
-
-    prepped = queries.select(
-        F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("v")
+    lut = pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, m * k),
+            "m": np.tile(np.repeat(np.arange(m, dtype=np.int32), k), len(qids)),
+            "code": np.tile(np.arange(k, dtype=np.int32), m * len(qids)),
+            "dot_micro": _lut_micro(qmat, codebooks).reshape(-1),
+        }
     )
-    return prepped.mapInPandas(
-        lut, schema="query_id long, m int, code int, dot_micro long"
+    return _QuerySide(
+        # the literal probed-cell set is what lets a bucketed scan prune —
+        # a join alone cannot skip file reads
+        sorted(set(cells.reshape(-1).tolist())),
+        spark.createDataFrame(probes, f"query_id {qtype}, cell int"),
+        spark.createDataFrame(lut, f"query_id {qtype}, m int, code int, dot_micro long"),
+        spark.createDataFrame(qpdf, f"query_id {qtype}, qv array<double>"),
     )
+
+
+def _top(scored: DataFrame, score: str, n: int) -> DataFrame:
+    """The per-query top ``n`` rows of ``scored`` by ``score`` (ties to the
+    lower neighbor id), numbered by an int ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= n)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _adc_topk(side: _QuerySide, codes: DataFrame, n: int) -> DataFrame:
+    """(query_id, neighbor_id, approx_sim_micro, rank): each query's top
+    ``n`` corpus ids by asymmetric distance.  ``codes`` rows (id, m, code,
+    cell) meet the broadcast probes on ``cell`` — only probed cells are
+    scored — and the broadcast LUT on (query_id, m, code); the M
+    integer-micro dots then sum exactly in a partial+final aggregate."""
+    scored = (
+        codes.join(F.broadcast(side.probes), "cell")
+        .join(F.broadcast(side.lut), ["query_id", "m", "code"])
+        .filter(F.col("id") != F.col("query_id"))
+        .groupBy("query_id", F.col("id").alias("neighbor_id"))
+        .agg(F.sum("dot_micro").cast("bigint").alias("approx_sim_micro"))
+    )
+    # partition-local pre-top-k (VERDICT r12 #2 family-wide): the agg's
+    # exchange is unavoidable (it IS the ADC sum), but the per-query
+    # window would re-shuffle all |Q| x candidates rows into one task per
+    # query — prune each partition to its own per-query best n first
+    # (hash-identical superset; similarity/topk.py)
+    scored = local_topk_prefilter(
+        scored, ["query_id"], [("approx_sim_micro", False), ("neighbor_id", True)], n
+    )
+    return _top(scored, "approx_sim_micro", n)
+
+
+def _serve(
+    side: _QuerySide, codes: DataFrame, vectors: DataFrame, k: int, shortlist: int
+) -> DataFrame:
+    """(query_id, neighbor_id, similarity, rank): the ADC shortlist of
+    ``shortlist`` ids per query, reranked by EXACT cosine against
+    ``vectors`` (vec_id, embedding).  Full vectors are fetched for
+    |Q| x shortlist ids only; the query side is broadcast."""
+    from bigdata_rags_spark.functions.vectors import cosine
+
+    short = _adc_topk(side, codes, shortlist).select("query_id", "neighbor_id")
+    cvec = vectors.select(
+        F.col("vec_id").alias("neighbor_id"),
+        as_double_array(F.col("embedding")).alias("cv"),
+    )
+    scored = (
+        short.join(F.broadcast(side.qvec), "query_id")
+        .join(cvec, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("similarity"),
+        )
+    )
+    return _top(scored, "similarity", k)
 
 
 def pq_adc_topk(
@@ -279,33 +375,12 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Approximate top-k neighbors per query via PQ asymmetric distance:
-    encode corpus once, broadcast the query LUT, equi-join on (m, code),
-    SUM the M integer-micro dots, window top-k per query."""
+    the IVFPQ ADC stage over a single coarse list — encode the corpus once,
+    broadcast the query LUT, equi-join on (query_id, m, code), SUM the M
+    integer-micro dots, window top-k per query."""
     books = codebooks if codebooks is not None else pq_codebooks()
-    codes = pq_encode(corpus, books)
-    lut = pq_lut(queries, books)
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dot_micro").cast("bigint").alias("approx_sim_micro"))
-    )
-    # partition-local pre-top-k (VERDICT r12 #2 family-wide): the agg's
-    # exchange is unavoidable (it IS the ADC sum), but the per-query
-    # window would re-shuffle all |Q| x candidates rows into one task per
-    # query — prune each partition to its own per-query best k first
-    # (hash-identical superset; similarity/topk.py)
-    scored = local_topk_prefilter(
-        scored, ["query_id"], [("approx_sim_micro", False), ("neighbor_id", True)], k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_sim_micro", "rank")
-    )
+    side = _query_side(queries, _ONE_CELL, books, 1)
+    return _adc_topk(side, _encode_with_cells(corpus, books, _ONE_CELL), k)
 
 
 def pq_search_rerank(
@@ -315,36 +390,14 @@ def pq_search_rerank(
     shortlist: int = 100,
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
-    """Production PQ serving: ADC shortlist (cheap, code-space) -> exact
-    cosine rerank of the shortlist only -> top-k.  Full vectors are touched
-    for |Q| x shortlist rows, never the whole corpus; the rerank join is
-    id-keyed with the query side broadcast."""
-    from bigdata_rags_spark.functions.vectors import cosine
-
-    short = pq_adc_topk(queries, corpus, k=shortlist, codebooks=codebooks)
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
-    )
-    cv = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double_array(F.col("embedding")).alias("cv"),
-    )
-    scored = (
-        short.select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("similarity"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
-    )
+    """PQ serving over a corpus frame: ADC shortlist (cheap, code-space) ->
+    exact cosine rerank of the shortlist only -> top-k — ``_serve`` over a
+    single coarse list.  Full vectors are touched for |Q| x shortlist rows,
+    never the whole corpus; the rerank join is id-keyed with the query side
+    broadcast."""
+    books = codebooks if codebooks is not None else pq_codebooks()
+    side = _query_side(queries, _ONE_CELL, books, 1)
+    return _serve(side, _encode_with_cells(corpus, books, _ONE_CELL), corpus, k, shortlist)
 
 
 def train_pq_codebooks(
@@ -457,101 +510,29 @@ def ivfpq_search_rerank(
     shortlist: int = 50,
     centroids: list[list[float]] | None = None,
     codebooks: list[list[list[float]]] | None = None,
-    encoded: DataFrame | None = None,
-    assignments: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF+PQ combined serving — FAISS's production IVFPQ shape (Jégou et
-    al. 2011 §V): the coarse quantizer prunes WHICH corpus vectors are
-    scored (only codes whose cell is among the query's ``n_probe`` probed
-    cells), PQ ADC prices HOW each surviving candidate is scored (M table
-    lookups on bytes), and the exact-cosine rerank of the shortlist
-    restores ranking fidelity.  Composes the two already-oracle-checked
-    parts (``similarity/ivf.py`` cell assignment, ``pq_adc_topk``
-    scoring), so the full pipeline stays value-hash exact with fixed
-    codebooks.
+    """IVF+PQ combined serving over a corpus frame — FAISS's production
+    IVFPQ shape (Jégou et al. 2011 §V): the coarse quantizer prunes WHICH
+    corpus vectors are scored (only codes whose cell is among the query's
+    ``n_probe`` probed cells), PQ ADC prices HOW each surviving candidate
+    is scored (M table lookups on bytes), and the exact-cosine rerank of
+    the shortlist restores ranking fidelity.  With fixed quantizers the
+    full pipeline stays value-hash exact.
 
-    ``encoded`` / ``assignments`` optionally supply a precomputed
-    ``pq_encode(corpus, books)`` frame (id, m, code) and cell-assignment
-    frame (cid, cell) so multi-pass callers (the filtered-serving report
-    runs 2-3 serves over subsets of one corpus) encode the corpus ONCE —
-    when None the plan is unchanged.
-
-    100 TB shape: corpus is read once to (cell, m, code) rows — the index
-    build; serving shuffles NOTHING corpus-sized (probes and the LUT
-    broadcast; candidate volume is |Q| * n_probe/n_cells * N * M code
-    rows before the partial+final sum); full vectors are fetched only for
-    the |Q| x shortlist rerank join.
+    This is ``ivfpq_index_serve``'s plan (``_serve``) over codes encoded
+    and cell-assigned in one pass per call (``_encode_with_cells``) — the
+    index build's work, which the persisted index pays once.  Serving
+    shuffles nothing corpus-sized beyond that encode: probes and the LUT
+    are broadcast, candidate volume is |Q| * n_probe/n_cells * N * M code
+    rows before the partial+final sum, and full vectors are fetched only
+    for the |Q| x shortlist rerank join.
     """
-    from bigdata_rags_spark.functions.vectors import cosine
-    from bigdata_rags_spark.similarity.ivf import _nearest_cells, fixed_centroids
+    from bigdata_rags_spark.similarity.ivf import fixed_centroids
 
     cents = centroids if centroids is not None else fixed_centroids(64, n_cells)
     books = codebooks if codebooks is not None else pq_codebooks()
-
-    cvec = corpus.select(
-        F.col("vec_id").alias("cid"), as_double_array(F.col("embedding")).alias("cv")
-    )
-    qvec = queries.select(
-        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
-    )
-    probes = qvec.select(
-        "query_id",
-        F.explode(_nearest_cells(F.col("qv"), cents, n_probe)).alias("cell"),
-    )
-
-    if encoded is None and assignments is None:
-        # one-pass encode+assign (r16): same-scan frames need no join
-        codes = _encode_with_cells(corpus, books, cents)
-    else:
-        asg = (
-            assignments
-            if assignments is not None
-            else cvec.select(
-                "cid", _nearest_cells(F.col("cv"), cents, 1)[0].alias("cell")
-            )
-        )
-        codes = (encoded if encoded is not None else pq_encode(corpus, books)).join(
-            asg.select(F.col("cid").alias("id"), "cell"), "id"
-        )
-    lut = pq_lut(queries, books)
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dot_micro").cast("bigint").alias("approx_sim_micro"))
-    )
-    # per-partition pre-top-k ahead of the shortlist window (VERDICT r12
-    # #2 family-wide; hash-identical superset — similarity/topk.py)
-    scored = local_topk_prefilter(
-        scored,
-        ["query_id"],
-        [("approx_sim_micro", False), ("neighbor_id", True)],
-        shortlist,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim_micro"), F.asc("neighbor_id")
-    )
-    short = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    rr = (
-        short.join(F.broadcast(qvec), "query_id")
-        .join(cvec.withColumnRenamed("cid", "neighbor_id"), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("similarity"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return (
-        rr.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
-    )
+    side = _query_side(queries, cents, books, n_probe)
+    return _serve(side, _encode_with_cells(corpus, books, cents), corpus, k, shortlist)
 
 
 def _write_index_meta(
@@ -845,15 +826,16 @@ def ivfpq_index_serve(
     table_prefix: str = "ivfpq_idx",
     n_probe: int = 4,
     shortlist: int = 50,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
     eligible_ids: DataFrame | None = None,
     predicate: str | Column | None = None,
 ) -> DataFrame:
     """Serve ANN top-k from a PERSISTED IVFPQ index (``build_ivfpq_index``)
-    — no corpus encode in the plan, value-hash identical to the on-the-fly
-    ``ivfpq_search_rerank`` (asserted by the ``embedding_ivfpq_index_serve``
-    oracle, which is the same SQL as the on-the-fly sibling's).
+    — the production ANN path: no corpus encode in the plan, value-hash
+    identical to the on-the-fly ``ivfpq_search_rerank`` (asserted by the
+    ``embedding_ivfpq_index_serve`` oracle, which is the same SQL as the
+    on-the-fly sibling's).  It takes no quantizer arguments: the centroids
+    and codebooks are always the ones the build froze in ``{prefix}_meta``
+    — any others would score the stored codes as garbage.
 
     ``eligible_ids`` (optional 1-column id frame) serves the FILTERED
     form "top-k WHERE <metadata predicate>" by PRE-FILTERING: the
@@ -875,77 +857,25 @@ def ivfpq_index_serve(
     both compose when given together.
 
     Serving shape, in scan order:
-    1. the request's queries reach the driver ONCE, as one Arrow batch
-       (queries are the small side by contract — the three frames derived
-       from them were broadcast anyway).  The driver derives each query's
-       probe cells, the distinct probed-cell literal and the per-query LUT
-       with the same left-fold numpy kernels the Arrow passes use
-       (``_cell_sims``/``_best_cells``, ``_lut_micro``), so the plan never
-       re-runs the caller's frame and holds no query-side Python stage;
+    1. the request's queries reach the driver ONCE (``_query_side``),
+       which builds the probes, the probed-cell literal and the LUT;
     2. the probed cells filter the codes scan as a literal ``cell IN
        (...)`` — BUCKET PRUNING: unprobed buckets of the codes table are
        never read (SelectedBucketsCount < total, plan-pinned);
-    3. ADC-score the surviving live codes: broadcast the LUT, equi-join on
-       (query_id, m, code), integer-micro partial+final SUM, window
-       shortlist — identical math to ``pq_adc_topk``;
-    4. exact-cosine rerank fetches full live vectors for |Q| x shortlist
-       ids from the vec_id-bucketed vectors table (point-lookup join; the
-       big side is pre-bucketed so only the tiny shortlist side moves).
+    3. ``_serve`` ADC-scores the surviving live codes into a shortlist,
+       then the exact-cosine rerank fetches full live vectors for
+       |Q| x shortlist ids from the vec_id-bucketed vectors table
+       (point-lookup join; the big side is pre-bucketed so only the tiny
+       shortlist side moves).
 
     Both index reads apply the live-row rule (``_live_rows``): a deleted
     id is never scored or reranked, and an upserted id is scored and
     reranked from its newest rows only.
     """
-    import numpy as np
-    import pandas as pd
-
-    from bigdata_rags_spark.functions.vectors import cosine
-    from bigdata_rags_spark.similarity.ivf import (
-        _best_cells,
-        _cell_sims,
-        _vector_matrix,
-    )
-
     spark = queries.sparkSession
-    if centroids is None or codebooks is None:
-        # the quantizers travel WITH the index ({prefix}_meta): serving a
-        # trained index with the default literals would score garbage codes
-        meta_cents, meta_books, _ = _read_index_meta(spark, f"{table_prefix}_meta")
-        cents = centroids if centroids is not None else meta_cents
-        books = codebooks if codebooks is not None else meta_books
-    else:
-        cents, books = centroids, codebooks
-
-    qtype = queries.schema["vec_id"].dataType.simpleString()
-    qpdf = queries.select(
-        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
-    ).toPandas()
-    if qpdf.empty:
-        return spark.createDataFrame(
-            [],
-            f"query_id {qtype}, neighbor_id long, similarity double, rank int",
-        )
-    qids = qpdf["query_id"].to_numpy()
-    qmat = _vector_matrix(qpdf["qv"])
-    cells = _best_cells(_cell_sims(qmat, cents), n_probe)
-    # the literal probed-cell set is what lets the bucketed scan prune — a
-    # join alone cannot skip file reads
-    probe_cells = sorted(set(cells.reshape(-1).tolist()))
-    probes = spark.createDataFrame(
-        pd.DataFrame(
-            {"query_id": np.repeat(qids, cells.shape[1]), "cell": cells.reshape(-1)}
-        ),
-        f"query_id {qtype}, cell int",
-    )
-    lut = spark.createDataFrame(
-        _lut_frame(qids, _lut_micro(qmat, books), len(books), len(books[0])),
-        f"query_id {qtype}, m int, code int, dot_micro long",
-    )
-    qvec = spark.createDataFrame(qpdf, f"query_id {qtype}, qv array<double>")
-
-    codes = spark.table(f"{table_prefix}_codes").filter(
-        F.col("cell").isin(probe_cells)
-    )
+    cents, books, _ = _read_index_meta(spark, f"{table_prefix}_meta")
+    side = _query_side(queries, cents, books, n_probe)
+    codes = spark.table(f"{table_prefix}_codes").filter(F.col("cell").isin(side.cells))
     if predicate is not None:
         # predicate serving: a scan filter on the stored predicate columns
         # — pushed into the parquet read alongside the cell pruning, no
@@ -963,50 +893,13 @@ def ivfpq_index_serve(
             "id",
             "left_semi",
         )
-    codes = _live_rows(spark, table_prefix, codes, "id")
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dot_micro").cast("bigint").alias("approx_sim_micro"))
-    )
-    # per-partition pre-top-k ahead of the shortlist window (VERDICT r12
-    # #2 family-wide; hash-identical superset — similarity/topk.py)
-    scored = local_topk_prefilter(
-        scored,
-        ["query_id"],
-        [("approx_sim_micro", False), ("neighbor_id", True)],
+    vectors = spark.table(f"{table_prefix}_vectors")
+    return _serve(
+        side,
+        _live_rows(spark, table_prefix, codes, "id"),
+        _live_rows(spark, table_prefix, vectors, "vec_id"),
+        k,
         shortlist,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim_micro"), F.asc("neighbor_id")
-    )
-    short = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    cvec = _live_rows(
-        spark, table_prefix, spark.table(f"{table_prefix}_vectors"), "vec_id"
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double_array(F.col("embedding")).alias("cv"),
-    )
-    rr = (
-        short.join(F.broadcast(qvec), "query_id")
-        .join(cvec, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("similarity"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return (
-        rr.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
     )
 
 
@@ -1438,8 +1331,9 @@ def ivfpq_filtered_serving_report(
     weighs, and report the recall/cost tradeoff per query.
 
     ``eligible_ids`` may be a dict {label: id-frame}: all predicates then
-    share ONE corpus encode, ONE cell assignment, and ONE unfiltered
-    serve, and the output gains a leading ``pred`` label column.
+    share ONE corpus encode+assign, ONE query read (``_query_side``) and
+    ONE unfiltered serve, and the output gains a leading ``pred`` label
+    column; each predicate's prefilter serve is one ``_serve`` call.
     ``unfiltered_topk`` optionally supplies a precomputed unfiltered serve
     (query_id, neighbor_id, similarity, rank) — it is predicate-
     independent.
@@ -1472,7 +1366,7 @@ def ivfpq_filtered_serving_report(
     columns in the index (pre-filtering), and scanned_rows prices the
     difference.
     """
-    from bigdata_rags_spark.similarity.ivf import _nearest_cells, fixed_centroids
+    from bigdata_rags_spark.similarity.ivf import fixed_centroids
     from bigdata_rags_spark.similarity.knn import brute_force_topk
 
     cents = centroids if centroids is not None else fixed_centroids(64, n_cells)
@@ -1483,41 +1377,27 @@ def ivfpq_filtered_serving_report(
         else {None: eligible_ids}
     )
 
-    # encode + cell-assign the corpus ONCE (the 256-dot-product encode is
-    # the expensive stage; every predicate's serve modes and cost counts
-    # read from these two frames — multi-branch rule: materialize)
-    enc = pq_encode(corpus, books).localCheckpoint()
-    asg = corpus.select(
-        F.col("vec_id").alias("cid"),
-        _nearest_cells(as_double_array(F.col("embedding")), cents, 1)[0].alias("cell"),
-    ).localCheckpoint()
+    # encode + cell-assign the corpus and read the queries ONCE: every
+    # predicate's serves and cost counts read these codes and this query
+    # side (multi-branch rule: materialize the codes)
+    codes = _encode_with_cells(corpus, books, cents).localCheckpoint()
+    side = _query_side(queries, cents, books, n_probe)
     if unfiltered_topk is None:
-        unfiltered_topk = ivfpq_search_rerank(
-            queries, corpus, k=k, n_cells=n_cells, n_probe=n_probe,
-            shortlist=shortlist, centroids=cents, codebooks=books,
-            encoded=enc, assignments=asg,
-        )
+        unfiltered_topk = _serve(side, codes, corpus, k, shortlist)
 
-    # scanned-candidate cost: corpus rows whose cell lands in the query's
-    # probed cells (excluding self) — what ADC actually prices per mode
-    qvec = queries.select(
-        F.col("vec_id").alias("query_id"),
-        as_double_array(F.col("embedding")).alias("qv"),
-    )
-    probes = qvec.select(
-        "query_id", F.explode(_nearest_cells(F.col("qv"), cents, n_probe)).alias("cell")
-    )
-
-    def scanned(a: DataFrame) -> DataFrame:
+    def scanned(c: DataFrame) -> DataFrame:
+        # scanned-candidate cost: corpus vectors (m = 0 is one code row per
+        # vector) whose cell lands in the query's probed cells, excluding
+        # self — what ADC actually prices per mode
         return (
-            a.select(F.col("cid").alias("neighbor_id"), "cell")
-            .join(F.broadcast(probes), "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
+            c.filter(F.col("m") == 0)
+            .join(F.broadcast(side.probes), "cell")
+            .filter(F.col("id") != F.col("query_id"))
             .groupBy("query_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("scanned_rows"))
         )
 
-    qids = queries.select(F.col("vec_id").alias("query_id"))
+    qids = side.qvec.select("query_id")
 
     def mode_report(res, cost, exact, mode: str) -> DataFrame:
         nres = res.groupBy("query_id").agg(
@@ -1552,17 +1432,12 @@ def ivfpq_filtered_serving_report(
     for label, elig_df in preds.items():
         elig = elig_df.select(F.col(elig_df.columns[0]).alias("vec_id"))
         corpus_elig = corpus.join(elig, "vec_id", "left_semi")
-        enc_elig = enc.join(
+        codes_elig = codes.join(
             elig.select(F.col("vec_id").alias("id")), "id", "left_semi"
         )
-        asg_elig = asg.join(
-            elig.select(F.col("vec_id").alias("cid")), "cid", "left_semi"
+        pre = _serve(side, codes_elig, corpus_elig, k, shortlist).select(
+            "query_id", "neighbor_id"
         )
-        pre = ivfpq_search_rerank(
-            queries, corpus_elig, k=k, n_cells=n_cells, n_probe=n_probe,
-            shortlist=shortlist, centroids=cents, codebooks=books,
-            encoded=enc_elig, assignments=asg_elig,
-        ).select("query_id", "neighbor_id")
         post = unfiltered_topk.join(
             elig.select(F.col("vec_id").alias("neighbor_id")),
             "neighbor_id",
@@ -1571,8 +1446,8 @@ def ivfpq_filtered_serving_report(
         exact = brute_force_topk(queries, corpus_elig, k=k).select(
             "query_id", "neighbor_id"
         )
-        rep = mode_report(pre, scanned(asg_elig), exact, "prefilter").unionByName(
-            mode_report(post, scanned(asg), exact, "postfilter")
+        rep = mode_report(pre, scanned(codes_elig), exact, "prefilter").unionByName(
+            mode_report(post, scanned(codes), exact, "postfilter")
         )
         if label is not None:
             rep = rep.select(F.lit(label).alias("pred"), "*")

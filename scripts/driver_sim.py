@@ -10,9 +10,11 @@ Usage: python scripts/driver_sim.py [name-substring ...]
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
-REPO = "/root/repo"
+# the checkout this script lives in, so a run verifies its own code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
@@ -22,6 +24,9 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    # Python workers unpickle library functions too: point them at this
+    # checkout, whatever directory the script runs from
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (REPO, os.environ.get("PYTHONPATH"))))
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")

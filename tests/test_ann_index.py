@@ -64,7 +64,31 @@ def test_serving_plan_has_no_corpus_encode(spark, built_index):
     # and the on-the-fly sibling DOES encode the corpus in-plan (one MORE
     # Arrow stage), which is exactly the repeated cost the split amortizes
     fly = _plan(ivfpq_search_rerank(q, built_index, k=5, n_probe=4, shortlist=50))
-    assert _n_arrow_stages(fly) >= 3
+    assert _n_arrow_stages(fly) == 2
+
+
+def test_empty_query_frame_serves_no_rows(spark, built_index):
+    """A request with no queries returns no rows, with each serve's
+    documented schema — the shared query side builds empty frames."""
+    from bigdata_rags_spark.similarity.pq import pq_adc_topk
+
+    e = built_index
+    q = e.filter(F.col("vec_id") < 0)
+    served = {
+        "index": ivfpq_index_serve(q, k=5, table_prefix=PREFIX),
+        "fly": ivfpq_search_rerank(q, e, k=5, n_probe=4, shortlist=50),
+        "adc": pq_adc_topk(q, e, k=5),
+    }
+    rerank_schema = "query_id:bigint,neighbor_id:bigint,similarity:double,rank:int"
+    want = {
+        "index": rerank_schema,
+        "fly": rerank_schema,
+        "adc": "query_id:bigint,neighbor_id:bigint,approx_sim_micro:bigint,rank:int",
+    }
+    for name, df in served.items():
+        got = ",".join(f"{f.name}:{f.dataType.simpleString()}" for f in df.schema)
+        assert got == want[name], name
+        assert df.count() == 0, name
 
 
 def test_serving_scan_prunes_unprobed_buckets(spark, built_index):
