@@ -95,12 +95,53 @@ def _contract_local_stars(fwd: DataFrame) -> DataFrame:
     return fwd.mapInPandas(contract, "u long, v long")
 
 
-#: base-case bound for the contracted-graph driver solve: 5M (u, root)
-#: pairs is ~80 MB on the driver AS ARROW COLUMNS — the same order as a
-#: broadcast-join threshold.  The fetch is gated by a row-free size probe
-#: (limit(max+1).count()), so an over-threshold graph costs one bounded
-#: count, never a discarded GB-scale collect.
+#: base-case bound for the driver solve: 5M (u, v) pairs is ~80 MB on the
+#: driver AS ARROW COLUMNS — the same order as a broadcast-join threshold.
+#: The edge count rides the job that materializes the edges (an Observation),
+#: so an over-threshold graph costs no extra job and never a discarded
+#: GB-scale collect.
 LOCAL_SOLVE_MAX_EDGES = 5_000_000
+
+
+def _checkpoint_counted(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize ``edges`` once (localCheckpoint) and count its rows in the
+    same job."""
+    obs = Observation()
+    done = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return done, obs.get["n"]
+
+
+def _solve_on_driver(edges: DataFrame) -> DataFrame:
+    """Union-find over edges fetched to the driver through Arrow (two int64
+    columns are the documented ~80 MB at the 5M bound; python Row objects
+    would be ~10x that), labels returned through Arrow too."""
+    import pandas as pd
+
+    edges_pdf = edges.toPandas()
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in zip(edges_pdf["u"].tolist(), edges_pdf["v"].tolist()):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            if ru < rv:
+                parent[rv] = ru
+            else:
+                parent[ru] = rv
+    nodes = list(parent)
+    out_pdf = pd.DataFrame(
+        {"doc_id": nodes, "cluster_id": [find(n) for n in nodes]}, dtype="int64"
+    )
+    return edges.sparkSession.createDataFrame(out_pdf, "doc_id long, cluster_id long")
 
 
 def connected_components(
@@ -114,17 +155,18 @@ def connected_components(
     """(doc_id, cluster_id) for every node appearing in ``pairs``;
     cluster_id = min node id in the component (deterministic keeper).
 
-    Three-tier execution (round 11, VERDICT r10 #4 — the CC loop's cost at
-    sf0.1 was pure per-round job-launch floor, ~0.7 s x 10 rounds):
+    Three-tier execution (the CC loop's cost at sf0.1 was pure per-round
+    job-launch floor, ~0.7 s x 10 rounds):
 
-    1. ``_contract_local_stars``: one narrow mapInPandas pass collapses
-       every partition's edges into connectivity-equivalent stars.
-    2. If the contracted edge set fits ``local_solve_max_edges``, ONE
-       bounded collect + driver union-find finishes the job — the
-       recursive-contraction base case of the MapReduce CC literature
-       (contract until it fits, then solve locally).  Measured at sf0.1:
-       7-10 rounds / 4.9-7 s -> 1 round-equivalent / ~1.5 s, identical
-       labels.
+    1. The raw edges are materialized once and counted in the same job.
+       If they fit ``local_solve_max_edges``, one Arrow fetch + driver
+       union-find finishes the job — the base case of the MapReduce CC
+       literature (contract until it fits, then solve locally).  A dedup
+       graph of a few thousand edges takes this path with no Python
+       workers at all.
+    2. Above the bound, ``_contract_local_stars`` (one narrow mapInPandas
+       pass) collapses every partition's edges into connectivity-equivalent
+       stars; if those fit the bound, the driver solves them as in tier 1.
     3. Otherwise (the 100-TB path) the doubled min-label loop below runs
        on the CONTRACTED graph — never more rounds than on the raw graph,
        and each round ships only (id, label) pairs.  Measured (SCALE.md
@@ -136,55 +178,22 @@ def connected_components(
        gain nothing (iterated per-u re-contraction was measured useless
        and is deliberately absent).  Dedup graphs have cluster-bounded
        diameter, so real rounds stay <= log2(max cluster size) + 1.
+
+    ``local_contract=False`` skips tiers 1 and 2 and runs the loop on the
+    raw edges.
     """
     global LAST_ROUNDS
     fwd = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
     if local_contract:
-        # materialize the contraction once (round-8 lesson: lazy cache does
-        # not protect multi-branch reuse) so the size probe and whichever
-        # tier runs next never recompute it
-        fwd = _contract_local_stars(fwd).localCheckpoint()
-        # size probe WITHOUT shipping rows: limit(N+1).count() scans at
-        # most N+1 rows JVM-side and returns one number — collecting the
-        # rows first would ship up to ~5M python Row objects (GB-scale on
-        # the driver, ~10x the 80 MB estimate) and waste the entire fetch
-        # whenever the graph is over threshold (the 100-TB path)
-        if fwd.limit(local_solve_max_edges + 1).count() <= local_solve_max_edges:
-            # Arrow transfer: two int64 columns are the documented ~80 MB
-            # at the 5M bound (python Row objects would be ~10x that)
-            edges_pdf = fwd.toPandas()
-            parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:
-                    parent[x], x = r, parent[x]
-                return r
-
-            for u, v in zip(edges_pdf["u"].tolist(), edges_pdf["v"].tolist()):
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if ru < rv:
-                        parent[rv] = ru
-                    else:
-                        parent[ru] = rv
+        # materialize once (round-8 lesson: lazy cache does not protect
+        # multi-branch reuse) so the fetch or the contraction never
+        # recomputes the pairs' plan
+        fwd, n_edges = _checkpoint_counted(fwd)
+        if n_edges > local_solve_max_edges:
+            fwd, n_edges = _checkpoint_counted(_contract_local_stars(fwd))
+        if n_edges <= local_solve_max_edges:
             LAST_ROUNDS = 0
-            spark = pairs.sparkSession
-            # return trip stays on the Arrow path too (ADVICE r11 low): a
-            # plain list of ~5M tuples would take the Row-object path the
-            # fetch above avoids — pandas in, pandas out
-            import pandas as pd
-
-            nodes = list(parent)
-            out_pdf = pd.DataFrame(
-                {"doc_id": nodes, "cluster_id": [find(n) for n in nodes]},
-                dtype="int64",
-            )
-            return spark.createDataFrame(out_pdf, "doc_id long, cluster_id long")
+            return _solve_on_driver(fwd)
     edges = (
         fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()

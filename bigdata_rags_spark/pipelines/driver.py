@@ -41,6 +41,7 @@ from bigdata_rags_spark.pipelines.football import (
     defense_pipeline,
     discipline_pipeline,
 )
+from bigdata_rags_spark.schemas import FOOTBALL
 
 ATTACK_INPUTS = [
     "big_chance_team", "clean_sheet_team", "effective_clearance_team",
@@ -107,8 +108,9 @@ def run_transform(spark: SparkSession, layout: ZoneLayout, run_date: dt.date) ->
     the reference's ShortCircuitOperator (dag-transform.py:436-441)."""
     if not verify_zone_status(layout, "raw", ALL_INPUTS, run_date):
         return False
+    # the registered schema spares one schema-inference job per table
     tables = {
-        name: spark.read.parquet(layout.table_dir("raw", name, run_date))
+        name: spark.read.schema(FOOTBALL[name]).parquet(layout.table_dir("raw", name, run_date))
         for name in ALL_INPUTS
     }
     for prefix, (inputs, fn) in TRANSFORMS.items():

@@ -13,19 +13,36 @@ which contain no newlines or symbols — a check that can never fire proves
 nothing (vacuous-oracle rule, VERDICT r1).  The repetition subset below has
 measured signal on the fixture at every threshold.
 
-100 TB design: two explode -> groupBy((doc_id, gram)) aggregations with
-map-side partial aggregation; no windows, no UDFs, no driver actions, and
-the raw text never shuffles past the first projection (only (doc_id, gram)
-pairs move).  Output ratios are ROUND()ed inside the plan so the keep flag
-is float-parity-stable across engines (see catalog.py module docstring).
+100 TB design: every statistic comes from the token array in the row that
+already holds it (``size``, ``array_distinct`` and the longest run of equal
+neighbours in ``array_sort``), so the gate is one narrow projection: no
+explode, no shuffle, no windows, no UDFs, no driver actions.  Output ratios
+are ROUND()ed inside the plan so the keep flag is float-parity-stable across
+engines (see catalog.py module docstring).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_rags_spark.functions.text import ws_tokens
+
+
+def _top_count(grams: Column) -> Column:
+    """How often the most frequent element of ``grams`` occurs: the longest
+    run of equal neighbours in the sorted array (0 for an empty array)."""
+
+    def step(acc: Column, x: Column) -> Column:
+        run = F.when(acc["prev"] == x, acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            x.alias("prev"), run.alias("run"), F.greatest(acc["top"], run).alias("top")
+        )
+
+    start = F.struct(
+        F.lit(None).cast("string").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("top")
+    )
+    return F.aggregate(F.array_sort(grams), start, step, lambda acc: acc["top"])
 
 
 def repetition_quality(
@@ -40,36 +57,36 @@ def repetition_quality(
 
     Returns ``doc_id, n_words, n_distinct, top_unigram_frac, distinct_ratio,
     top_bigram_frac, keep_flag`` (keep_flag is 0/1 BIGINT; ratios rounded to
-    6 places before thresholding so both engines gate on identical values).
-    Documents with zero tokens drop out (no grams to aggregate) — mirrored
-    by the oracle SQL, where ``unnest([])`` yields no rows.
+    6 places before thresholding so both engines gate on identical values),
+    one row per document (``doc_id`` is a key).  The counts come from the
+    document's token array in one narrow pass: ``n_words`` is its size,
+    ``n_distinct`` the size of ``array_distinct``, and the top unigram and
+    bigram counts the longest runs in the sorted token and bigram arrays.
+    A document with NULL text has no token array and drops out — mirrored
+    by the oracle SQL, where ``unnest(NULL)`` yields no rows.  Empty text
+    is one ``""`` token (``split`` semantics, in both engines).
     Documents with a single token (no bigrams) still get a row — the bigram
-    stats left-join as 0 and the word-count floor zeroes the flag; a quality
+    fraction is 0 and the word-count floor zeroes the flag; a quality
     gate must not silently pass over exactly the most pathological docs
     (ADVICE r2).
     """
-    t = docs.select("doc_id", ws_tokens(F.col("text")).alias("toks"))
-    uni = t.select("doc_id", F.explode("toks").alias("tok")).groupBy("doc_id", "tok").count()
-    us = uni.groupBy("doc_id").agg(
-        F.sum("count").cast("bigint").alias("n_words"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.max("count").alias("top_c"),
+    toks = F.col("toks")
+    n1 = F.size(toks) - F.lit(1)
+    bgs = F.zip_with(
+        F.slice(toks, 1, n1), F.slice(toks, 2, n1), lambda a, b: F.concat(a, F.lit(" "), b)
     )
-    n1 = F.size("toks") - F.lit(1)
-    bt = t.select(
+    t = docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", ws_tokens(F.col("text")).alias("toks")
+    )
+    us = t.select(
         "doc_id",
-        F.zip_with(
-            F.slice("toks", 1, n1),
-            F.slice("toks", 2, n1),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ).alias("bgs"),
+        F.size(toks).cast("bigint").alias("n_words"),
+        F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct"),
+        _top_count(toks).alias("top_c"),
+        n1.alias("n_bigrams"),
+        _top_count(bgs).alias("top_bc"),
     )
-    bi = bt.select("doc_id", F.explode("bgs").alias("bg")).groupBy("doc_id", "bg").count()
-    bs = bi.groupBy("doc_id").agg(
-        F.sum("count").cast("bigint").alias("n_bigrams"),
-        F.max("count").alias("top_bc"),
-    )
-    m = us.join(bs, "doc_id", "left").select(
+    m = us.select(
         "doc_id",
         "n_words",
         "n_distinct",

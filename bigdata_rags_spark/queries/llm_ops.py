@@ -3340,9 +3340,9 @@ def gopher_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset of the fixture (106 short, 39 repetitive-unigram, 99 low-diversity,
     33 repetitive-bigram at sf0.01 — 287/500 kept).
 
-    100 TB shape: two explode->groupBy aggregations (unigrams, bigrams), each
-    with map-side partial aggregation on (doc_id, gram); no windows, no UDFs,
-    text itself never shuffled past the first projection.  keep_flag derives
+    100 TB shape: one narrow projection over each doc's token array (size,
+    array_distinct, longest runs in the sorted unigram and bigram arrays);
+    no explode, no shuffle, no windows, no UDFs.  keep_flag derives
     from the ROUNDED ratios in both engines (float-parity rule).  See
     ``bigdata_rags_spark/quality.py`` for provenance and design notes.
     """

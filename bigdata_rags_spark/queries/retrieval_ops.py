@@ -110,9 +110,8 @@ QUALIFY rnk <= 10
     tier=TIER_LLM,
 )
 def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-10 for a bag-of-words query — joins/aggs only; the
-    exploded (token, doc) relation IS the inverted index
-    (retrieval/bm25.py)."""
+    """Okapi BM25 top-10 for a bag-of-words query — per-doc tf from each
+    token array plus one 1-row corpus aggregate (retrieval/bm25.py)."""
     docs = _docs_parallel(spark, sf_dir)
     return bm25_scores(docs, QUERY_TERMS, k=10)
 

@@ -6,28 +6,28 @@ BM25 (Robertson/Spärck Jones; the Okapi formulation) over the corpus:
                   / (tf(t,D) + k1 * (1 - b + b * |D|/avgdl))
     idf(t) = ln((N - df + 0.5) / (df + 0.5) + 1)
 
-computed entirely with joins/aggregations (no index structure needed: the
-"inverted index" IS the (token -> doc) exploded relation, and Catalyst's
-hash joins do the posting-list intersection).  ``hybrid_search`` fuses the
-normalized lexical score with embedding cosine similarity — the standard
-RAG retrieval pattern (sparse + dense, weighted sum).
+computed from each document's token array in the row that holds it: |D| is
+the array's size and tf(t,D) the count of t in it, so scoring is a narrow
+projection with no (doc, token) explode and no shuffle of tokens.
+``hybrid_search`` fuses the normalized lexical score with embedding cosine
+similarity — the standard RAG retrieval pattern (sparse + dense, weighted
+sum).
 
-Scale discipline (re-planned after VERDICT r1 flagged the v1 shape):
+Scale discipline:
 
-- **Fully lazy, single-plan.**  ``n_docs`` and ``avgdl`` are 1-row
-  aggregates crossJoin-broadcast into the scoring plan — ZERO driver-side
-  ``count()``/``collect()`` actions; building the DataFrame launches no
-  jobs.
-- **One tokenization shuffle.**  Everything derives from the per-(doc,
-  token) count relation: doc lengths are ``sum(tf)``, query-term tf is a
-  filter of it, document frequency aggregates it.  The identical subtrees
-  come back as ReusedExchange instead of re-scanning the corpus three
-  times.
+- **Fully lazy.**  N, avgdl and every query term's df are ONE 1-row
+  aggregate over the corpus, broadcast into the scoring projection — ZERO
+  driver-side ``count()``/``collect()`` actions; building the DataFrame
+  launches no jobs.  The corpus is scanned twice (the aggregate and the
+  scoring pass), and only 1-row results move between them.
 - **Top-k is ``orderBy().limit(k)``** → ``TakeOrderedAndProject`` (per-
   partition heaps + driver merge of k rows), never a ``row_number`` over an
   unpartitioned window that would funnel every scored doc through one task.
   The rank column is attached AFTER the limit, so the only global window in
   the plan sees exactly k rows.  Pinned by ``tests/test_plans.py``.
+
+The other rankers here (RM3, query likelihood, proximity) keep their
+exploded (doc, token) relations.
 
 All arithmetic is double, rounded only at the output, and deterministic per
 the catalog's parity discipline.
@@ -65,42 +65,57 @@ def bm25_all_scores(
 ) -> DataFrame:
     """Every matching doc's BM25 score: (doc_id, bm25, matched_terms).
 
-    Lazy end to end — corpus stats (N, avgdl) are in-plan 1-row aggregates,
+    Lazy end to end.  Each doc's token array yields its length and every
+    query term's tf in the row that holds it; N, avgdl and each term's df
+    come from one 1-row aggregate broadcast into the scoring projection,
     exactly mirroring the oracle SQL's ``CROSS JOIN stats CROSS JOIN avgl``.
+    A repeated query term counts once; a doc with NULL text has no tokens
+    (it counts in N only) and a doc matching no term has no row.
     """
-    toks = docs.select(
+    terms = list(dict.fromkeys(query_terms))
+    t = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(ws_tokens(F.col(text_col))).alias("token"),
+        F.col(text_col).isNotNull().alias("has_text"),
+        ws_tokens(F.col(text_col)).alias("toks"),
     )
-    # the single corpus-wide shuffle: per-(doc, token) term frequencies.
-    # doc_len/tf/dfreq all derive from it -> ReusedExchange, one scan.
-    per_doc_token = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    doc_len = per_doc_token.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-
-    n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    avgdl = doc_len.agg(F.avg("dl").alias("avgdl"))
-
-    tf = per_doc_token.filter(F.col("token").isin(query_terms))
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+    toks = F.col("toks")
+    stats = t.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg(F.when(F.col("has_text"), F.size(toks))).alias("avgdl"),
+        *[
+            F.count(F.when(F.array_contains(toks, term), 1)).alias(f"df{i}")
+            for i, term in enumerate(terms)
+        ],
     )
-    per_term = (
-        tf.join(F.broadcast(dfreq), "token")
-        .join(doc_len, "doc_id")
-        .crossJoin(F.broadcast(n_docs))
-        .crossJoin(F.broadcast(avgdl))
-        .withColumn(
-            "term_score",
-            idf
-            * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))),
-        )
+    # tf columns in their own projection, so each array scan runs once
+    per_doc = t.filter("has_text").select(
+        "doc_id",
+        F.size(toks).alias("dl"),
+        *[
+            F.size(F.filter(toks, lambda x: x == term)).alias(f"tf{i}")
+            for i, term in enumerate(terms)
+        ],
     )
-    return per_term.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 6).alias("bm25"),
-        F.count(F.lit(1)).alias("matched_terms"),
+
+    def term_score(i: int) -> Column:
+        tf, df = F.col(f"tf{i}"), F.col(f"df{i}")
+        idf = F.log((F.col("n_docs") - df + 0.5) / (df + 0.5) + 1.0)
+        okapi = idf * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * F.col("dl") / F.col("avgdl")))
+        return F.when(tf > 0, okapi).otherwise(F.lit(0.0))
+
+    ids = range(len(terms))
+    scored = per_doc.crossJoin(F.broadcast(stats)).select(
+        "doc_id",
+        sum((term_score(i) for i in ids), F.lit(0.0)).alias("raw"),
+        sum((F.when(F.col(f"tf{i}") > 0, 1).otherwise(0) for i in ids), F.lit(0))
+        .cast("bigint")
+        .alias("matched_terms"),
+    )
+    # every matched term scores > 0 (idf > 0), so raw > 0 keeps exactly the
+    # matching docs; unlike matched_terms it reads the stats, so the filter
+    # stays above the join instead of re-tokenizing below the tf projection
+    return scored.filter(F.col("raw") > 0).select(
+        "doc_id", F.round("raw", 6).alias("bm25"), "matched_terms"
     )
 
 
@@ -405,11 +420,10 @@ def query_likelihood_scores(
     Terms absent from the whole collection are dropped (p_c = 0 would be
     ln(0); the standard convention).
 
-    Same scale discipline as ``bm25_all_scores``: one tokenization
-    shuffle, 1-row aggregates broadcast into the plan (no driver
-    actions), ``orderBy().limit(k)`` -> TakeOrderedAndProject.  Float op
-    order is fixed (mu * cf / ctot, one ln, ROUND at the output) per the
-    catalog parity discipline.
+    Scale discipline: one tokenization shuffle, 1-row aggregates
+    broadcast into the plan (no driver actions), ``orderBy().limit(k)`` ->
+    TakeOrderedAndProject.  Float op order is fixed (mu * cf / ctot, one
+    ln, ROUND at the output) per the catalog parity discipline.
     """
     toks = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(ws_tokens(F.col(text_col))).alias("token")

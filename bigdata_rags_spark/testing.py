@@ -4,12 +4,14 @@ Runs a catalog query on Spark and its oracle SQL on DuckDB over the same
 parquet fixtures, then compares row count, column set, and an
 order-insensitive canonical form of every value — a local replica of the
 driver's CORRECTNESS gate so parity failures surface before a round ends.
+``spark_jobs`` counts the Spark jobs a call launches, for job-count pins.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import math
+import uuid
 
 import duckdb
 import pandas as pd
@@ -91,6 +93,21 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[st
             f"spark-only sample={diff_s} oracle-only sample={diff_o}; cols={s_cols}"
         )
     return problems
+
+
+def spark_jobs(spark, thunk) -> int:
+    """Number of Spark jobs ``thunk()`` launches from this thread, counted
+    under a fresh job group through the status tracker (the caller's group
+    is restored afterwards)."""
+    sc = spark.sparkContext
+    group = f"spark_jobs-{uuid.uuid4().hex}"
+    previous = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", previous)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def run_parity(spec, spark, sf_dir: str) -> list[str]:

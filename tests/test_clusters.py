@@ -68,6 +68,25 @@ def test_local_solve_matches_distributed_loop(spark):
     assert fast == slow
 
 
+def test_graph_within_bound_is_solved_without_contraction(spark, monkeypatch):
+    """A raw graph within ``local_solve_max_edges`` goes straight to the
+    driver solve: no mapInPandas contraction (no Python workers), and the
+    loop's labels."""
+    import bigdata_rags_spark.dedup.clusters as cl
+
+    pairs = [(i, i + 1) for i in range(20, 32)] + [(5, 1), (5, 2), (100, 101), (2, 1)]
+    df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
+    slow = sorted(map(tuple, cl.connected_components(df, local_contract=False).collect()))
+
+    def refuse(fwd):
+        raise AssertionError("contraction ran on a graph within the bound")
+
+    monkeypatch.setattr(cl, "_contract_local_stars", refuse)
+    fast = cl.connected_components(df, local_solve_max_edges=len(pairs)).collect()
+    assert cl.LAST_ROUNDS == 0
+    assert sorted(map(tuple, fast)) == slow
+
+
 def test_local_solve_fallback_threshold(spark):
     """An over-threshold contracted graph must fall through to the
     distributed loop (the 100-TB path), with identical labels."""

@@ -66,3 +66,14 @@ def test_load_raises_without_stage_gate(spark, tmp_path):
 def test_duplicate_source_registration_is_deduped():
     # reference extracts interception_team twice (dag-extract.py:31,36)
     assert ALL_INPUTS.count("interception_team") == 1
+
+
+def test_transform_reads_raw_tables_without_schema_inference(spark, sources, tmp_path):
+    """Raw tables are read with their registered schemas: no per-table
+    schema-inference job (the schema-less reads took 38 jobs)."""
+    from bigdata_rags_spark.testing import spark_jobs
+
+    layout = ZoneLayout(str(tmp_path / "lake"))
+    run_extract(sources, layout, RUN_DATE)
+    assert spark_jobs(spark, lambda: run_transform(spark, layout, RUN_DATE)) <= 20
+    assert read_status(layout, "stage", "transform", RUN_DATE) == SUCCESS

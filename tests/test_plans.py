@@ -100,6 +100,21 @@ def test_bm25_and_hybrid_are_lazy_and_take_ordered(spark, sf_smoke):
         # Window in the plan sees at most k rows (not the corpus)
 
 
+def test_token_statistics_need_no_explode(spark, sf_smoke):
+    """The quality gate and BM25 read per-document token statistics from
+    the token array in its own row: no (doc, token) Generate, and a bounded
+    number of Spark jobs (the explode formulation took 8 and 21-23)."""
+    from bigdata_rags_spark.quality import repetition_quality
+    from bigdata_rags_spark.queries.llm_ops import _docs_parallel
+    from bigdata_rags_spark.testing import spark_jobs
+
+    gate = repetition_quality(_docs_parallel(spark, sf_smoke))
+    hybrid = REGISTRY["hybrid_rag_search"].spark(spark, sf_smoke)
+    for df, max_jobs in ((gate, 2), (hybrid, 10)):
+        assert "Generate" not in _plan(df)
+        assert spark_jobs(spark, df.collect) <= max_jobs
+
+
 def test_range_join_is_hash_join_with_band_condition(plans):
     p = plans["range_join_shipments_in_window"]
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
