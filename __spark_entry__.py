@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value hash; ``scripts/driver_sim.py`` replays that check locally).
 
 All real definitions live in ``bigdata_rags_spark.queries.catalog`` — one
 entry per implemented operator from SURVEY.md §2 plus the extension tiers.

@@ -1,5 +1,8 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
-and sub-document segment dedup."""
+"""Deduplication operators.  Text near-dup has one path: exact content
+hashes, then MinHash+LSH candidates verified by n-gram Jaccard, then
+connected components (``dedup/clusters.py``); the incremental keepers run
+the same rules against a stored corpus.  Embedding near-dup goes through
+``dedup/semantic.py``."""
 
 from bigdata_rags_spark.dedup.exact import (
     dup_clusters,
@@ -14,9 +17,6 @@ from bigdata_rags_spark.dedup.minhash import (
     ngram_jaccard_pairs,
 )
 from bigdata_rags_spark.dedup.semantic import incremental_semantic_keepers
-from bigdata_rags_spark.dedup.segments import segment_dedup
-from bigdata_rags_spark.dedup.simhash import simhash16, simhash_near_pairs
-from bigdata_rags_spark.dedup.spans import substring_dedup
 
 __all__ = [
     "dup_clusters",
@@ -28,8 +28,4 @@ __all__ = [
     "lsh_candidate_pairs",
     "minhash_signatures",
     "ngram_jaccard_pairs",
-    "segment_dedup",
-    "simhash16",
-    "simhash_near_pairs",
-    "substring_dedup",
 ]

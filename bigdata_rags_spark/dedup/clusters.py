@@ -1,6 +1,6 @@
 """Duplicate-cluster assignment: connected components over near-dup pairs.
 
-Pairwise detectors (MinHash/LSH, Jaccard, SimHash) emit edges; dedup needs
+Pairwise detectors (MinHash/LSH + Jaccard verify) emit edges; dedup needs
 the transitive closure — if A~B and B~C, then {A,B,C} is one cluster with
 one keeper.  Implemented as iterative min-label propagation WITH pointer
 doubling (min propagation is the standard large-graph approach, e.g.

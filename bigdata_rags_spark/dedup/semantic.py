@@ -78,8 +78,8 @@ def incremental_semantic_keepers(
     # b feeds drop_ex, keep, and (when intra_centroids is None) both sides
     # of drop_intra via bi — a derived attach_cells subtree (an Arrow pass
     # at >32 centroids) read from up to 4 plan branches, so materialize it
-    # (ADVICE r16; the CLAUDE.md multi-branch rule this same family applies
-    # in minhash/ppjoin/winnow).  ex is read once: leave lazy.
+    # (the CLAUDE.md multi-branch rule `incremental_minhash_keepers` applies
+    # too).  ex is read once: leave lazy.
     b = prep(batch, centroids).localCheckpoint()
     ex = prep(existing, centroids).select("cell", F.col("__v").alias("__vex"))
     drop_ex = (

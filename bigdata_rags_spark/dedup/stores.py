@@ -1,19 +1,14 @@
 """Persisted text-dedup store metadata (the IVFPQ ``_meta`` discipline for
-the incremental text-dedup family).
+the MinHash store, its one user: `dedup/minhash.py:build_minhash_store`).
 
-A dedup store's derived tables (winnow fingerprints, MinHash signatures,
-the PPJoin df/prefix/sets tables) are only meaningful under the EXACT
-parameters they were built with — a batch fingerprinted with a different
-k-gram width, banding or cap would join incompatibly against the stored
-index and silently miss (or invent) duplicates.  So the frozen parameters
+A dedup store's signature table is only meaningful under the EXACT
+parameters it was built with — a batch hashed with a different shingle
+width or banding would join incompatibly against the stored index and
+silently miss (or invent) duplicates.  So the frozen parameters
 travel WITH the store in a tiny ``{prefix}_meta`` managed table of
 (param, val) bigint pairs, and every ingest call reloads them from there —
 never re-derives them from the corpus, never trusts caller literals
 (`similarity/pq.py:_write_index_meta` is the same contract for ANN).
-
-Float parameters (the PPJoin Jaccard threshold) are stored in exact micro
-units (``round(t * 1e6)``), which round-trips any <= 6-decimal threshold
-bit-exactly through the bigint column.
 """
 
 from __future__ import annotations

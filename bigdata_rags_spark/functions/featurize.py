@@ -67,9 +67,8 @@ def hashed_doc_features(
     the boilerplate suppressor: raw count vectors share a dominant
     common-word direction, which correlates LSH signatures corpus-wide
     (measured r12 at sf0.1: idf cut per-table candidate volume 3.1M ->
-    0.83M, the random-pair theoretical floor).  Same posture as the
-    idf-weighted SimHash sibling (SCALE.md finding #6): serve the idf
-    variant on real corpora.  Integer reciprocal, never a float log, so
+    0.83M, the random-pair theoretical floor; SCALE.md finding #6): serve
+    the idf variant on real corpora.  Integer reciprocal, never a float log, so
     both engines agree exactly.  Cost: one extra (feature -> df) groupBy
     and a feature-keyed join — the tf-idf shape `tfidf_top_terms` already
     runs; weights stay < 1e6 so 64-dim dot products remain float64-exact.

@@ -4,7 +4,7 @@ capacity").
 Spark's scheduler happily runs several jobs at once inside one application;
 actions are only sequential because driver code calls them sequentially.
 When a builder must persist several INDEPENDENT tables (an index's codes +
-vectors + meta, a dedup store's fingerprint + df + sets tables), running the
+vectors + meta, the MinHash dedup store's signatures + meta), running the
 writes from a small thread pool lets the next write's tasks back-fill
 executors freed by the current write's straggler tail — at fixture scale it
 additionally hides the fixed per-write latency (job submit, metastore

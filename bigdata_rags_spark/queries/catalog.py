@@ -62,12 +62,13 @@ ROUND-11 parity techniques (reusable):
   on non-negative operands, ties fall to integer tiebreaks, and an
   up-front guard raises before ``a * SCALE`` can overflow under ANSI.
 - EXACT floor(log2) / floor(sqrt) WITHOUT float logs: ``length(bin(x))-1``
-  is floor(log2(x)) exactly (simhash idf weights); ``floor(sqrt(bigint))``
+  is floor(log2(x)) exactly (the ceil-pow2 buckets of
+  `operators/sampling.py:length_bucket_batching`); ``floor(sqrt(bigint))``
   IS cross-engine exact because IEEE sqrt is correctly rounded for
   x < 2^53 (domain_temperature_mixing) — but log/log2 are NOT correctly
   rounded, never use them.
-- PACKED-KEY WINDOW ARGMIN (winnowed_fingerprints): to select "min value,
-  rightmost position on ties" with ONE window MIN in both engines, pack
+- PACKED-KEY WINDOW ARGMIN: to select "min value, rightmost position on
+  ties" with ONE window MIN in both engines, pack
   ``val * 2^24 + (2^24 - 1 - pos)`` into a bigint; decode with DIV/%.
   Works for any argmin-with-deterministic-tiebreak over a window.
 """
@@ -105,8 +106,7 @@ def query(name: str, oracle: str | None = None, tier: str = TIER_REFERENCE):
         # allowed for library-name clashes): guards the dangling-decorator
         # bug where an insert lands between @query(...) and its def and
         # silently registers the WRONG function under the key (found in
-        # r13 — jaccard_prefix_filter_pairs briefly served the incremental
-        # variant's frame)
+        # r13 — a query briefly served its incremental variant's frame)
         assert fn.__name__ in (name, f"{name}_q"), (
             f"query {name!r} registered with mismatched function "
             f"{fn.__name__!r} — dangling decorator?"

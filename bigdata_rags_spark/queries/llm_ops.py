@@ -1,5 +1,5 @@
 """LLM-training-data pipeline tier (BASELINE.json north-star mandate):
-dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
+dedup (exact / MinHash-LSH / n-gram Jaccard), similarity search,
 and text analysis over the ``documents`` and ``embeddings`` tables.
 
 Everything here is backed by the library operators in ``dedup/``,
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from bigdata_rags_spark.dedup.exact import dup_clusters, exact_dedup
 from bigdata_rags_spark.dedup.minhash import lsh_candidate_pairs, ngram_jaccard_pairs
-from bigdata_rags_spark.dedup.simhash import simhash16
 from bigdata_rags_spark.functions.text import (
     BPE_TOKEN_RE,
     STOPWORDS,
@@ -332,58 +331,6 @@ def prefix_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_dup_clusters(docs.unionByName(variant), k=8)
 
 
-_SEG_K = 4  # tokens per dedup segment (CCNet dedups paragraphs; the fixture
-# has no newlines, so fixed 4-token windows stand in — 341 cross-doc
-# duplicate segments at sf0.01, non-vacuous without wiping the corpus)
-
-
-@_llm(
-    "segment_dedup_docs",
-    f"""
-WITH toks AS (SELECT doc_id, {_SQL_TOKS} AS t FROM documents),
-segs AS (
-  SELECT doc_id, t,
-         unnest(range(0, (len(t) + {_SEG_K - 1}) // {_SEG_K})) AS seg_no
-  FROM toks
-),
-seg AS (
-  SELECT doc_id, seg_no,
-         array_to_string(t[(seg_no*{_SEG_K}+1):(seg_no*{_SEG_K}+{_SEG_K})], ' ') AS seg
-  FROM segs
-),
-cnt AS (SELECT seg, COUNT(DISTINCT doc_id) AS n_docs FROM seg GROUP BY seg)
-SELECT s.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_segments,
-       CAST(SUM(CASE WHEN c.n_docs = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       ROUND(SUM(CASE WHEN c.n_docs = 1 THEN 1 ELSE 0 END)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS kept_frac,
-       COALESCE(string_agg(CASE WHEN c.n_docs = 1 THEN s.seg END, ' '
-                           ORDER BY s.seg_no), '') AS cleaned_text
-FROM seg s JOIN cnt c ON s.seg = c.seg
-GROUP BY s.doc_id
-""",
-)
-def segment_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style sub-document dedup: drop every text SEGMENT that occurs
-    in more than one document, reassembling each doc from its surviving
-    segments (the paragraph-dedup step of CCNet/C4 pipelines; the fixture
-    has no newlines, so segments are fixed 4-token windows).
-
-    Plan: tokenize -> per-doc segment list via a codegen'd
-    ``transform(sequence)``/``slice`` (no explode until segments exist) ->
-    posexplode -> global per-segment distinct-doc counts (partial+final
-    agg) -> hash join back -> per-doc reassembly ordered by segment
-    position.  100 TB: the only corpus-wide shuffles carry (segment,
-    doc_id) pairs and the count table; at real scale key both sides by
-    ``md5(segment)`` so the exchange ships 16-byte keys instead of text —
-    semantics unchanged (the text stays on the exploded row).  Reassembly
-    groups by doc_id, so text never shuffles twice.
-    """
-    from bigdata_rags_spark.dedup.segments import segment_dedup
-
-    return segment_dedup(_docs_parallel(spark, sf_dir), k=_SEG_K)
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dedup
 # ---------------------------------------------------------------------------
@@ -477,135 +424,6 @@ def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair explosion to actual collisions)."""
     docs = _docs_parallel(spark, sf_dir)
     return ngram_jaccard_pairs(docs, k=5, threshold=0.5)
-
-
-@_llm(
-    "incremental_ppjoin_dedup",
-    f"""
-WITH allsh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      CASE WHEN len({_SQL_TOKS}) >= 5 THEN range(1, len({_SQL_TOKS}) - 3)
-           ELSE [] END,
-      i -> array_to_string(({_SQL_TOKS})[i:i+4], ' ')
-    ))) AS shingle
-  FROM documents
-),
-ex AS (SELECT doc_id, shingle FROM allsh WHERE doc_id % 5 = 0),
-bsh AS (
-  SELECT doc_id, shingle FROM allsh WHERE doc_id % 5 != 0
-  UNION ALL
-  SELECT doc_id + 1000000000 AS doc_id, shingle FROM allsh WHERE doc_id % 10 = 0
-),
-bdocs AS (
-  SELECT doc_id FROM documents WHERE doc_id % 5 != 0
-  UNION ALL SELECT doc_id + 1000000000 FROM documents WHERE doc_id % 10 = 0
-),
-bsize AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM bsh GROUP BY 1),
-esize AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM ex GROUP BY 1),
-dead_ex AS (
-  SELECT DISTINCT p.bid AS doc_id FROM (
-    SELECT a.doc_id AS bid, e.doc_id AS oid, CAST(COUNT(*) AS BIGINT) AS i
-    FROM bsh a JOIN ex e ON a.shingle = e.shingle GROUP BY 1, 2
-  ) p
-  JOIN bsize sa ON sa.doc_id = p.bid
-  JOIN esize sb ON sb.doc_id = p.oid
-  WHERE ROUND(p.i / CAST(sa.n + sb.n - p.i AS DOUBLE), 6) >= 0.5
-),
-dead_lo AS (
-  SELECT DISTINCT p.bid AS doc_id FROM (
-    SELECT a.doc_id AS bid, b.doc_id AS oid, CAST(COUNT(*) AS BIGINT) AS i
-    FROM bsh a JOIN bsh b ON a.shingle = b.shingle AND b.doc_id < a.doc_id
-    GROUP BY 1, 2
-  ) p
-  JOIN bsize sa ON sa.doc_id = p.bid
-  JOIN bsize sb ON sb.doc_id = p.oid
-  WHERE ROUND(p.i / CAST(sa.n + sb.n - p.i AS DOUBLE), 6) >= 0.5
-),
-dead AS (SELECT doc_id FROM dead_ex UNION SELECT doc_id FROM dead_lo)
-SELECT d.doc_id, CAST(COALESCE(s.n, 0) AS BIGINT) AS n_shingles
-FROM bdocs d LEFT JOIN bsize s ON s.doc_id = d.doc_id
-WHERE d.doc_id NOT IN (SELECT doc_id FROM dead)
-""",
-)
-def incremental_ppjoin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental EXACT-Jaccard near-dedup via the prefix filter
-    (`dedup/ppjoin.incremental_prefix_filter_keepers`) — the lossless
-    member of the incremental-ingest family (exact / MinHash / winnow /
-    semantic all have incremental variants; the prefix filter completes
-    the set with the no-missed-pairs guarantee the LSH sibling trades
-    away).  Fixture: stored corpus = every 5th doc; the batch = the rest
-    PLUS planted re-crawls (exact copies of stored docs under new ids,
-    doc_id + 1e9) that must die against the store.  The rarest-first
-    order is FROZEN from the stored corpus's df table (batch-unseen
-    shingles rank at df 0) — the dedup-index analogue of the two-widths
-    doctrine.  The oracle is the definitional all-shared-shingle drop
-    rule, so the hash is again a no-missed-pairs proof."""
-    from bigdata_rags_spark.dedup.ppjoin import (
-        build_ppjoin_store,
-        incremental_prefix_filter_keepers,
-    )
-
-    docs = _docs_parallel(spark, sf_dir)
-    existing = docs.filter(F.col("doc_id") % 5 == 0)
-    planted = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1_000_000_000).alias("doc_id"), "text"
-    )
-    batch = docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text").unionByName(
-        planted
-    )
-    # build-once/ingest-many (r17, VERDICT r16 #5): the frozen df order,
-    # stored prefixes and shingle sets persist as bucketed tables + meta;
-    # the ingest plan scans them — zero raw-store-document scans
-    build_ppjoin_store(existing, table_prefix="bdrs_ppjoin_store", k=5, threshold=0.5)
-    return incremental_prefix_filter_keepers(
-        batch, store_prefix="bdrs_ppjoin_store"
-    )
-
-
-@_llm(
-    "jaccard_prefix_filter_pairs",
-    f"""
-WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      CASE WHEN len({_SQL_TOKS}) >= 5 THEN range(1, len({_SQL_TOKS}) - 3)
-           ELSE [] END,
-      i -> array_to_string(({_SQL_TOKS})[i:i+4], ' ')
-    ))) AS shingle
-  FROM documents
-),
-sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS intersection
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, intersection,
-       ROUND(intersection / CAST(sa.n + sb.n - intersection AS DOUBLE), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE ROUND(intersection / CAST(sa.n + sb.n - intersection AS DOUBLE), 6) >= 0.5
-""",
-)
-def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 5-gram Jaccard >= 0.5 pairs via the PREFIX FILTER
-    (`dedup/ppjoin.py`; Bayardo et al. 2007 All-Pairs / Xiao et al.
-    PPJoin) — the LOSSLESS subquadratic candidate route: only each doc's
-    ``|S| - ceil(0.5|S|) + 1`` rarest shingles (global df-asc order) join,
-    plus the t·|A| <= |B| size filter, and the theorem guarantees no
-    qualifying pair is missed — the exact-answer sibling of the MinHash-
-    LSH route, with no recall knob.  Candidates verify with one
-    array_intersect against per-doc sorted shingle sets.  The oracle is
-    the DEFINITIONAL all-shared-shingle Jaccard SQL (identical text to
-    ``ngram_jaccard_near_dups``), so the driver hash doubles as a
-    no-missed-pairs proof on the fixture.  100 TB: df table is the
-    vocab-join shape; candidate shuffle carries prefix shingles only."""
-    from bigdata_rags_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
-
-    docs = _docs_parallel(spark, sf_dir)
-    return prefix_filter_jaccard_pairs(docs, k=5, threshold=0.5)
 
 
 _SQL_JACCARD_PAIRS = f"""
@@ -707,169 +525,6 @@ def fuzzy_dedup_surviving_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(losers, "doc_id", "left_anti").select(
         "doc_id", "lang", "source", "n_chars"
     )
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-
-@_llm(
-    "simhash_fingerprints",
-    f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKS})) AS token FROM documents
-),
-th AS (
-  SELECT doc_id, ('0x' || substr(md5(token), 1, 4))::INTEGER AS token_hash FROM toks
-),
-bits AS (
-  SELECT doc_id, token_hash, unnest(range(0, 16)) AS bit FROM th
-),
-votes AS (
-  SELECT doc_id, bit,
-         SUM(CASE WHEN (token_hash >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM bits GROUP BY doc_id, bit
-)
-SELECT doc_id,
-       CAST(SUM(CASE WHEN v > 0 THEN 1 << bit ELSE 0 END) AS BIGINT) AS simhash
-FROM votes GROUP BY doc_id
-""",
-)
-def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_parallel(spark, sf_dir)
-    return simhash16(docs)
-
-
-_SQL_SIMHASH64_FP = f"""
-toks AS (SELECT doc_id, unnest(list_distinct({_SQL_TOKS})) AS token FROM documents),
-th AS (SELECT doc_id,
-  ('0x' || substr(md5(token), 1, 4))::INTEGER AS h0,
-  ('0x' || substr(md5(token), 5, 4))::INTEGER AS h1,
-  ('0x' || substr(md5(token), 9, 4))::INTEGER AS h2,
-  ('0x' || substr(md5(token), 13, 4))::INTEGER AS h3
- FROM toks),
-bits AS (SELECT doc_id, h0, h1, h2, h3, unnest(range(0, 16)) AS bit FROM th),
-votes AS (SELECT doc_id, bit,
-  SUM(CASE WHEN (h0 >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v0,
-  SUM(CASE WHEN (h1 >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v1,
-  SUM(CASE WHEN (h2 >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v2,
-  SUM(CASE WHEN (h3 >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v3
- FROM bits GROUP BY doc_id, bit),
-fp AS (SELECT doc_id,
-  CAST(SUM(CASE WHEN v0 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band0,
-  CAST(SUM(CASE WHEN v1 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band1,
-  CAST(SUM(CASE WHEN v2 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band2,
-  CAST(SUM(CASE WHEN v3 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band3
- FROM votes GROUP BY doc_id)
-"""
-
-
-@_llm(
-    "simhash64_fingerprints",
-    f"""
-WITH {_SQL_SIMHASH64_FP}
-SELECT doc_id, band0, band1, band2, band3,
-  lower(lpad(hex(band0), 4, '0')) || lower(lpad(hex(band1), 4, '0')) ||
-  lower(lpad(hex(band2), 4, '0')) || lower(lpad(hex(band3), 4, '0')) AS simhash_hex
-FROM fp
-""",
-)
-def simhash64_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash (four 16-bit bands + hex) — the corpus-scale
-    fingerprint variant (dedup/simhash.simhash64); the 16-bit one stays as
-    the compact pedagogical baseline."""
-    from bigdata_rags_spark.dedup.simhash import simhash64
-
-    docs = _docs_parallel(spark, sf_dir)
-    return simhash64(docs)
-
-
-@_llm(
-    "simhash_near_dup_pairs",
-    f"""
-WITH {_SQL_SIMHASH64_FP},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(bit_count(xor(a.band0, b.band0)) + bit_count(xor(a.band1, b.band1))
-            + bit_count(xor(a.band2, b.band2)) + bit_count(xor(a.band3, b.band3))
-              AS INTEGER) AS hamming
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-   AND (a.band0 = b.band0 OR a.band1 = b.band1 OR
-        a.band2 = b.band2 OR a.band3 = b.band3))
-SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
-""",
-)
-def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded SimHash near-dup candidates, Hamming <= 3 over the 64-bit
-    fingerprint — exact recall by pigeonhole (4 bands), hash-join-only
-    (dedup/simhash.simhash_near_pairs64).  1597 pairs at sf0.01, so the
-    check exercises the collision join, the distinct, and the Hamming
-    filter non-vacuously."""
-    from bigdata_rags_spark.dedup.simhash import simhash_near_pairs64
-
-    docs = _docs_parallel(spark, sf_dir)
-    return simhash_near_pairs64(docs, max_hamming=3)
-
-
-_SQL_SIMHASH64_IDF_FP = f"""
-toks AS (SELECT doc_id, unnest(list_distinct({_SQL_TOKS})) AS token FROM documents),
-dfreq AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS dfc FROM toks GROUP BY token),
-th AS (SELECT t.doc_id,
-  CAST(greatest(1, 16 - (length(bin(d.dfc)) - 1)) AS INTEGER) AS w,
-  ('0x' || substr(md5(t.token), 1, 4))::INTEGER AS h0,
-  ('0x' || substr(md5(t.token), 5, 4))::INTEGER AS h1,
-  ('0x' || substr(md5(t.token), 9, 4))::INTEGER AS h2,
-  ('0x' || substr(md5(t.token), 13, 4))::INTEGER AS h3
- FROM toks t JOIN dfreq d USING (token)),
-bits AS (SELECT doc_id, w, h0, h1, h2, h3, unnest(range(0, 16)) AS bit FROM th),
-votes AS (SELECT doc_id, bit,
-  SUM(CASE WHEN (h0 >> bit) & 1 = 1 THEN w ELSE -w END) AS v0,
-  SUM(CASE WHEN (h1 >> bit) & 1 = 1 THEN w ELSE -w END) AS v1,
-  SUM(CASE WHEN (h2 >> bit) & 1 = 1 THEN w ELSE -w END) AS v2,
-  SUM(CASE WHEN (h3 >> bit) & 1 = 1 THEN w ELSE -w END) AS v3
- FROM bits GROUP BY doc_id, bit),
-fp AS (SELECT doc_id,
-  CAST(SUM(CASE WHEN v0 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band0,
-  CAST(SUM(CASE WHEN v1 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band1,
-  CAST(SUM(CASE WHEN v2 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band2,
-  CAST(SUM(CASE WHEN v3 > 0 THEN 1 << bit ELSE 0 END) AS INTEGER) AS band3
- FROM votes GROUP BY doc_id)
-"""
-
-
-@_llm(
-    "simhash_idf_near_dup_pairs",
-    f"""
-WITH {_SQL_SIMHASH64_IDF_FP},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(bit_count(xor(a.band0, b.band0)) + bit_count(xor(a.band1, b.band1))
-            + bit_count(xor(a.band2, b.band2)) + bit_count(xor(a.band3, b.band3))
-              AS INTEGER) AS hamming
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-   AND (a.band0 = b.band0 OR a.band1 = b.band1 OR
-        a.band2 = b.band2 OR a.band3 = b.band3))
-SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
-""",
-)
-def simhash_idf_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rarity-weighted SimHash near-dup pairs
-    (`dedup/simhash.simhash_idf_near_pairs64`) — the band-skew mitigation
-    SCALE.md round-11 finding #6 calls for: the unweighted fingerprint
-    lets ubiquitous tokens decide majority votes, hot-spotting the banded
-    self-join on boilerplate-heavy corpora.  Weighting votes by the INTEGER
-    idf surrogate max(1, 16 - floor(log2(doc_freq))) — floor(log2) as
-    length(bin(df))-1, never a float log — hands the bits to the rare
-    tokens that actually distinguish documents.  Same 4x16-bit pigeonhole
-    banding (exact for hamming <= 3), one extra vocab-keyed join.  Honest
-    fixture note (SCALE.md r11): sf0.1's largest band bucket is true
-    duplication (249 identical token sets), which weighting must NOT
-    spread — the decorrelation shows on planted shared-backbone docs."""
-    from bigdata_rags_spark.dedup.simhash import simhash_idf_near_pairs64
-
-    docs = _docs_parallel(spark, sf_dir)
-    return simhash_idf_near_pairs64(docs, max_hamming=3)
 
 
 # ---------------------------------------------------------------------------
@@ -1446,9 +1101,9 @@ def text_hashed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_hashed_idf_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The idf-weighted sibling of ``text_hashed_near_dups`` — the variant
-    to SERVE at 100 TB (the `simhash_idf_near_dup_pairs` posture, SCALE.md
-    finding #6): raw count vectors share a dominant common-word direction
-    that correlates LSH signatures corpus-wide, and idf scaling
+    to SERVE at 100 TB (SCALE.md finding #6): raw count vectors share a
+    dominant common-word direction that correlates LSH signatures
+    corpus-wide, and idf scaling
     (integer reciprocal 1_000_000 DIV df, never a float log) decorrelates
     them — measured at sf0.1: per-table candidate volume 3.1M -> 0.83M,
     which IS the 10-plane/probe-2 theoretical floor for uncorrelated
@@ -2859,178 +2514,6 @@ def doc_fingerprint_minshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Winnowing selection (Schleimer 2003), k=4 / w=5, shared by the
-# fingerprint and pair queries.  The packed key h*2^24 + (2^24-1-pos)
-# carries the paper's rightmost-min tie rule inside a single window MIN —
-# see dedup/winnow.py module docstring.  All md5-derived integers.
-_SQL_WINNOW_SEL = f"""
-t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
-g0 AS (SELECT doc_id, toks,
-         unnest(CASE WHEN len(toks) >= 4 THEN range(1, len(toks) - 2) ELSE [] END) AS pos
-       FROM t),
-g AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-        ('0x' || substr(md5(array_to_string(toks[pos:pos+3], ' ')), 1, 8))::BIGINT AS h
-      FROM g0),
-wm AS (SELECT doc_id, pos,
-         MIN(h * 16777216 + (16777215 - pos)) OVER
-           (PARTITION BY doc_id ORDER BY pos
-            ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS wkey,
-         COUNT(*) OVER (PARTITION BY doc_id) AS n_grams
-       FROM g),
-winnow_sel AS (SELECT DISTINCT doc_id, wkey FROM wm
-               WHERE pos <= greatest(1, n_grams - 4))
-"""
-
-
-def _sql_winnow_selh(tag: str, rel: str) -> str:
-    """Parameterized winnow selection over relation ``rel`` (must provide
-    doc_id, text): CTEs suffixed _{tag}, ending in selh_{tag} = the
-    DISTINCT (doc_id, sel_hash) fingerprint set.  Same k=4/w=5/packed-key
-    math as `_SQL_WINNOW_SEL`."""
-    return f"""
-t_{tag} AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM {rel}),
-g0_{tag} AS (SELECT doc_id, toks,
-         unnest(CASE WHEN len(toks) >= 4 THEN range(1, len(toks) - 2) ELSE [] END) AS pos
-       FROM t_{tag}),
-g_{tag} AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-        ('0x' || substr(md5(array_to_string(toks[pos:pos+3], ' ')), 1, 8))::BIGINT AS h
-      FROM g0_{tag}),
-wm_{tag} AS (SELECT doc_id, pos,
-         MIN(h * 16777216 + (16777215 - pos)) OVER
-           (PARTITION BY doc_id ORDER BY pos
-            ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS wkey,
-         COUNT(*) OVER (PARTITION BY doc_id) AS n_grams
-       FROM g_{tag}),
-selh_{tag} AS MATERIALIZED (
-  SELECT DISTINCT doc_id, wkey // 16777216 AS sel_hash
-  FROM wm_{tag} WHERE pos <= greatest(1, n_grams - 4))
-"""
-
-
-_WINNOW_EX_REL = "(SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0)"
-_WINNOW_B_REL = (
-    "(SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0"
-    " UNION ALL"
-    " SELECT doc_id + 1000000000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0)"
-)
-_WINNOW_B_FULL = (
-    "(SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id % 5 != 0"
-    " UNION ALL"
-    " SELECT doc_id + 1000000000 AS doc_id, text, lang, source, n_chars"
-    " FROM documents WHERE doc_id % 7 = 0)"
-)
-
-
-@_llm(
-    "incremental_winnow_dedup",
-    f"""
-WITH {_sql_winnow_selh("ex", _WINNOW_EX_REL)},
-{_sql_winnow_selh("b", _WINNOW_B_REL)},
-dfh_ex AS (SELECT sel_hash, COUNT(*) AS dfc FROM selh_ex GROUP BY 1),
-kept_ex AS MATERIALIZED (
-  SELECT s.doc_id, s.sel_hash FROM selh_ex s JOIN dfh_ex USING (sel_hash)
-  WHERE dfc <= 64),
-dfh_b AS (SELECT sel_hash, COUNT(*) AS dfc FROM selh_b GROUP BY 1),
-kept_b AS MATERIALIZED (
-  SELECT s.doc_id, s.sel_hash FROM selh_b s JOIN dfh_b USING (sel_hash)
-  WHERE dfc <= 64),
-drop_ex AS (
-  SELECT DISTINCT b.doc_id FROM kept_b b JOIN kept_ex e USING (sel_hash)
-  GROUP BY b.doc_id, e.doc_id HAVING COUNT(*) >= 2),
-drop_in AS (
-  SELECT DISTINCT hi.doc_id FROM kept_b hi JOIN kept_b lo
-    ON hi.sel_hash = lo.sel_hash AND lo.doc_id < hi.doc_id
-  GROUP BY hi.doc_id, lo.doc_id HAVING COUNT(*) >= 2)
-SELECT b.* FROM {_WINNOW_B_FULL} b
-WHERE b.doc_id NOT IN (SELECT doc_id FROM drop_ex)
-  AND b.doc_id NOT IN (SELECT doc_id FROM drop_in)
-""",
-)
-def incremental_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental winnowing-fingerprint dedup
-    (`dedup/winnow.incremental_winnow_keepers`) — the winnowing member of
-    the incremental-ingest family (exact: `incremental_dedup_new_docs`,
-    MinHash: `incremental_minhash_dedup`, embeddings:
-    `incremental_semantic_dedup`): a new crawl batch's winnow fingerprints
-    are joined against the stored corpus fingerprint index and lower-id
-    batch members; sharing >= 2 surviving hashes with any single doc drops
-    the batch doc.  Dual boilerplate caps: each side of each join drops
-    hashes with df > 64 in its OWN population, bounding per-hash fan-out
-    at max_df^2 (see the library docstring).  Fixture roles
-    mirror the family: stored = doc_id % 5 == 0; batch = the rest plus
-    re-keyed (+1e9) copies of every 7th doc exercising both drop paths."""
-    from bigdata_rags_spark.dedup.winnow import (
-        build_winnow_store,
-        incremental_winnow_keepers,
-    )
-
-    docs = _docs_parallel(spark, sf_dir)
-    rekeyed = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000_000)
-    )
-    existing = docs.filter(F.col("doc_id") % 5 == 0)
-    batch = docs.filter(F.col("doc_id") % 5 != 0).unionByName(rekeyed)
-    # build-once/ingest-many (r17, VERDICT r16 #5): the capped store
-    # fingerprint index persists bucketed on sel_hash + frozen meta; the
-    # ingest plan scans the store table — zero raw-store-document scans
-    build_winnow_store(existing, table_prefix="bdrs_winnow_store")
-    return incremental_winnow_keepers(batch, store_prefix="bdrs_winnow_store")
-
-
-@_llm(
-    "winnowed_fingerprints",
-    f"""
-WITH {_SQL_WINNOW_SEL}
-SELECT doc_id,
-       CAST(16777215 - (wkey % 16777216) AS BIGINT) AS sel_pos,
-       CAST(wkey // 16777216 AS BIGINT) AS sel_hash
-FROM winnow_sel
-""",
-)
-def winnowed_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint selection (`dedup/winnow.winnow_fingerprints`,
-    Schleimer/Wilkerson/Aiken SIGMOD 2003 / MOSS): every full window of
-    w=5 consecutive 4-gram hashes keeps its minimum (rightmost on ties),
-    guaranteeing any shared run of >= w+k-1 = 8 tokens between two docs
-    shares a selected hash while keeping only ~2/(w+1) = 1/3 of grams.
-
-    100 TB shape: posexplode partitions grams by doc; the window-min is
-    partition-local (one shuffle on doc_id, then no data movement); output
-    is a small fraction of the gram stream by the density guarantee."""
-    from bigdata_rags_spark.dedup.winnow import winnow_fingerprints
-
-    return winnow_fingerprints(_docs_parallel(spark, sf_dir), k=4, w=5)
-
-
-@_llm(
-    "winnowed_plagiarism_pairs",
-    f"""
-WITH {_SQL_WINNOW_SEL},
-selh AS (SELECT DISTINCT doc_id, wkey // 16777216 AS sel_hash FROM winnow_sel),
-dfh AS (SELECT sel_hash, COUNT(*) AS dfc FROM selh GROUP BY 1),
-kept AS (SELECT s.doc_id, s.sel_hash FROM selh s JOIN dfh USING (sel_hash)
-         WHERE dfc <= 64)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(COUNT(*) AS BIGINT) AS n_shared
-FROM kept a JOIN kept b ON a.sel_hash = b.sel_hash AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING COUNT(*) >= 2
-""",
-)
-def winnowed_plagiarism_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clone/plagiarism candidate pairs over the winnowed index
-    (`dedup/winnow.winnowed_shared_pairs`): docs sharing >= 2 distinct
-    selected hashes, after dropping hashes selected by > 64 docs (the
-    boilerplate guard every banded family here uses).  Candidate volume is
-    bounded by max_df * |fingerprints| — bucketed join, never N^2; the
-    min-shared threshold then needs only a per-pair count, no text
-    re-reads."""
-    from bigdata_rags_spark.dedup.winnow import winnowed_shared_pairs
-
-    return winnowed_shared_pairs(
-        _docs_parallel(spark, sf_dir), k=4, w=5, min_shared=2, max_df=64
-    )
-
-
 @_llm(
     "benchmark_decontamination",
     f"""
@@ -3347,51 +2830,6 @@ def gopher_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bigdata_rags_spark/quality.py`` for provenance and design notes.
     """
     return repetition_quality(_docs_parallel(spark, sf_dir))
-
-
-@_llm(
-    "edit_distance_near_dups",
-    f"""
-WITH aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000000 AS doc_id,
-         substr(text, 1, 100) || 'QQQ' || substr(text, 104) AS text
-  FROM documents WHERE doc_id % 10 = 0 AND n_chars >= 104
-),
-b AS (
-  SELECT doc_id, substr(text, 1, 256) AS t,
-         md5(array_to_string(({_SQL_TOKS})[1:4], ' ')) AS bk
-  FROM aug
-),
-cand AS (
-  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         CAST(levenshtein(x.t, y.t) AS INT) AS edit_distance
-  FROM b x JOIN b y ON x.bk = y.bk AND x.doc_id < y.doc_id
-)
-SELECT doc_a, doc_b, edit_distance FROM cand WHERE edit_distance <= 5
-""",
-)
-def edit_distance_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance near-dup pairs via blocking + Levenshtein verify
-    (``dedup/editdist.blocked_edit_distance_pairs``) — the entity-resolution
-    composition: first-4-token md5 blocks bound candidates, only candidates
-    pay the quadratic string compare (capped to 256 chars, the bounded-field
-    ER practice).  Non-vacuous by planting: every 10th long-enough doc gets
-    a re-keyed copy with 3 characters overwritten at position 101 — same
-    blocking prefix, edit distance exactly 3, invisible to exact dedup.
-    Spark's levenshtein and DuckDB's agree integer-for-integer."""
-    from bigdata_rags_spark.dedup.editdist import blocked_edit_distance_pairs
-
-    docs = read_testdata(spark, sf_dir, "documents")["documents"].select("doc_id", "text", "n_chars")
-    variant = docs.filter((F.col("doc_id") % 10 == 0) & (F.col("n_chars") >= 104)).select(
-        (F.col("doc_id") + F.lit(1_000_000_000)).alias("doc_id"),
-        F.concat(
-            F.substring("text", 1, 100), F.lit("QQQ"), F.expr("substring(text, 104)")
-        ).alias("text"),
-    )
-    aug = docs.select("doc_id", "text").unionByName(variant)
-    return blocked_edit_distance_pairs(aug, max_dist=5)
 
 
 @_llm(
@@ -4152,7 +3590,7 @@ def image_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-modality near-dup detection: genuine PNG bytes -> pure-python
     decode -> 16x8 nearest-neighbor downsample -> 128-bit average hash
     (``multimodal/codecs.image_ahash128``) -> banded Hamming self-join —
-    the multimodal twin of the SimHash text path, and the standard
+    the multimodal twin of the text near-dup path, and the standard
     perceptual-dedup step image-training pipelines run before (expensive)
     embedding similarity.  EXACT by construction: 8 bands of 16 bits with
     threshold hamming <= 7 guarantee (pigeonhole) every qualifying pair
@@ -4988,78 +4426,6 @@ def near_dup_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("tp * 1000000 div n_candidates").alias("precision_micro"),
         )
     )
-
-
-_SPAN_K = 8
-
-
-@_llm(
-    "substring_dedup_docs",
-    f"""
-WITH toks AS (SELECT doc_id, {_SQL_TOKS} AS t FROM documents),
-tok AS (
-  SELECT doc_id, unnest(t) AS tok, generate_subscripts(t, 1)::BIGINT AS pos
-  FROM toks
-),
-spans AS (
-  SELECT doc_id, s AS start_pos,
-         md5(array_to_string(t[s:s+{_SPAN_K - 1}], ' ')) AS h
-  FROM toks, unnest(generate_series(1, len(t) - {_SPAN_K - 1})) AS u(s)
-  WHERE len(t) >= {_SPAN_K}
-),
-duph AS (SELECT h FROM spans GROUP BY h HAVING COUNT(DISTINCT doc_id) > 1),
-covered AS (
-  SELECT DISTINCT m.doc_id, m.start_pos + o AS pos
-  FROM (SELECT s.doc_id, s.start_pos FROM spans s JOIN duph USING (h)) m,
-       unnest(generate_series(0, {_SPAN_K - 1})) AS v(o)
-),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) = 1
-              THEN 0 ELSE 1 END AS brk
-  FROM covered
-),
-cov_stats AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dup_tokens,
-         CAST(SUM(brk) AS BIGINT) AS n_islands
-  FROM isl GROUP BY doc_id
-),
-surv AS (
-  SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_surviving,
-         md5(string_agg(t.tok, ' ' ORDER BY t.pos)) AS surviving_md5
-  FROM tok t LEFT JOIN covered c ON t.doc_id = c.doc_id AND t.pos = c.pos
-  WHERE c.pos IS NULL
-  GROUP BY t.doc_id
-)
-SELECT ts.doc_id, CAST(len(ts.t) AS BIGINT) AS n_tokens,
-       COALESCE(cs.dup_tokens, CAST(0 AS BIGINT)) AS dup_tokens,
-       COALESCE(cs.n_islands, CAST(0 AS BIGINT)) AS n_islands,
-       COALESCE(sv.n_surviving, CAST(0 AS BIGINT)) AS n_surviving,
-       COALESCE(sv.surviving_md5, md5('')) AS surviving_md5
-FROM toks ts
-LEFT JOIN cov_stats cs ON ts.doc_id = cs.doc_id
-LEFT JOIN surv sv ON ts.doc_id = sv.doc_id
-""",
-)
-def substring_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level exact dedup (Lee et al. 2022 shape, VERDICT r7 #3):
-    mark every {k}-token span whose hash occurs in >= 2 documents, merge
-    overlapping marked spans per doc into islands (run-length algebra,
-    same shape as ``events_run_length_islands``), and reassemble the
-    surviving text — the strongest exact-dedup tier real pretraining
-    pipelines run, completing the exact-dedup family above ``prefix_dup``
-    / ``segment_dedup`` / ``ngram_containment_pairs``.
-
-    Plan: span hashing is a codegen'd ``slice``/``array_join``/``md5``
-    over the token array; corpus-wide shuffles carry only (md5, doc_id)
-    pairs (distinct-doc count + hash join back); coverage explode is
-    bounded at k rows per marked span; islands/reassembly are per-doc
-    window/agg work bounded by doc length.  O(total tokens) at any corpus
-    size — never pairwise in documents."""
-    from bigdata_rags_spark.dedup.spans import substring_dedup
-
-    docs = read_testdata(spark, sf_dir, "documents")["documents"]
-    return substring_dedup(docs, k=_SPAN_K)
 
 
 # Synthetic deterministic URL per document — the fixture has no URL column,
@@ -7315,62 +6681,6 @@ def domain_psl_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("domain") != F.col("naive_domain"), F.lit(1))
         .otherwise(F.lit(0)).cast("bigint").alias("naive_wrong"),
     )
-
-
-_INTRA_K = 3  # the fixture's synthetic text has low natural repetition:
-# k=3 is the smallest span with measurable intra-doc signal (29 repeated
-# spans / 27 docs at sf0.01); the planted test exercises larger k.
-
-
-@_llm(
-    "intra_doc_repeated_spans",
-    f"""
-WITH toks AS (SELECT doc_id, {_SQL_TOKS} AS t FROM documents),
-spans AS (
-  SELECT doc_id, s AS start_pos,
-         md5(array_to_string(t[s:s+{_INTRA_K - 1}], ' ')) AS h
-  FROM toks, unnest(generate_series(1, len(t) - {_INTRA_K - 1})) AS u(s)
-  WHERE len(t) >= {_INTRA_K}
-),
-per_span AS (
-  SELECT doc_id, h, CAST(COUNT(*) AS BIGINT) AS occ FROM spans GROUP BY 1, 2
-),
-stats AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-         CAST(SUM(CASE WHEN occ >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_repeated_spans,
-         CAST(MAX(occ) AS BIGINT) AS max_span_occurrences
-  FROM per_span GROUP BY doc_id
-),
-covered AS (
-  SELECT DISTINCT s.doc_id, s.start_pos + o AS pos
-  FROM spans s
-  JOIN per_span p ON s.doc_id = p.doc_id AND s.h = p.h AND p.occ >= 2,
-       unnest(generate_series(0, {_INTRA_K - 1})) AS v(o)
-),
-ct AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS rep_tokens FROM covered GROUP BY doc_id)
-SELECT t.doc_id,
-       COALESCE(st.n_spans, CAST(0 AS BIGINT)) AS n_spans,
-       COALESCE(st.n_repeated_spans, CAST(0 AS BIGINT)) AS n_repeated_spans,
-       COALESCE(st.max_span_occurrences, CAST(0 AS BIGINT)) AS max_span_occurrences,
-       CAST(COALESCE(ct.rep_tokens, 0) * 1000000 // len(t.t) AS BIGINT)
-         AS repeated_token_frac_micro
-FROM toks t
-LEFT JOIN stats st ON t.doc_id = st.doc_id
-LEFT JOIN ct ON t.doc_id = ct.doc_id
-""",
-)
-def intra_doc_repeated_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-document repeated-span audit (`dedup/spans.py:
-    intra_doc_repeated_spans`) — template/loop-content detection, the
-    span-level generalization of the Gopher duplicate-n-gram rules and
-    the intra-doc complement of ``substring_dedup_docs``.  All counting
-    is keyed by (doc_id, md5): work stays doc-local through every
-    shuffle."""
-    from bigdata_rags_spark.dedup.spans import intra_doc_repeated_spans
-
-    docs = read_testdata(spark, sf_dir, "documents")["documents"]
-    return intra_doc_repeated_spans(docs, k=_INTRA_K)
 
 
 def _pagerank_oracle(n_iter: int = 3) -> str:
@@ -10160,8 +9470,7 @@ def incremental_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source kept counts that consume the UniMax allocation first.
     Every stage non-vacuous at sf0.01: 167 -> 153 -> 53 -> 49 -> 44 ->
     25 batch keepers -> 4 packed sequences.  Completes the incremental
-    family (minhash/semantic/winnow/ppjoin/ANN ingest) at the FUNNEL
-    level."""
+    family (exact/minhash/semantic/ANN ingest) at the FUNNEL level."""
     from bigdata_rags_spark.pipelines.curation import (
         incremental_curation_funnel_report,
     )

@@ -40,8 +40,6 @@ QUERIES = [
     "incremental_semantic_dedup",
     "semantic_dedup_cells",
     "incremental_minhash_dedup",
-    "incremental_winnow_dedup",
-    "incremental_ppjoin_dedup",
     "embedding_near_dup_pairs_lsh",
     "embedding_fuzzy_dedup_vectors",
     "langid_ngram_scores",

@@ -62,10 +62,9 @@ REGISTRY_QUERIES = [
     "source_pair_overlap_kmv",
     "bloom_prefilter_incremental_dedup",
     "embedding_pq_rerank_topk",
-    # r8 additions: span dedup (token-volume bound), SemDeDup (in-cell
-    # pairs grow with cell occupancy^2 — the interesting one to watch),
-    # PageRank (fixed iterations over a growing edge list), IVFPQ serving
-    "substring_dedup_docs",
+    # r8 additions: SemDeDup (in-cell pairs grow with cell occupancy^2 —
+    # the interesting one to watch), PageRank (fixed iterations over a
+    # growing edge list), IVFPQ serving
     "semantic_dedup_cells",
     "near_dup_pagerank",
     "embedding_ivfpq_rerank_topk",

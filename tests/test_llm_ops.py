@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from bigdata_rags_spark.dedup.exact import dup_clusters, exact_dedup
 from bigdata_rags_spark.dedup.minhash import lsh_candidate_pairs, ngram_jaccard_pairs
-from bigdata_rags_spark.dedup.simhash import simhash16, simhash_near_pairs
 from bigdata_rags_spark.similarity.knn import (
     brute_force_topk,
     cosine_pairs_above,
@@ -61,50 +60,6 @@ def test_ngram_jaccard_scores_planted_pairs(docs):
     assert pairs[(1, 2)] == 1.0
     assert 0.3 <= pairs[(1, 3)] < 1.0
     assert (1, 4) not in pairs
-
-
-def test_simhash_identical_docs_same_fingerprint(docs):
-    fp = {r["doc_id"]: r["simhash"] for r in simhash16(docs).collect()}
-    assert fp[1] == fp[2] == fp[6]
-    assert 0 <= fp[1] < 2**16
-    near = {(r["doc_a"], r["doc_b"]) for r in simhash_near_pairs(docs).collect()}
-    assert (1, 2) in near
-
-
-def test_simhash64_bands_and_near_pairs(docs):
-    from bigdata_rags_spark.dedup.simhash import simhash64, simhash_near_pairs64
-
-    fp = {r["doc_id"]: r for r in simhash64(docs).collect()}
-    for k in range(4):
-        assert fp[1][f"band{k}"] == fp[2][f"band{k}"]  # identical docs
-        assert 0 <= fp[1][f"band{k}"] < 2**16
-    assert len(fp[1]["simhash_hex"]) == 16
-    near = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in simhash_near_pairs64(docs).collect()}
-    assert near[(1, 2)] == 0  # identical -> distance 0
-    assert all(h <= 3 for h in near.values())
-
-
-def test_simhash64_band_join_is_selective_at_fixture_scale(spark, sf_oracle):
-    # VERDICT r1 #9: the r1 16-bit/8-bit-half join collides "virtually
-    # everything" past ~1e5 docs; the 64-bit banded join must stay selective.
-    # At sf0.01 (500 docs, 31-word vocab - an adversarially tiny token
-    # space) candidates are ~15% of all pairs; assert well under half.
-    from pyspark.sql import functions as F
-
-    from bigdata_rags_spark.dedup.simhash import BANDS, simhash64
-    from bigdata_rags_spark.io.readers import read_testdata
-
-    d = read_testdata(spark, sf_oracle, "documents")["documents"]
-    fp = simhash64(d)
-    a = fp.select(F.col("doc_id").alias("doc_a"), *[F.col(f"band{k}").alias(f"a{k}") for k in range(BANDS)])
-    b = fp.select(F.col("doc_id").alias("doc_b"), *[F.col(f"band{k}").alias(f"b{k}") for k in range(BANDS)])
-    cand = None
-    for k in range(BANDS):
-        pk = a.join(b, (F.col(f"a{k}") == F.col(f"b{k}")) & (F.col("doc_a") < F.col("doc_b")))
-        cand = pk if cand is None else cand.unionByName(pk)
-    n_docs = d.count()
-    frac = cand.distinct().count() / (n_docs * (n_docs - 1) / 2)
-    assert frac < 0.5, frac
 
 
 @pytest.fixture(scope="module")
@@ -634,43 +589,6 @@ def test_repetition_quality_flags_single_token_docs(spark):
     assert out[3]["keep_flag"] == 0  # 20x-repeated trigram trips the gates
 
 
-def test_segment_dedup_removes_planted_cross_doc_segments(spark):
-    """segment_dedup_docs must drop exactly the segments shared across docs
-    and keep per-doc order in the reassembled text."""
-    from bigdata_rags_spark.queries.llm_ops import _SEG_K
-
-    assert _SEG_K == 4
-    shared = "alpha beta gamma delta"  # one full shared segment
-    docs = spark.createDataFrame(
-        [
-            (1, f"{shared} one two three four"),
-            (2, f"{shared} five six seven eight"),
-            (3, "nine ten eleven twelve"),
-        ],
-        ["doc_id", "text"],
-    )
-    import bigdata_rags_spark.queries.llm_ops as llm
-
-    # call the registered callable against a temp view-free path: reuse the
-    # inner logic by monkey-free route — write docs to parquet and point the
-    # query at it
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        docs.write.parquet(f"{d}/documents.parquet")
-        out = {
-            r["doc_id"]: r.asDict()
-            for r in llm.segment_dedup_docs(spark, d).collect()
-        }
-    assert out[1]["n_segments"] == 2 and out[1]["n_kept"] == 1
-    assert out[1]["cleaned_text"] == "one two three four"
-    assert out[2]["cleaned_text"] == "five six seven eight"
-    assert out[3] == {
-        "doc_id": 3, "n_segments": 1, "n_kept": 1, "kept_frac": 1.0,
-        "cleaned_text": "nine ten eleven twelve",
-    }
-
-
 def test_dup_bigram_fraction_planted(spark, tmp_path):
     """Planted docs pin the duplicate-bigram math: a fully-repetitive doc
     scores 1.0, a no-repeat doc 0.0, a one-token doc keeps a zeroed row."""
@@ -772,36 +690,6 @@ def test_prefix_dup_clusters_catches_divergent_suffixes(spark):
     # whole-doc exact dedup misses the suffix-divergent cluster
     exact = {r["keeper_id"] for r in dup_clusters(docs).collect()}
     assert exact == {5}
-
-
-def test_blocked_edit_distance_pairs_planted(spark, sf_oracle):
-    """Blocking recall + verify precision on planted variants, and the
-    registered query must be non-vacuous at the driver's correctness SF."""
-    from bigdata_rags_spark.dedup.editdist import blocked_edit_distance_pairs
-    from bigdata_rags_spark.queries.catalog import REGISTRY
-
-    head = "alpha beta gamma delta"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{head} the quick brown fox jumps over the lazy dog"),
-            (2, f"{head} the quick brown fox jumps over the lazy cat"),  # dist 3
-            (3, f"{head} a completely different continuation entirely here"),
-            (4, f"OTHER {head} the quick brown fox jumps over the lazy dog"),  # other block
-            (5, f"{head} the quick brown fox jumps over the lazy dog"),  # exact dup of 1
-        ],
-        ["doc_id", "text"],
-    )
-    got = {
-        (r["doc_a"], r["doc_b"]): r["edit_distance"]
-        for r in blocked_edit_distance_pairs(docs, max_dist=5).collect()
-    }
-    assert got[(1, 2)] == 3 and got[(1, 5)] == 0 and got[(2, 5)] == 3
-    assert (1, 3) not in got  # same block, distance beyond threshold
-    assert all(4 not in pair for pair in got)  # different block never compared
-
-    rows = REGISTRY["edit_distance_near_dups"].spark(spark, sf_oracle).collect()
-    planted = [r for r in rows if r["doc_b"] >= 1_000_000_000]
-    assert planted and all(r["edit_distance"] == 3 for r in planted)
 
 
 def test_bigram_lm_matches_python_reference(spark):
@@ -1245,57 +1133,6 @@ def test_lsh_auto_planes_matches_pinned_default(spark, sf_oracle):
     )
 
 
-def test_substring_dedup_planted_spans(spark):
-    """Planted cross-document repeated spans (Lee et al. 2022 semantics at
-    k=4): duplicated regions are covered exactly, overlapping marked spans
-    merge into islands, longer-than-k shared regions merge into ONE island,
-    fully-duplicated docs survive as the empty string, and untouched docs
-    survive verbatim."""
-    import hashlib
-
-    from bigdata_rags_spark.dedup.spans import substring_dedup
-
-    s1 = "s1a s1b s1c s1d"                    # 4-token shared span
-    s2 = "s2a s2b s2c s2d"                    # second shared span
-    region = "r1 r2 r3 r4 r5 r6"              # 6-token shared region (> k)
-    rows = [
-        (1, f"a1 a2 a3 {s1} a4 a5 a6 {s2} a7"),   # two separated dup spans
-        (2, f"b1 b2 {s1} b3 b4 b5 b6 {s2}"),      # same spans, other doc
-        (3, "c1 c2 c3 c4 c5 c6 c7 c8"),           # unique -> untouched
-        (4, s1),                                   # fully duplicated doc
-        (5, f"e1 {region} e2"),                    # long region, one island
-        (6, f"f1 f2 {region}"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in substring_dedup(docs, k=4).collect()}
-
-    md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
-
-    a = out[1]
-    assert (a["n_tokens"], a["dup_tokens"], a["n_islands"]) == (15, 8, 2)
-    assert a["n_surviving"] == 7
-    assert a["surviving_md5"] == md5("a1 a2 a3 a4 a5 a6 a7")
-
-    b = out[2]
-    assert (b["dup_tokens"], b["n_islands"]) == (8, 2)
-    assert b["surviving_md5"] == md5("b1 b2 b3 b4 b5 b6")
-
-    c = out[3]
-    assert (c["dup_tokens"], c["n_islands"], c["n_surviving"]) == (0, 0, 8)
-    assert c["surviving_md5"] == md5("c1 c2 c3 c4 c5 c6 c7 c8")
-
-    d = out[4]
-    assert (d["dup_tokens"], d["n_surviving"]) == (4, 0)
-    assert d["surviving_md5"] == md5("")
-
-    e = out[5]  # 3 overlapping marked windows merge into one 6-token island
-    assert (e["dup_tokens"], e["n_islands"]) == (6, 1)
-    assert e["surviving_md5"] == md5("e1 e2")
-    f = out[6]
-    assert (f["dup_tokens"], f["n_islands"]) == (6, 1)
-    assert f["surviving_md5"] == md5("f1 f2")
-
-
 def test_url_parsing_messy_urls(spark):
     """functions/urls.py on adversarial-but-legal URLs: schemes, ports,
     userinfo-free hosts, query/fragment, missing paths, single-label
@@ -1679,35 +1516,6 @@ def test_semantic_dedup_cells_matches_numpy_reference(spark, sf_oracle):
         for r in REGISTRY["semantic_dedup_cells"].spark(spark, sf_oracle).collect()
     }
     assert got == expected
-
-
-def test_intra_doc_repeated_spans_planted(spark):
-    """A doc that repeats a k-token template twice must report the repeat
-    with exact coverage; a no-repeat doc reports zeros."""
-    from bigdata_rags_spark.dedup.spans import intra_doc_repeated_spans
-
-    tpl = "alpha beta gamma delta"  # k=4 template
-    rows = [
-        (1, f"{tpl} filler1 filler2 {tpl} tail"),   # template twice
-        (2, "one two three four five six seven"),   # no repeats
-        (3, " ".join(["loop word"] * 6)),           # heavy loop content
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in intra_doc_repeated_spans(docs, k=4).collect()}
-
-    d1 = out[1]
-    # 11 tokens -> 8 span positions, 7 distinct hashes; one repeats (occ=2)
-    assert (d1["n_spans"], d1["n_repeated_spans"], d1["max_span_occurrences"]) == (7, 1, 2)
-    # covered positions: 1-4 and 7-10 -> 8 of 11 tokens
-    assert d1["repeated_token_frac_micro"] == 8 * 1_000_000 // 11
-
-    d2 = out[2]
-    assert (d2["n_repeated_spans"], d2["max_span_occurrences"]) == (0, 1)
-    assert d2["repeated_token_frac_micro"] == 0
-
-    d3 = out[3]  # "loop word" x6 = 12 tokens, every 4-gram repeated
-    assert d3["n_repeated_spans"] >= 1 and d3["max_span_occurrences"] >= 4
-    assert d3["repeated_token_frac_micro"] == 1_000_000
 
 
 def test_pagerank_star_graph_hub_dominates(spark):
@@ -2406,21 +2214,13 @@ def _store_equivalence_fixture(spark):
 
 
 def test_text_dedup_store_paths_match_inline(spark):
-    """r17 (VERDICT r16 #5): for each text-dedup family, ingesting against
-    the PERSISTED store (build_*_store + store_prefix) returns exactly the
-    rows the inline existing-frame path returns — the store is a
-    materialization of the same derivation, frozen params included."""
+    """Ingesting against the PERSISTED MinHash store (build_minhash_store +
+    store_prefix) returns exactly the rows the inline existing-frame path
+    returns — the store is a materialization of the same derivation,
+    frozen params included."""
     from bigdata_rags_spark.dedup.minhash import (
         build_minhash_store,
         incremental_minhash_keepers,
-    )
-    from bigdata_rags_spark.dedup.ppjoin import (
-        build_ppjoin_store,
-        incremental_prefix_filter_keepers,
-    )
-    from bigdata_rags_spark.dedup.winnow import (
-        build_winnow_store,
-        incremental_winnow_keepers,
     )
     from bigdata_rags_spark.io.bucketing import drop_managed_table
 
@@ -2429,75 +2229,67 @@ def test_text_dedup_store_paths_match_inline(spark):
     def ids(df):
         return sorted(r["doc_id"] for r in df.collect())
 
-    build_minhash_store(
-        existing, "t_mh_store", num_hashes=12, rows_per_band=2
-    )
-    assert ids(
-        incremental_minhash_keepers(batch, store_prefix="t_mh_store", threshold=0.5)
-    ) == ids(
-        incremental_minhash_keepers(
-            batch, existing, num_hashes=12, rows_per_band=2, threshold=0.5
+    try:
+        build_minhash_store(
+            existing, "t_mh_store", num_hashes=12, rows_per_band=2
         )
-    )
-
-    build_winnow_store(existing, "t_win_store")
-    assert ids(
-        incremental_winnow_keepers(batch, store_prefix="t_win_store")
-    ) == ids(incremental_winnow_keepers(batch, existing))
-
-    build_ppjoin_store(existing, "t_ppj_store", k=5, threshold=0.5)
-    assert ids(
-        incremental_prefix_filter_keepers(batch, store_prefix="t_ppj_store")
-    ) == ids(
-        incremental_prefix_filter_keepers(batch, existing, k=5, threshold=0.5)
-    )
-
-    for t in (
-        "t_mh_store_sig", "t_mh_store_meta",
-        "t_win_store_fp", "t_win_store_meta",
-        "t_ppj_store_df", "t_ppj_store_prefix", "t_ppj_store_sets",
-        "t_ppj_store_meta",
-    ):
-        drop_managed_table(spark, t)
+        assert ids(
+            incremental_minhash_keepers(batch, store_prefix="t_mh_store", threshold=0.5)
+        ) == ids(
+            incremental_minhash_keepers(
+                batch, existing, num_hashes=12, rows_per_band=2, threshold=0.5
+            )
+        )
+    finally:
+        for t in ("t_mh_store_sig", "t_mh_store_meta"):
+            drop_managed_table(spark, t)
 
 
 def test_text_dedup_store_params_frozen_from_meta(spark):
-    """The store path reloads k/w/banding/threshold from ``{prefix}_meta``
+    """The MinHash store path reloads its banding from ``{prefix}_meta``
     and IGNORES caller literals (the frozen-parameter rule — serving with
     drifted params against a store built otherwise would silently
-    mis-join); passing both existing and store_prefix is a loud error."""
+    mis-join); passing both or neither of existing / store_prefix is a
+    loud error."""
     import pytest as _pytest
 
-    from bigdata_rags_spark.dedup.stores import read_store_meta
-    from bigdata_rags_spark.dedup.winnow import (
-        build_winnow_store,
-        incremental_winnow_keepers,
+    from bigdata_rags_spark.dedup.minhash import (
+        build_minhash_store,
+        incremental_minhash_keepers,
     )
+    from bigdata_rags_spark.dedup.stores import read_store_meta
     from bigdata_rags_spark.io.bucketing import drop_managed_table
 
     existing, batch = _store_equivalence_fixture(spark)
-    build_winnow_store(existing, "t_win_meta", k=4, w=5, max_df=64)
-    meta = read_store_meta(spark, "t_win_meta_meta")
-    assert meta == {"k": 4, "w": 5, "max_df": 64, "num_buckets": 8}
-    # caller literals disagree with the frozen meta -> meta wins: results
-    # equal the store-built parameters' inline run
-    via_store = sorted(
-        r["doc_id"]
-        for r in incremental_winnow_keepers(
-            batch, k=9, w=9, max_df=1, store_prefix="t_win_meta"
-        ).collect()
-    )
-    inline = sorted(
-        r["doc_id"]
-        for r in incremental_winnow_keepers(batch, existing, k=4, w=5, max_df=64).collect()
-    )
-    assert via_store == inline
-    with _pytest.raises(ValueError, match="exactly one"):
-        incremental_winnow_keepers(batch, existing, store_prefix="t_win_meta")
-    with _pytest.raises(ValueError, match="exactly one"):
-        incremental_winnow_keepers(batch)
-    for t in ("t_win_meta_fp", "t_win_meta_meta"):
-        drop_managed_table(spark, t)
+    try:
+        build_minhash_store(existing, "t_mh_meta", num_hashes=12, rows_per_band=2)
+        meta = read_store_meta(spark, "t_mh_meta_meta")
+        assert meta == {
+            "num_hashes": 12, "rows_per_band": 2, "shingle_k": 5, "num_buckets": 8
+        }
+        # caller literals disagree with the frozen meta -> meta wins: results
+        # equal the store-built parameters' inline run (20 hashes would also
+        # name signature columns the 12-wide store table does not have)
+        via_store = sorted(
+            r["doc_id"]
+            for r in incremental_minhash_keepers(
+                batch, num_hashes=20, rows_per_band=5, store_prefix="t_mh_meta"
+            ).collect()
+        )
+        inline = sorted(
+            r["doc_id"]
+            for r in incremental_minhash_keepers(
+                batch, existing, num_hashes=12, rows_per_band=2
+            ).collect()
+        )
+        assert via_store == inline
+        with _pytest.raises(ValueError, match="exactly one"):
+            incremental_minhash_keepers(batch, existing, store_prefix="t_mh_meta")
+        with _pytest.raises(ValueError, match="exactly one"):
+            incremental_minhash_keepers(batch)
+    finally:
+        for t in ("t_mh_meta_sig", "t_mh_meta_meta"):
+            drop_managed_table(spark, t)
 
 
 def test_minhash_store_path_uses_frozen_shingle_k(spark):
@@ -2624,106 +2416,6 @@ def test_unigram_pieces_match_exact_python_replay(spark):
         w[i:i+l]: 1 for w in wc for i in range(len(w))
         for l in range(2, min(4, len(w) - i) + 1)}) })
     assert len([p for p, pl, _, _ in got if pl > 1]) < n_seed_multi
-
-def test_simhash_idf_weights_and_skew_mitigation(spark):
-    """rarity_weight is integer-exact (planted values), and the weighted
-    fingerprint separates docs that share only ubiquitous tokens while the
-    unweighted one conflates them (the band-skew failure mode)."""
-    from pyspark.sql import functions as F
-
-    from bigdata_rags_spark.dedup.simhash import (
-        rarity_weight,
-        simhash64,
-        simhash64_idf,
-    )
-
-    got = (
-        spark.range(1)
-        .select(
-            *[
-                rarity_weight(F.lit(v)).alias(f"w{v}")
-                for v in (1, 2, 3, 500, 40000, 70000)
-            ]
-        )
-        .collect()[0]
-    )
-    assert (got["w1"], got["w2"], got["w3"], got["w500"], got["w40000"], got["w70000"]) == (
-        16, 15, 15, 8, 1, 1,
-    )
-
-    # 10 filler docs make 'the quick brown fox' ubiquitous (df=12 each);
-    # docs 1/2 share ONLY that stopword backbone plus distinct rare tails
-    stop = "the quick brown fox"
-    rows = [(i, stop) for i in range(10, 20)]
-    rows += [(1, stop + " alpha beta gamma delta"), (2, stop + " omega sigma kappa zeta")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def hamming(fp):
-        r = {x["doc_id"]: [x[f"band{k}"] for k in range(4)] for x in fp.collect()}
-        return sum(bin(a ^ b).count("1") for a, b in zip(r[1], r[2]))
-
-    plain = hamming(simhash64(docs))
-    weighted = hamming(simhash64_idf(docs))
-    # unweighted: the df=12 backbone dominates all majorities -> near-equal
-    # fingerprints; weighted: the rare tails (w=16 vs backbone w=13) decide
-    assert weighted > plain
-    assert weighted > 3  # not a near-dup under the weighted fingerprint
-
-
-def test_winnowing_matches_exact_python_replay(spark):
-    """The Spark winnowed fingerprint set equals a pure-python replay of
-    the paper's algorithm (window min, rightmost on ties) on varied docs,
-    and two docs sharing a >= w+k-1 token run share a selected hash (the
-    winnowing guarantee)."""
-    import hashlib
-    import random
-
-    from bigdata_rags_spark.dedup.winnow import POS_M, winnow_fingerprints
-
-    def replay(text, k=4, w=5):
-        toks = text.strip().lower().split()
-        grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-        hs = [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams]
-        n = len(hs)
-        sel = set()
-        if n == 0:
-            return sel
-        for s in range(1, max(1, n - w + 1) + 1):
-            key = min(
-                hs[p - 1] * POS_M + (POS_M - 1 - p)
-                for p in range(s, min(s + w, n + 1))
-            )
-            sel.add((POS_M - 1 - key % POS_M, key // POS_M))
-        return sel
-
-    rng = random.Random(7)
-    vocab = [f"tok{i}" for i in range(30)]  # small vocab => hash ties occur
-    shared_run = "zeta eta theta iota kappa lam mu nu"  # w+k-1 = 8 tokens
-    rows = [
-        (0, " ".join(rng.choice(vocab) for _ in range(60)) + " " + shared_run),
-        (1, shared_run + " " + " ".join(rng.choice(vocab) for _ in range(40))),
-        (2, "only three tokens"),  # < k => no grams, no fingerprints
-        (3, "alpha beta gamma delta epsilon"),  # n_grams=2 < w => 1 window
-        (4, " ".join(rng.choice(vocab[:5]) for _ in range(80))),  # tie-heavy
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        d: {(r["sel_pos"], r["sel_hash"]) for r in rs}
-        for d, rs in __import__("itertools").groupby(
-            sorted(winnow_fingerprints(docs).collect(), key=lambda r: r["doc_id"]),
-            key=lambda r: r["doc_id"],
-        )
-    }
-    for doc_id, text in rows:
-        assert got.get(doc_id, set()) == replay(text), f"doc {doc_id}"
-    # guarantee: the shared 8-token run forces a shared selected hash
-    h0 = {h for _, h in got[0]}
-    h1 = {h for _, h in got[1]}
-    assert h0 & h1
-    # density: selection keeps well under half the gram stream on doc 0
-    n_grams0 = len(rows[0][1].split()) - 3
-    assert len(got[0]) <= n_grams0 // 2
-
 
 def test_wordpiece_merges_match_exact_python_replay(spark):
     """Planted corpus where the WordPiece likelihood argmax and the BPE
@@ -2959,33 +2651,6 @@ def test_sequence_packing_exact_replay(spark):
             assert r["start_seq"] == before // L and r["seq_offset"] == before % L
             assert 0 <= r["seq_offset"] < L
             before += n
-
-
-def test_incremental_winnow_family_contract(spark):
-    """Incremental winnowing obeys the family drop rules: batch copies of
-    stored docs die vs the index, intra-batch dup pairs keep the lower id
-    (non-cascading), uniques and sub-k-token docs survive."""
-    from bigdata_rags_spark.dedup.winnow import incremental_winnow_keepers
-
-    base = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
-            "kilo lima mike november oscar papa quebec romeo sierra tango")
-    other = ("one two three four five six seven eight nine ten eleven twelve "
-             "thirteen fourteen fifteen sixteen seventeen eighteen nineteen twenty")
-    existing = spark.createDataFrame([(0, base)], "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [
-            (10, base),            # copy of stored doc 0 -> dies vs index
-            (11, "totally unrelated words describing nothing in particular at all"),
-            (12, other),           # intra-batch dup pair: 12 is the lower id
-            (13, other),           # -> 13 dies, 12 survives
-            (14, "tiny doc"),      # < k tokens: no fingerprints, survives
-        ],
-        "doc_id long, text string",
-    )
-    got = sorted(
-        r["doc_id"] for r in incremental_winnow_keepers(batch, existing).collect()
-    )
-    assert got == [11, 12, 14], got
 
 
 def test_split_leakage_audit_planted(spark):
@@ -3295,55 +2960,6 @@ def test_bradley_terry_orders_planted_tournament(spark):
         assert out[m]["rating_micro"] == r[m], m
 
 
-def test_prefix_filter_jaccard_is_lossless_vs_definitional(spark, sf_oracle):
-    """PPJoin prefix filter must return EXACTLY the all-shared-shingle
-    Jaccard pairs (the no-missed-pairs theorem), while generating
-    measurably fewer candidate rows than the full shingle self-join."""
-    from pyspark.sql import functions as F
-
-    from bigdata_rags_spark.dedup.minhash import ngram_jaccard_pairs
-    from bigdata_rags_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
-    from bigdata_rags_spark.io.readers import read_testdata
-
-    docs = read_testdata(spark, sf_oracle, "documents")["documents"]
-    want = {tuple(r) for r in ngram_jaccard_pairs(docs, k=5, threshold=0.5).collect()}
-    got = {
-        tuple(r)
-        for r in prefix_filter_jaccard_pairs(docs, k=5, threshold=0.5)
-        .repartition(13)
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_prefix_filter_non_milli_threshold_stays_lossless(spark):
-    """ADVICE r13: t_milli must FLOOR, never round — a rounded-UP milli
-    threshold (0.4516 -> 452) shortens the prefix below the theorem bound
-    at large n and silently drops qualifying pairs.  Pin the conservative
-    direction: at a non-milli-representable threshold the filter still
-    returns exactly the definitional pairs."""
-    from bigdata_rags_spark.dedup.minhash import ngram_jaccard_pairs
-    from bigdata_rags_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
-
-    def words(lo, hi):
-        return " ".join(f"w{i}" for i in range(lo, hi))
-
-    docs = spark.createDataFrame(
-        [
-            (1, words(0, 40)),
-            (2, words(0, 25) + " " + words(100, 115)),  # J vs 1 just below t
-            (3, words(10, 50)),                          # J vs 1 ~ 0.59 >= t
-            (4, words(200, 240)),                        # disjoint
-            (5, words(0, 40)),                           # exact dup of 1
-        ],
-        ["doc_id", "text"],
-    )
-    t = 0.4516
-    want = {tuple(r) for r in ngram_jaccard_pairs(docs, k=2, threshold=t).collect()}
-    got = {tuple(r) for r in prefix_filter_jaccard_pairs(docs, k=2, threshold=t).collect()}
-    assert got == want and len(got) >= 2
-
-
 def test_best_of_n_argmax_median_margin(spark):
     """Winner = reward argmax (ties -> lowest cand id); median = exact
     (n+1) div 2 rank pick; margin = best - median."""
@@ -3360,30 +2976,6 @@ def test_best_of_n_argmax_median_margin(spark):
     # even n=4: rank (4+1) div 2 = 2 under ascending order -> 300
     assert (out[2]["best_id"], out[2]["median_micro"]) == (1, 300)
     assert out[2]["margin_micro"] == 400
-
-
-def test_incremental_ppjoin_keepers_planted(spark):
-    """Family drop rules under the frozen stored-corpus order: an exact
-    re-crawl of a stored doc dies vs the store; of two near-identical
-    batch docs the higher id dies (greedy-by-id); novel docs survive;
-    short docs (no shingles) survive trivially."""
-    from bigdata_rags_spark.dedup.ppjoin import incremental_prefix_filter_keepers
-
-    base = " ".join(f"w{i}" for i in range(10))
-    existing = spark.createDataFrame([(100, base)], ["doc_id", "text"])
-    batch = spark.createDataFrame(
-        [
-            (1, base),                                        # copy of stored -> dies
-            (2, " ".join(f"x{i}" for i in range(10))),        # novel -> keeps
-            (3, " ".join(f"x{i}" for i in range(10)) + " x9"),# near-dup of 2 (higher id) -> dies
-            (4, "too short"),                                  # no 5-gram shingles -> keeps
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r["n_shingles"] for r in
-           incremental_prefix_filter_keepers(batch, existing, k=5, threshold=0.5).collect()}
-    assert set(out) == {2, 4}
-    assert out[2] == 6 and out[4] == 0
 
 
 def _byte_rules(spark, docs, n_merges=4):

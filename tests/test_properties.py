@@ -135,46 +135,6 @@ def test_hash_sample_fraction_and_subset_invariants(spark, frac, n):
     assert half <= ids
 
 
-@given(
-    docs=st.lists(
-        st.lists(
-            st.sampled_from(["red", "blue", "fox", "dog", "sky", "sun", "sea"]),
-            min_size=1,
-            max_size=13,
-        ),
-        min_size=1,
-        max_size=6,
-    )
-)
-@_SETTINGS
-def test_segment_dedup_matches_python_reference(spark, docs):
-    """segment_dedup == a direct python re-implementation for arbitrary
-    word-stream corpora: identical segment counts, keep decisions, and
-    in-order reassembly."""
-    from collections import Counter
-
-    from bigdata_rags_spark.dedup.segments import segment_dedup
-
-    k = 3
-    rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in segment_dedup(df, k=k).collect()}
-
-    segs = {
-        i: [" ".join(words[j : j + k]) for j in range(0, len(words), k)]
-        for i, words in enumerate(docs)
-    }
-    n_docs = Counter()
-    for i, ss in segs.items():
-        for s in set(ss):
-            n_docs[s] += 1
-    for i, ss in segs.items():
-        kept = [s for s in ss if n_docs[s] == 1]
-        assert got[i]["n_segments"] == len(ss)
-        assert got[i]["n_kept"] == len(kept)
-        assert got[i]["cleaned_text"] == " ".join(kept)
-
-
 # --- zone-maintenance DataFrame cores vs python references ----------------
 
 _MAINT_KEYS = st.integers(0, 8)
