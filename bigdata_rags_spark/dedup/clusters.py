@@ -43,7 +43,7 @@ LAST_ROUNDS: int = -1
 
 
 def _contract_local_stars(fwd: DataFrame) -> DataFrame:
-    """Partition-local union-find contraction (round 11, VERDICT r10 #4).
+    """Partition-local union-find contraction.
 
     Each input partition's edges are collapsed with an in-memory
     union-find into stars ``(u, local_min_id)`` — a connectivity-EQUIVALENT
@@ -252,8 +252,7 @@ def connected_components(
         else:
             # loop exhausted max_iter with changed > 0: labels are NOT the
             # transitive closure (a component needs more doubled rounds than
-            # max_iter).  Silent wrong answers are worse than loud ones
-            # (ADVICE r1).
+            # max_iter).  Silent wrong answers are worse than loud ones.
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} rounds "
                 f"({changed} labels still changing); raise max_iter — "
@@ -309,7 +308,7 @@ def pagerank_undirected(
             # small multiplier keeps 17*s under 2^63 up to ~5e17 total micro
             # rank mass (~5e11 nodes) instead of ~1e13 (~1e7 nodes) — hub
             # concentration on very large graphs can push s toward the total
-            # mass, and with ANSI off Spark would wrap silently (ADVICE r8).
+            # mass, and with ANSI off Spark would wrap silently.
             (
                 F.lit(150_000) + F.expr("17 * coalesce(s, 0) div 20")
             ).cast("bigint").alias("r"),

@@ -3,7 +3,9 @@
 Design (the classic shingle -> minhash -> band -> bucket-join pipeline, e.g.
 Broder 1997 / MMDS ch.3, expressed Spark-first):
 
-1. shingles:  distinct k-gram word shingles per doc (explode).  Shingling,
+1. shingles:  distinct k-gram word shingles per doc (explode).  Each doc
+              is tokenized once: ``word_shingles`` binds the token array
+              before slicing it into shingles.  Shingling,
               not unigrams, is what makes the sketch discriminative: token
               *sets* saturate on small vocabularies (measured on the driver
               corpus: unigram-set LSH emits ~10.9M candidate pairs at sf0.1,
@@ -57,7 +59,7 @@ def auto_minhash_params(
 ) -> tuple[int, int]:
     """Self-scaling banding: ``(num_hashes, rows_per_band)`` from corpus
     count — the ``auto_n_planes`` / ``auto_n_cells`` rule applied to the
-    last fixed-width banded family (VERDICT r8 #3).
+    last fixed-width banded family.
 
     Why bands must scale: a band key discriminates a random (noise) pair
     with probability ~J_noise^r, so expected false candidates are
@@ -288,9 +290,9 @@ def build_minhash_store(
     num_buckets: int = 8,
 ) -> tuple[str, str]:
     """Persist the stored corpus's MinHash signature index — the build-once
-    half of the build-once/ingest-many dedup lifecycle (VERDICT r16 #5; the
-    `similarity/pq.build_ivfpq_index` split for text).  Until r17 every
-    incremental call re-shingled and re-hashed the whole stored corpus —
+    half of the build-once/ingest-many dedup lifecycle (the
+    `similarity/pq.build_ivfpq_index` split for text).  Without it every
+    incremental call would re-shingle and re-hash the whole stored corpus —
     a full corpus pass per ingest batch for a table that only changes at
     build time.
 
@@ -403,7 +405,7 @@ def incremental_minhash_keepers(
     else:
         # the two parameters are a unit (the stored index's frozen banding):
         # half-specifying them would silently key batch bands incompatibly
-        # with the stored band table, so it is an explicit error (ADVICE r10 #4)
+        # with the stored band table, so it is an explicit error
         if (num_hashes is None) != (rows_per_band is None):
             raise ValueError(
                 "pass BOTH num_hashes and rows_per_band (the stored index's frozen "

@@ -33,16 +33,22 @@ def char_ngrams(text: F.Column, ns: tuple[int, ...] = CT_NGRAM_SIZES) -> F.Colum
     """All character n-grams of the normalized text for every n in ``ns``,
     fused into one array (grams of different lengths are distinct strings,
     so no n-tag is needed).  Row-local: one substring transform per n, no
-    shuffle; documents shorter than n contribute nothing for that n."""
-    t = norm_text(text)
-    parts = [
-        F.when(
-            F.length(t) >= n,
-            F.transform(F.sequence(F.lit(1), F.length(t) - (n - 1)), _gram_fn(t, n)),
-        ).otherwise(F.array().cast("array<string>"))
-        for n in ns
-    ]
-    return F.flatten(F.array(*parts))
+    shuffle; documents shorter than n contribute nothing for that n.  The
+    normalized text is bound once as the lambda variable ``t`` of a
+    one-element ``transform``, so the ``substr`` lambda does not re-run
+    ``norm_text``'s regexp over the whole text for every gram."""
+
+    def grams(t: F.Column) -> F.Column:
+        parts = [
+            F.when(
+                F.length(t) >= n,
+                F.transform(F.sequence(F.lit(1), F.length(t) - (n - 1)), _gram_fn(t, n)),
+            ).otherwise(F.array().cast("array<string>"))
+            for n in ns
+        ]
+        return F.flatten(F.array(*parts))
+
+    return F.transform(F.array(norm_text(text)), grams)[0]
 
 
 def _gram_fn(t: F.Column, n: int):

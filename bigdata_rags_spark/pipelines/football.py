@@ -41,7 +41,7 @@ def player_assists_rollup(player_expected_assists: DataFrame) -> DataFrame:
     The reference sums ``Actual Assists`` (alias unchanged) and ``Expected
     Assists (xA)`` aliased to ``Expected Assists`` (reference :168) —
     spellings matched exactly so downstream consumers of the reference's
-    stage schema see identical column names (ADVICE r1).
+    stage schema see identical column names.
     """
     return rollup_sum(
         player_expected_assists,

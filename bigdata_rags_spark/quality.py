@@ -10,7 +10,7 @@ BASELINE.json's north star.
 Line-based Gopher rules (duplicate-line fraction, bullet/ellipsis line
 fractions) are intentionally not implemented against the synthetic fixtures,
 which contain no newlines or symbols — a check that can never fire proves
-nothing (vacuous-oracle rule, VERDICT r1).  The repetition subset below has
+nothing (vacuous-oracle rule).  The repetition subset below has
 measured signal on the fixture at every threshold.
 
 100 TB design: every statistic comes from the token array in the row that
@@ -67,8 +67,7 @@ def repetition_quality(
     is one ``""`` token (``split`` semantics, in both engines).
     Documents with a single token (no bigrams) still get a row — the bigram
     fraction is 0 and the word-count floor zeroes the flag; a quality
-    gate must not silently pass over exactly the most pathological docs
-    (ADVICE r2).
+    gate must not silently pass over exactly the most pathological docs.
     """
     toks = F.col("toks")
     n1 = F.size(toks) - F.lit(1)
@@ -232,7 +231,7 @@ def nb_fit_weights(
     labeled: DataFrame, text_col: str = "text", label_col: str = "y"
 ) -> DataFrame:
     """FIT the quality classifier from labeled seed docs — the distributed
-    multinomial-Naive-Bayes count stage (VERDICT r12 #3): the literal-weight
+    multinomial-Naive-Bayes count stage: the literal-weight
     `quality_classifier_scores` gains the train half of the train->score
     loop the tokenizers already have (train->encode).
 
@@ -680,7 +679,7 @@ def binary_agreement_report(flags: DataFrame, a_col: str = "a", b_col: str = "b"
     products route through DECIMAL(38,0) (HUGEINT in the oracle): the
     marginal-product sum reaches ~2*n^2, so the *1e6 multiply overflows
     bigint at n ~ 2.1M rows under the ANSI session — the eval_bradley_terry
-    overflow class (ADVICE r15 #1)."""
+    overflow class."""
     j = flags.select(
         F.col(a_col).cast("int").alias("a"), F.col(b_col).cast("int").alias("b")
     )
@@ -722,7 +721,7 @@ def score_threshold_ablation(
     integer-micro token share of the scored corpus.  One |thresholds| x
     rows cross join aggregated immediately — output is |thresholds| rows
     ALWAYS: an empty scored frame emits the full ladder with zero counts
-    (the ladder left-joins the aggregate, ADVICE r15 #3)."""
+    (the ladder left-joins the aggregate)."""
     m = scored.select(
         F.col(score_col).cast("bigint").alias("__s"),
         F.col(tokens_col).cast("bigint").alias("__t"),
