@@ -9,6 +9,8 @@ upcast (exact) on both sides.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -33,3 +35,20 @@ def cosine(a: Column, b: Column) -> Column:
     """dot/sqrt(na)/sqrt(nb) — the exact op order the oracle SQL uses
     (two divisions, not a product of norms) so results are bit-identical."""
     return dot(a, b) / norm(a) / norm(b)
+
+
+def _deterministic_hyperplanes(dim: int, n_planes: int, seed: str = "lsh") -> list[list[float]]:
+    """Pseudo-random unit-free hyperplanes from md5 bytes — reproducible
+    across runs/processes without RNG state.  Values in [-0.5, 0.5).  The
+    one literal family behind the LSH planes, the fixed IVF codebook and
+    the fixed PQ codebooks."""
+    planes: list[list[float]] = []
+    for p in range(n_planes):
+        vals: list[float] = []
+        i = 0
+        while len(vals) < dim:
+            h = hashlib.md5(f"{seed}:{p}:{i}".encode()).digest()
+            vals.extend(b / 256.0 - 0.5 for b in h)
+            i += 1
+        planes.append(vals[:dim])
+    return planes

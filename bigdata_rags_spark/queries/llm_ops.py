@@ -543,7 +543,7 @@ def _lsh_sig_sql(
     """One DuckDB signature expression per LSH table, embedding the SAME
     md5-derived plane literals the Spark side uses (exact multiples of
     1/256, so repr() parses to bit-identical float64 in both engines)."""
-    from bigdata_rags_spark.similarity.knn import _deterministic_hyperplanes
+    from bigdata_rags_spark.functions.vectors import _deterministic_hyperplanes
 
     sig_cols = []
     for t in range(n_tables):
@@ -581,61 +581,10 @@ SELECT query_id, neighbor_id, similarity, rank FROM r WHERE rank <= 5
 )
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors vec_id<5 (exact baseline;
-    similarity/knn.py; the ANN sibling is ``embedding_lsh_topk``)."""
+    similarity/knn.py; the ANN path it checks is IVFPQ,
+    ``embedding_ivfpq_rerank_topk``)."""
     e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
     return brute_force_topk(e.filter(F.col("vec_id") < 5), e, k=5)
-
-
-def _matryoshka_oracle(dims: tuple[int, ...] = (8, 16, 32, 64), k: int = 5) -> str:
-    """Per prefix dim: cosine over the first d components (DuckDB list
-    slice is cast-then-slice like Spark's slice-then-cast — same values),
-    exact top-k, overlap vs the max-dim truth."""
-    full = max(dims)
-    blocks = [
-        "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qf"
-        " FROM embeddings WHERE vec_id < 5)",
-        "c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cf FROM embeddings)",
-    ]
-    for d in dims:
-        blocks.append(
-            f"""t{d} AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY ROUND(list_dot_product(qf[1:{d}], cf[1:{d}])
-                      / sqrt(list_dot_product(qf[1:{d}], qf[1:{d}]))
-                      / sqrt(list_dot_product(cf[1:{d}], cf[1:{d}])), 6) DESC,
-             neighbor_id) AS rn
-    FROM q CROSS JOIN c WHERE neighbor_id != query_id)
-  WHERE rn <= {k}
-)"""
-        )
-    unions = "\nUNION ALL\n".join(
-        f"""SELECT CAST({d} AS INT) AS dim, a.query_id,
-       CAST(SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_overlap,
-       CAST((SUM(CASE WHEN b.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 1000) // {k} AS BIGINT) AS recall_milli
-FROM t{d} a LEFT JOIN t{full} b
-  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-GROUP BY a.query_id"""
-        for d in dims
-    )
-    return "WITH " + ",\n".join(blocks) + "\n" + unions
-
-
-@_llm("embedding_matryoshka_recall", _matryoshka_oracle())
-def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka prefix-dimension serving planner
-    (`similarity/knn.matryoshka_recall`, Kusupati et al. 2022): recall@5
-    of cosine ranking over the first 8/16/32/64 embedding components vs
-    the full-dimension exact top-5, per anchor (vec_id<5) — the report
-    that answers "how far can I truncate stored vectors before recall
-    drops", the storage-side twin of the IVFPQ n_probe planner.  Exact
-    brute-force per dim over the bounded anchor set; scale notes in the
-    library docstring."""
-    from bigdata_rags_spark.similarity.knn import matryoshka_recall
-
-    e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
-    return matryoshka_recall(e.filter(F.col("vec_id") < 5), e, k=5)
 
 
 @_llm(
@@ -670,89 +619,12 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     band, plus the excluded positive count — the (anchor, positive-count,
     hard-negative) table a dual-encoder training job consumes.  Exact
     brute-force band here (the oracle-checkable baseline); at scale the
-    candidate source swaps to the LSH/IVFPQ index with the band-filter +
+    candidate source swaps to the IVFPQ index with the band-filter +
     per-anchor top-k stages unchanged."""
     from bigdata_rags_spark.similarity.knn import hard_negative_topk
 
     e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
     return hard_negative_topk(e.filter(F.col("vec_id") < 5), e, k=5, pos_ceiling=0.9)
-
-
-def _binary_topk_oracle(dim: int = 64, shortlist: int = 50, k: int = 5) -> str:
-    """Full replay of `similarity/binary.binary_hamming_topk`: sign-bit
-    packing into 32-bit words (bit j of word w = component w*32+j strictly
-    positive — DuckDB lists are 1-based so v[w*32+j+1]), integer Hamming
-    shortlist with neighbor-id tiebreak, exact-cosine rerank of shortlist
-    rows only."""
-    from bigdata_rags_spark.similarity.binary import WORD_BITS, n_words
-
-    nw = n_words(dim)
-    word_cols = []
-    for w in range(nw):
-        terms = " + ".join(
-            f"(CASE WHEN v[{w * WORD_BITS + j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(min(WORD_BITS, dim - w * WORD_BITS))
-        )
-        word_cols.append(f"CAST({terms} AS BIGINT) AS w{w}")
-    ham = " + ".join(f"bit_count(xor(q.w{w}, c.w{w}))" for w in range(nw))
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-codes AS (SELECT vec_id, {", ".join(word_cols)} FROM e),
-h AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST({ham} AS BIGINT) AS hamming
-  FROM codes q JOIN codes c ON q.vec_id < 5 AND c.vec_id != q.vec_id
-),
-short AS (
-  SELECT query_id, neighbor_id, hamming FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY hamming, neighbor_id) AS hr
-    FROM h
-  ) WHERE hr <= {shortlist}
-),
-rr AS (
-  SELECT s.query_id, s.neighbor_id, s.hamming,
-         ROUND(list_dot_product(q.v, c.v) / sqrt(list_dot_product(q.v, q.v))
-               / sqrt(list_dot_product(c.v, c.v)), 6) AS similarity
-  FROM short s
-  JOIN e q ON q.vec_id = s.query_id
-  JOIN e c ON c.vec_id = s.neighbor_id
-),
-f AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY similarity DESC, neighbor_id) AS INT) AS rank
-  FROM rr
-)
-SELECT query_id, neighbor_id, hamming, similarity, rank FROM f WHERE rank <= {k}
-"""
-
-
-@_llm("embedding_binary_hamming_topk", _binary_topk_oracle())
-def embedding_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary (1-bit) quantized ANN — the third rung of the quantization
-    ladder after int8 and PQ (`similarity/binary.binary_hamming_topk`):
-    sign-bit codes pack 64 dims into two 32-bit words (32x smaller than
-    float32), a broadcast-query xor/popcount sweep ranks each anchor's
-    50-code Hamming shortlist (the 8-byte scan that replaces the 256-byte
-    float scan), and ONLY shortlist rows pay the exact float cosine — the
-    binary-rescore serving architecture, same shortlist->rerank shape as
-    ``embedding_pq_rerank_topk``.  Hamming over sign bits estimates angular
-    distance via the Charikar hyperplane identity with the coordinate axes
-    as planes, so no projection step exists at all.  Deterministic end to
-    end (integer Hamming + neighbor-id tiebreaks), so the oracle replays
-    both stages value-for-value."""
-    from bigdata_rags_spark.similarity.binary import binary_hamming_topk
-
-    e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
-    # shortlist is PINNED to the oracle's literal (ADVICE r12): the
-    # self-scaling `auto_shortlist` resolves to 50 only at the sf0.01
-    # fixture (N=500) and would drift to 200 at sf0.1 (N=2000), silently
-    # diverging from the oracle SQL's hard-coded 50 on any other-scale
-    # parity run.  Library callers still get self-scaling via
-    # `shortlist=None`.
-    return binary_hamming_topk(
-        e.filter(F.col("vec_id") < 5), e, dim=64, shortlist=50, k=5
-    )
 
 
 _SQL_BITEXT_COS = (
@@ -829,64 +701,6 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = j.filter((F.col("lang") == "en") & (F.col("vec_id") < 50))
     tgt = j.filter(F.col("lang") == "de")
     return margin_mining(src, tgt, k=4, margin_threshold_milli=1000)
-
-
-def _lsh_topk_oracle(
-    k: int = 5, n_planes: int = 8, n_tables: int = 2, probe_bits: int = 2, dim: int = 64
-) -> str:
-    """Oracle for the registered ANN top-k: candidates = corpus vectors
-    whose table-t signature lies within Hamming ``probe_bits`` of the
-    query's (any table), ranked by exact rounded cosine.  Same plane
-    literals as the Spark side; DuckDB evaluates the collision rule as
-    ``bit_count(xor(.))`` while Spark runs the probe equi-join."""
-    sig_cols = _lsh_sig_sql(n_planes, n_tables, dim)
-    collide = " OR ".join(
-        f"bit_count(xor(q.sig{t}, c.sig{t})) <= {probe_bits}" for t in range(n_tables)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s AS (SELECT vec_id, v, {", ".join(sig_cols)} FROM e),
-cand AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         q.v AS qv, c.v AS cv
-  FROM s q JOIN s c ON q.vec_id < 5 AND c.vec_id != q.vec_id AND ({collide})
-),
-sims AS (
-  SELECT query_id, neighbor_id, ROUND({_SQL_COSINE}, 6) AS similarity FROM cand
-),
-r AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY similarity DESC, neighbor_id) AS INT) AS rank
-  FROM sims
-)
-SELECT query_id, neighbor_id, similarity, rank FROM r WHERE rank <= {k}
-"""
-
-
-@_llm("embedding_lsh_topk", _lsh_topk_oracle())
-def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-5 via multi-probe hyperplane LSH for the same query set as
-    ``embedding_cosine_topk`` — the registered subquadratic sibling of the
-    brute-force baseline (VERDICT r4 noted lsh_bucketed_topk had no driver
-    row; deterministic md5 planes make it oracle-checkable).  Corpus is
-    hashed once per table by a codegen'd signature expression and shuffles
-    only on the signature key; the exact cosine is paid ONLY by deduped
-    bucket-collision candidates.  Top-k semantics are fully deterministic:
-    rounded similarity desc, neighbor_id tiebreak.
-
-    Constants (r6 measurement, VERDICT r5 #7): probe_bits 1 -> 2 — at
-    sf0.1 the wider probe measured FASTER-or-equal (0.46 s vs 0.57 s warm;
-    the exact-cosine stage dominates, so probe fan-out on the 5-row query
-    side is free) while recall@5 vs brute force rose 0.28 -> 0.60 on the
-    adversarial near-isotropic fixture."""
-    from bigdata_rags_spark.similarity.knn import lsh_bucketed_topk
-
-    e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
-    # n_planes omitted -> self-scaling default; 8 on the driver fixtures
-    return lsh_bucketed_topk(
-        e.filter(F.col("vec_id") < 5), e, k=5, dim=64,
-        n_tables=2, probe_bits=2,
-    )
 
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1419,83 +1233,6 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot(F.col("v"), F.col("recon")) / norm(F.col("v")) / norm(F.col("recon")), 6
         ).alias("cos_recon"),
     )
-
-
-# `embedding_ivf_topk` (trained-k-means IVF, rows-only since r4) was RETIRED
-# from the registry in round 13 (VERDICT r12 #8, the r6 multimodal-stub
-# retirement pattern): its oracle-checkable surface is exactly
-# `embedding_ivf_probe_fixed` (same probe plan under fixed literal
-# centroids), and the trained path stays pinned by
-# tests/test_llm_ops.py::test_ivf_probe_all_cells_equals_brute_force and
-# ::test_ivf_recall_at_5_on_real_embeddings over `similarity/ivf.ivf_topk`,
-# plus the IVFPQ trained lifecycle (`embedding_ivfpq_trained_serve`).
-# Retiring the key stops a permanently-ungreenable row from occupying the
-# driver's rows-only budget.
-
-
-def _ivf_probe_fixed_oracle(
-    k: int = 5, n_cells: int = 16, n_probe: int = 4, dim: int = 64
-) -> str:
-    """Oracle for the fixed-codebook IVF probe: the SAME md5-derived centroid
-    literals as the Spark side (exact multiples of 1/256 -> repr() parses to
-    bit-identical float64).  Cell ranking replays _nearest_cells' descending
-    struct(sim, cell) sort as ``ORDER BY sim DESC, cell DESC``; parallel
-    unnests zip (cell, sim) pairs row-wise."""
-    from bigdata_rags_spark.similarity.ivf import fixed_centroids
-
-    cents = fixed_centroids(dim, n_cells)
-    sims = ", ".join(
-        "list_dot_product(v, [" + ", ".join(repr(x) for x in c) + "]::DOUBLE[])"
-        for c in cents
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s AS (
-  SELECT vec_id, v,
-         CAST(unnest(range(0, {n_cells})) AS INT) AS cell,
-         unnest([{sims}]) AS sim
-  FROM e
-),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY sim DESC, cell DESC) AS r
-  FROM s
-),
-corpus AS (SELECT vec_id AS neighbor_id, v AS cv, cell FROM ranked WHERE r = 1),
-probes AS (SELECT vec_id AS query_id, v AS qv, cell
-           FROM ranked WHERE vec_id < 5 AND r <= {n_probe}),
-cand AS (
-  SELECT query_id, neighbor_id, qv, cv
-  FROM probes JOIN corpus USING (cell)
-  WHERE neighbor_id != query_id
-),
-sims AS (
-  SELECT query_id, neighbor_id, ROUND({_SQL_COSINE}, 6) AS similarity FROM cand
-),
-rk AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY similarity DESC, neighbor_id) AS INT) AS rank
-  FROM sims
-)
-SELECT query_id, neighbor_id, similarity, rank FROM rk WHERE rank <= {k}
-"""
-
-
-@_llm("embedding_ivf_probe_fixed", _ivf_probe_fixed_oracle())
-def embedding_ivf_probe_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-5 with a FIXED literal codebook — the oracle-checked
-    serving path (VERDICT r5 #4): trained-quantizer fitting stays
-    rows-only because Lloyd's iterations aren't SQL-expressible, but cell
-    assignment + n_probe probing + exact in-cell cosine against a pinned
-    codebook is pure relational algebra, so the driver value-hashes the
-    whole search plan.  Scale shape is production IVF serving exactly:
-    corpus shuffles once by cell_id, queries fan out n_probe rows, top-k is
-    a partitioned window — see similarity/ivf.py."""
-    from bigdata_rags_spark.similarity.ivf import fixed_centroids, ivf_topk
-
-    e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 5)
-    return ivf_topk(q, e, k=5, n_cells=16, n_probe=4, centroids=fixed_centroids(64, 16))
 
 
 @_llm(
@@ -4331,11 +4068,11 @@ def lsh_tuning_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final agg; output is 4 rows."""
     from pyspark.sql import functions as F
 
-    from bigdata_rags_spark.functions.vectors import as_double_array
-    from bigdata_rags_spark.similarity.knn import (
+    from bigdata_rags_spark.functions.vectors import (
         _deterministic_hyperplanes,
-        signature_col,
+        as_double_array,
     )
+    from bigdata_rags_spark.similarity.knn import signature_col
 
     e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
     planes = _deterministic_hyperplanes(64, 12, seed="lsh")
@@ -5736,8 +5473,8 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cluster, and drop every item with a higher-priority near-duplicate
     (here: any lower-vec_id neighbor with rounded cosine >= 0.4 in its
     cell — the deterministic greedy-by-id variant of the paper's
-    keep-one-representative rule).  The fixed md5 codebook (the
-    ``embedding_ivf_probe_fixed`` serving contract) makes the WHOLE
+    keep-one-representative rule).  The fixed md5 codebook (the IVFPQ
+    coarse quantizer's ``fixed_centroids``) makes the WHOLE
     pipeline — assignment, in-cell pairing, survival — oracle-replayable;
     swapping in trained centroids changes one literal.
 
@@ -6762,9 +6499,11 @@ def _ivfpq_oracle(
     prelude_ctes: str = "",
     source_sql: str = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings",
 ) -> str:
-    """Oracle for IVFPQ serving: the `_ivf_probe_fixed_oracle` cell CTEs
-    restrict WHICH corpus codes are scored, the `_pq_adc_oracle` encode /
-    LUT CTEs price HOW — same literals as both Spark-side codebooks.
+    """Oracle for IVFPQ serving: the fixed-centroid cell CTEs (ranked
+    ``ORDER BY sim DESC, cell DESC``, the descending struct(sim, cell)
+    sort of ``_nearest_cells``) restrict WHICH corpus codes are scored,
+    the `_pq_adc_oracle` encode / LUT CTEs price HOW — same literals as
+    both Spark-side codebooks.
     ``corpus_pred`` restricts the INDEXED corpus (codes + cell assignment)
     without touching the query side — the delete-lifecycle oracle.
     ``source_sql``/``prelude_ctes`` swap the vector source (default: the
@@ -6969,9 +6708,9 @@ def embedding_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ ADC scores the survivors on bytes, exact cosine reranks the top-50
     shortlist — the composition every production vector store runs when
     neither full vectors nor full scans fit.  Both component codebooks
-    are the fixed literals already value-hash checked standalone
-    (``embedding_ivf_probe_fixed``, ``embedding_pq_rerank_topk``), so the
-    combined plan stays oracle-exact end to end."""
+    are fixed literals (the PQ one also value-hash checked standalone by
+    ``embedding_pq_rerank_topk``), so the combined plan stays oracle-exact
+    end to end."""
     from bigdata_rags_spark.similarity.pq import ivfpq_search_rerank
 
     e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
@@ -7167,7 +6906,7 @@ def _ivfpq_tuning_oracle(
 ) -> str:
     """Replay of `similarity/pq.py:ivfpq_tuning_report` over the
     fixed-literal index: full per-query cell ranking (the
-    `_ivf_probe_fixed_oracle` descending (sim, cell) sort), exact
+    `_ivfpq_oracle` descending (sim, cell) sort), exact
     brute-force top-k truth, and the prefix-nested probe grid."""
     from bigdata_rags_spark.similarity.ivf import fixed_centroids
 
@@ -7909,64 +7648,6 @@ def curriculum_anneal_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curriculum_anneal_plan(docs, domain_col="source", n_epochs=3)
 
 
-def _matryoshka_funnel_oracle(
-    d_coarse: int = 8, shortlist: int = 50, k: int = 5, n_queries: int = 5
-) -> str:
-    """Replay of the matryoshka funnel: prefix-d cosine shortlist, full-dim
-    exact rerank, both on rounded similarities with neighbor-id ties."""
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id < {n_queries}),
-c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-coarse AS (
-  SELECT query_id, neighbor_id, coarse_sim FROM (
-    SELECT query_id, neighbor_id,
-           ROUND(list_dot_product(qv[1:{d_coarse}], cv[1:{d_coarse}])
-                 / sqrt(list_dot_product(qv[1:{d_coarse}], qv[1:{d_coarse}]))
-                 / sqrt(list_dot_product(cv[1:{d_coarse}], cv[1:{d_coarse}])), 6)
-             AS coarse_sim,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY ROUND(list_dot_product(qv[1:{d_coarse}], cv[1:{d_coarse}])
-                 / sqrt(list_dot_product(qv[1:{d_coarse}], qv[1:{d_coarse}]))
-                 / sqrt(list_dot_product(cv[1:{d_coarse}], cv[1:{d_coarse}])), 6)
-               DESC, neighbor_id) AS r
-    FROM q CROSS JOIN c WHERE neighbor_id != query_id
-  ) WHERE r <= {shortlist}
-),
-rer AS (
-  SELECT s.query_id, s.neighbor_id, s.coarse_sim,
-         ROUND({_SQL_COSINE}, 6) AS similarity
-  FROM coarse s
-  JOIN q ON q.query_id = s.query_id
-  JOIN c ON c.neighbor_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, coarse_sim, similarity, rank FROM (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY similarity DESC, neighbor_id) AS INT) AS rank
-  FROM rer
-) WHERE rank <= {k}
-"""
-
-
-@_llm("embedding_matryoshka_funnel_topk", _matryoshka_funnel_oracle())
-def embedding_matryoshka_funnel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka ADAPTIVE retrieval (`similarity/knn.
-    matryoshka_coarse_to_fine_topk`; Kusupati et al. 2022's funnel): the
-    8-dim prefix cosine shortlists 50 candidates per query — on
-    prefix-sliced storage that coarse sweep reads 1/8th of the vector
-    bytes — and the full 64-dim exact cosine reranks the shortlist to
-    top-5.  The serving CONSUMER of `embedding_matryoshka_recall`'s
-    what-dim-do-I-serve planner, and the third member of the
-    cheap-score-then-exact-rerank family (binary Hamming, PQ ADC,
-    now matryoshka prefix).  Both stages deterministic on rounded
-    cosines; the oracle replays the whole funnel."""
-    from bigdata_rags_spark.similarity.knn import matryoshka_coarse_to_fine_topk
-
-    e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 5)
-    return matryoshka_coarse_to_fine_topk(q, e, d_coarse=8, shortlist=50, k=5)
-
-
 @_llm(
     "tokenizer_fertility_report",
     f"""WITH {_encode_docs_ctes(_bpe_blocks(8))}
@@ -8290,150 +7971,6 @@ def curation_funnel_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation_funnel_report(pages)
 
 
-# round-15: filtered (metadata-constrained) ANN serving ----------------------
-
-
-def _filtered_ann_oracle(
-    preds: tuple[tuple[str, str], ...] = (
-        ("lang=en", "SELECT doc_id FROM documents WHERE lang = 'en'"),
-        ("source=src0", "SELECT doc_id FROM documents WHERE source = 'src0'"),
-    ),
-    k: int = 10,
-    n_queries: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-) -> str:
-    """Pre-filter vs post-filter ANN replay: each predicate's prefilter
-    pass is `_ivfpq_oracle` with the eligible-id subquery as
-    ``corpus_pred``; the postfilter pass filters ONE shared unfiltered
-    serve; exact truth and scanned-candidate counts replay per predicate
-    from a shared cell-assignment CTE.  Everything expensive is
-    ``AS MATERIALIZED`` (DuckDB re-inlines CTEs per reference — the r13
-    rag-capstone lesson)."""
-    from bigdata_rags_spark.similarity.ivf import fixed_centroids
-
-    cents = fixed_centroids(64, n_cells)
-    cell_sims = ", ".join(
-        "list_dot_product(v, [" + ", ".join(repr(x) for x in c) + "]::DOUBLE[])"
-        for c in cents
-    )
-    blocks = [
-        f"""post_raw AS MATERIALIZED ({_ivfpq_oracle(k=k, n_queries=n_queries, n_cells=n_cells, n_probe=n_probe)}),
-ev AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cellr AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id,
-           CAST(unnest(range(0, {n_cells})) AS INT) AS cell,
-           unnest([{cell_sims}]) AS sim
-    FROM ev
-  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) = 1
-),
-qprobes AS MATERIALIZED (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT vec_id,
-           CAST(unnest(range(0, {n_cells})) AS INT) AS cell,
-           unnest([{cell_sims}]) AS sim
-    FROM ev WHERE vec_id < {n_queries}
-  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell DESC) <= {n_probe}
-),
-qids AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {n_queries})"""
-    ]
-    selects = []
-    for i, (label, elig_sql) in enumerate(preds):
-        pred = f"vec_id IN ({elig_sql})"
-        blocks.append(
-            f"""elig{i} AS MATERIALIZED (SELECT vec_id FROM embeddings WHERE {pred}),
-pre{i} AS MATERIALIZED (
-  SELECT query_id, neighbor_id
-  FROM ({_ivfpq_oracle(k=k, n_queries=n_queries, n_cells=n_cells, n_probe=n_probe, corpus_pred=pred)})
-),
-post{i} AS (
-  SELECT query_id, neighbor_id FROM post_raw
-  WHERE neighbor_id IN (SELECT vec_id FROM elig{i})
-),
-exact{i} AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY ROUND(list_dot_product(q.v, c.v) /
-               NULLIF(sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)), 0), 6) DESC,
-               c.vec_id) AS r
-    FROM (SELECT vec_id, v FROM ev WHERE vec_id < {n_queries}) q
-    CROSS JOIN (SELECT e.vec_id, e.v FROM ev e JOIN elig{i} g USING (vec_id)) c
-    WHERE c.vec_id != q.vec_id
-  ) WHERE r <= {k}
-),
-prescan{i} AS (
-  SELECT p.query_id, CAST(COUNT(*) AS BIGINT) AS scanned_rows
-  FROM cellr a JOIN elig{i} g USING (vec_id)
-  JOIN qprobes p ON p.cell = a.cell
-  WHERE a.vec_id != p.query_id GROUP BY 1
-),
-postscan{i} AS (
-  SELECT p.query_id, CAST(COUNT(*) AS BIGINT) AS scanned_rows
-  FROM cellr a JOIN qprobes p ON p.cell = a.cell
-  WHERE a.vec_id != p.query_id GROUP BY 1
-)"""
-        )
-        for mode in ("pre", "post"):
-            selects.append(
-                f"""SELECT '{label}' AS pred, '{mode}filter' AS mode, q.query_id,
-       CAST(COALESCE(nr.n_results, 0) AS BIGINT) AS n_results,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(COALESCE(h.n_hits, 0) * 1000000 // {k} AS BIGINT) AS recall_micro,
-       CAST(COALESCE(sc.scanned_rows, 0) AS BIGINT) AS scanned_rows
-FROM qids q
-LEFT JOIN (SELECT query_id, COUNT(*) AS n_results FROM {mode}{i} GROUP BY 1) nr
-  ON nr.query_id = q.query_id
-LEFT JOIN (SELECT r.query_id, COUNT(*) AS n_hits
-           FROM {mode}{i} r JOIN exact{i} x
-             ON x.query_id = r.query_id AND x.neighbor_id = r.neighbor_id
-           GROUP BY 1) h ON h.query_id = q.query_id
-LEFT JOIN {mode}scan{i} sc ON sc.query_id = q.query_id"""
-            )
-    return "WITH " + ",\n".join(blocks) + "\n" + "\nUNION ALL\n".join(selects)
-
-
-@_llm("ann_filtered_serving_report", _filtered_ann_oracle())
-def ann_filtered_serving_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTERED ANN serving — "top-k WHERE lang='en'" / "... WHERE
-    source='src0'" — comparing the two strategies every production vector
-    store weighs (`similarity/pq.ivfpq_filtered_serving_report`, VERDICT
-    r14 next #3): PREFILTER scores only metadata-eligible codes (recall
-    holds, but the predicate must reach the index scan), POSTFILTER
-    filters the unfiltered top-k after serving (no index change, but a
-    selective predicate STARVES the result set: at src0's 5% selectivity
-    the unfiltered top-10 rarely contains 10 eligible rows and there is
-    no recovery short of re-serving).  Per (predicate, mode, query):
-    n_results (the starvation axis), recall@10 vs the EXACT filtered
-    truth, and scanned_rows (the cost axis — eligible-in-probed-cells vs
-    all-in-probed-cells).  100 TB: both modes keep bucket pruning; the
-    report is what decides whether predicate columns belong IN the codes
-    table."""
-    from bigdata_rags_spark.similarity.pq import ivfpq_filtered_serving_report
-
-    e = read_testdata(spark, sf_dir, "embeddings")["embeddings"]
-    docs = read_testdata(spark, sf_dir, "documents")["documents"]
-    # the corpus feeds encode/assign/rerank branches in BOTH modes plus the
-    # exact truth — one materialization serves them all
-    corpus = e.select("vec_id", "embedding").localCheckpoint()
-    queries = corpus.filter(F.col("vec_id") < 10)
-    # dict form: both predicates share ONE corpus encode, ONE cell
-    # assignment, and ONE unfiltered serve (the r15 bench audit found the
-    # per-predicate form re-encoding the corpus 3x — 16.2 s warm)
-    preds = {
-        "lang=en": docs.filter(F.col("lang") == "en").select(
-            F.col("doc_id").alias("vec_id")
-        ),
-        "source=src0": docs.filter(F.col("source") == "src0").select(
-            F.col("doc_id").alias("vec_id")
-        ),
-    }
-    return ivfpq_filtered_serving_report(
-        queries, corpus, preds, k=10, n_probe=4, shortlist=50
-    )
-
-
 # round-16: predicate columns stored IN the persisted IVFPQ codes table ------
 
 
@@ -8445,22 +7982,21 @@ def ann_filtered_serving_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_predicate_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PREDICATE-column ANN serving — the production form of filtered
-    vector search (VERDICT r15 next #2): ``build_ivfpq_index(metadata=...)``
+    vector search: ``build_ivfpq_index(metadata=...)``
     denormalizes the filterable document attributes (lang, source) INTO
     the persisted codes table at build time, and ``ivfpq_index_serve(
     predicate="lang = 'en'")`` serves "top-5 WHERE lang='en'" as a plain
     scan filter on the bucket-pruned codes read — NO eligible-id frame,
     NO documents join anywhere in the serving plan (both plan-pinned in
     tests/test_ann_index.py, alongside SelectedBucketsCount pruning and
-    PushedFilters carrying the predicate).  This turns r15's
-    `ann_filtered_serving_report` pre-filter *measurement* into the
-    serving *path* real vector stores ship: the predicate prunes parquet
-    row groups inside the probed buckets, so a selective filter makes the
-    serve CHEAPER, not join-heavier.  The oracle replays IVFPQ serving
-    over the eligible corpus (`_ivfpq_oracle(corpus_pred=...)` — the same
-    replay the r15 pre-filter arm hash-anchored), so the driver hash
-    proves the stored-column path is value-identical to filtering the
-    corpus before indexing.
+    PushedFilters carrying the predicate).  This is the library's one
+    filtered-serving path, the one real vector stores ship: the predicate
+    prunes parquet row groups inside the probed buckets, so a selective
+    filter makes the serve CHEAPER, not join-heavier.  The oracle replays
+    IVFPQ serving over the eligible corpus
+    (`_ivfpq_oracle(corpus_pred=...)`), so the driver hash proves the
+    stored-column path is value-identical to filtering the corpus before
+    indexing.
 
     100 TB: metadata join paid ONCE at build (id-keyed); per-vector
     attribute duplication across the M code rows is parquet-dictionary

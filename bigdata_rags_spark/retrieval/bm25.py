@@ -271,8 +271,7 @@ def rm3_expanded_search(
     """Pseudo-relevance feedback / RM3 query expansion (Lavrenko & Croft
     2001, "Relevance-based language models"; the RM3 interpolation is the
     standard Anserini/Indri formulation) — the feedback rung the retrieval
-    ladder (BM25 -> QL -> hybrid -> RRF -> MMR) was missing (VERDICT r13
-    next #2):
+    ladder (BM25 -> QL -> hybrid -> RRF -> MMR) was missing:
 
     1. first pass: BM25 top ``fb_k`` docs for the original query;
     2. relevance model over the feedback set with a uniform document

@@ -1,7 +1,7 @@
 """Retrieval-quality evaluation: integer-exact DCG/nDCG + recall@k over
 ranked lists.
 
-The retrieval twin of ``near_dup_candidate_eval`` (VERDICT r8 #6): the
+The retrieval twin of ``near_dup_candidate_eval``: the
 audit you run when choosing a ranker family before trusting retrieval at
 scale.  Gains use the RANK-RECIPROCAL discount ``rel * 1e6 div (rank+1)``
 — the same discount shape as DCG's ``1/log2(rank+1)`` but exactly

@@ -55,7 +55,7 @@ def mmr_rerank(
     similarity to the already-selected set and the bigint objective
     ``lambda_milli * rel_milli - (1000 - lambda_milli) * max_sim_milli``.
     The output ``doc_id`` keeps the pool's id type (string/UUID keys work
-    — ADVICE r12; ids only need to be orderable for the tie rule).
+    — ids only need to be orderable for the tie rule).
     """
     spark = pool.sparkSession
     base = pool.select(

@@ -1,20 +1,15 @@
 """Similarity search over embedding columns."""
 
-from bigdata_rags_spark.similarity.binary import binary_hamming_topk, binary_quantize
 from bigdata_rags_spark.similarity.bitext import margin_mining
 from bigdata_rags_spark.similarity.knn import (
     brute_force_topk,
     cosine_pairs_above,
     cosine_pairs_above_blocked,
-    lsh_bucketed_topk,
 )
 
 __all__ = [
-    "binary_hamming_topk",
-    "binary_quantize",
     "brute_force_topk",
     "cosine_pairs_above",
     "cosine_pairs_above_blocked",
-    "lsh_bucketed_topk",
     "margin_mining",
 ]

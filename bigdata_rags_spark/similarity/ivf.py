@@ -1,9 +1,7 @@
-"""IVF (inverted-file) ANN: spherical k-means coarse quantizer + cell-probed
-cosine search.
-
-The second standard ANN family next to LSH (``similarity/knn.py``): train a
-small codebook of ``n_cells`` centroids, assign every corpus vector to its
-nearest centroid (the "inverted list"), and at query time score only the
+"""IVF (inverted-file) coarse quantizer of the IVFPQ index
+(``similarity/pq.py``): a small codebook of ``n_cells`` centroids, fixed
+md5 literals or spherical k-means, assigns every corpus vector to its
+nearest centroid (the "inverted list"); a serve then scores only the
 ``n_probe`` most promising cells.  Public design: Sivic & Zisserman 2003
 (inverted files), Jégou et al. 2011 (IVF in FAISS); Spark-first rebuild, not
 a FAISS port.
@@ -20,20 +18,23 @@ function of (corpus, seed, n_cells, n_iter) — replayable across runs.
   aggregation; only n_cells x dim doubles (KBs) ever reach the driver per
   round.  Train on a ``hash_sample`` of the corpus when N is huge — the
   codebook needs a sample, not the population.
-- Search: corpus shuffles once by cell_id; queries fan out n_probe rows
-  each (the small side); scoring is the same zip_with/aggregate cosine as
-  brute force; per-query top-k is a PARTITIONED window (no global sort).
+- Assignment: one codegen'd projection up to 32 centroids, an Arrow numpy
+  pass with the same left fold past that (``assign_cells``/``attach_cells``);
+  serve-time probes use the same kernels on the driver (``_cell_sims``,
+  ``_best_cells``).
 """
 
 from __future__ import annotations
 
-import hashlib
 from math import sqrt
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_rags_spark.functions.vectors import as_double_array, cosine
+from bigdata_rags_spark.functions.vectors import (
+    _deterministic_hyperplanes,
+    as_double_array,
+)
 
 
 def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
@@ -99,11 +100,9 @@ def fixed_centroids(dim: int = 64, n_cells: int = 16, seed: str = "ivfc") -> lis
     1/256 — the same repr-stable construction as the LSH hyperplanes), for
     the oracle-checkable probe path: k-means TRAINING is iterative and stays
     rows-only, but cell assignment + probing against a fixed codebook is
-    pure relational algebra a SQL oracle can replay exactly (VERDICT r5 #4).
-    In production the trained codebook gets pinned as literals the same way
-    — train once, serve many."""
-    from bigdata_rags_spark.similarity.knn import _deterministic_hyperplanes
-
+    pure relational algebra a SQL oracle can replay exactly.  In production
+    the trained codebook gets pinned as literals the same way — train once,
+    serve many."""
     return _deterministic_hyperplanes(dim, n_cells, seed=seed)
 
 
@@ -152,42 +151,6 @@ def train_ivf_centroids(
             new.append([x / n for x in raw])
         centroids = new
     return centroids
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_iter: int = 5,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """ANN top-k via IVF cell probing (exact cosine within probed cells).
-
-    Pass a pre-trained ``centroids`` codebook to skip training (the codebook
-    is tiny and reusable across query batches — train once, serve many)."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, id_col, vec_col, n_cells=n_cells, n_iter=n_iter
-        )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("cv")
-    ).withColumn("cell", _nearest_cells(F.col("cv"), centroids, 1)[0])
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
-    ).withColumn("cell", F.explode(_nearest_cells(F.col("qv"), centroids, n_probe)))
-    w = Window.partitionBy("query_id").orderBy(F.col("similarity").desc(), F.col("neighbor_id"))
-    return (
-        qvecs.join(cvecs, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("similarity", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
-    )
 
 
 def auto_n_cells(
@@ -291,7 +254,7 @@ def attach_cells(
 
     # build a FRESH StructType: StructType.add mutates in place, and
     # DataFrame.schema is cached on the caller's frame — mutating it would
-    # make the ORIGINAL df falsely report a cell column (ADVICE r16)
+    # make the ORIGINAL df falsely report a cell column
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     schema = StructType(df.schema.fields + [StructField("cell", IntegerType())])

@@ -1,15 +1,16 @@
-"""Approximate-nearest-neighbor search over an ``array<float>`` column.
+"""Exact cosine neighbors and vector near-dup pairs over an ``array<float>``
+column.
 
-Two tiers (BASELINE.json mandate):
 - ``brute_force_topk``: exact cosine top-k — broadcast the (small) query set
   against the full corpus; one pass, no shuffle of the corpus, a window
-  per-query top-k.  This is the correctness baseline and the right plan
-  whenever |queries| x |corpus| work fits the cluster.
-- ``lsh_bucketed_topk``: random-hyperplane LSH (sign-of-projection sketch,
-  Charikar 2002) — corpus and queries are bucketed by an n-bit signature and
-  only same-bucket candidates are scored.  Multi-probe over ``probes``
-  signatures raises recall.  Hyperplanes are derived deterministically from
-  md5 bytes, so results are reproducible run-to-run (no RNG state).
+  per-query top-k.  This is the correctness reference for the one ANN
+  serving path, IVFPQ (``similarity/pq.py``), and the right plan whenever
+  |queries| x |corpus| work fits the cluster.
+- Near-dup pairs: exact all-pairs cosine above a threshold
+  (``cosine_pairs_above*``) and random-hyperplane LSH candidates verified
+  by exact cosine (``lsh_verified_pairs``, sign-of-projection sketch,
+  Charikar 2002).  Hyperplanes are derived deterministically from md5
+  bytes, so results are reproducible run-to-run (no RNG state).
 
 All math is ``zip_with``/``aggregate`` column expressions (codegen'd); no
 Python in the scoring loop.
@@ -17,13 +18,17 @@ Python in the scoring loop.
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_rags_spark.functions.vectors import as_double_array, cosine, dot, norm
+from bigdata_rags_spark.functions.vectors import (
+    _deterministic_hyperplanes,
+    as_double_array,
+    dot,
+    norm,
+)
 
 
 def _scored(queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -85,119 +90,6 @@ def brute_force_topk(
     )
 
 
-def matryoshka_recall(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: tuple[int, ...] = (8, 16, 32, 64),
-    k: int = 5,
-) -> DataFrame:
-    """Matryoshka prefix-dimension recall report (Kusupati et al. 2022,
-    "Matryoshka Representation Learning"): for each prefix dimension d,
-    rank neighbors by cosine over the FIRST d components only and measure
-    recall@k against the full-dimension exact top-k — the "what dimension
-    do I serve" planner, sibling of the IVFPQ n_probe tuning report.
-
-    Returns (dim int, query_id, n_overlap bigint, recall_milli bigint);
-    the max(dims) rows are the trivial 1000-recall sanity band.  Exact
-    brute-force at every dim (the oracle-checkable baseline): each dim is
-    one broadcast-queries corpus pass.  A fused single-pass variant would
-    compute all prefix dots from one zip_with product array (prefix sums
-    at the cut points); at the bounded query sets this report serves, the
-    per-dim passes are scan-bound and the fusion is not worth the
-    expression complexity.
-    """
-    full = max(dims)
-    truth = brute_force_topk(
-        queries.select(id_col, F.slice(F.col(vec_col), 1, full).alias(vec_col)),
-        corpus.select(id_col, F.slice(F.col(vec_col), 1, full).alias(vec_col)),
-        id_col,
-        vec_col,
-        k,
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    out = None
-    for d in dims:
-        topk_d = brute_force_topk(
-            queries.select(id_col, F.slice(F.col(vec_col), 1, d).alias(vec_col)),
-            corpus.select(id_col, F.slice(F.col(vec_col), 1, d).alias(vec_col)),
-            id_col,
-            vec_col,
-            k,
-        )
-        rep = (
-            topk_d.join(truth, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_overlap"))
-            .select(
-                F.lit(d).cast("int").alias("dim"),
-                "query_id",
-                "n_overlap",
-                F.expr(f"n_overlap * 1000 DIV {k}").cast("bigint").alias("recall_milli"),
-            )
-        )
-        out = rep if out is None else out.unionByName(rep)
-    return out
-
-
-def matryoshka_coarse_to_fine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    d_coarse: int = 8,
-    shortlist: int = 50,
-    k: int = 5,
-) -> DataFrame:
-    """Matryoshka ADAPTIVE retrieval (Kusupati et al. 2022's funnel
-    serving: shortlist on a cheap prefix dimension, rerank on the full
-    vector) — the SERVING consumer of the `matryoshka_recall` planner:
-    rank the corpus by cosine over the FIRST ``d_coarse`` components only
-    (at d=8 the scan reads 1/8th of the vector bytes on prefix-sliced
-    storage), keep each query's ``shortlist`` best, then exact full-
-    dimension cosine reranks the shortlist to the final ``k``.
-
-    Returns (query_id, neighbor_id, coarse_sim, similarity, rank int).
-    Both stages are deterministic on rounded cosines with neighbor-id
-    tiebreaks, so a SQL oracle replays the funnel value-for-value.
-
-    100-TB shape: the coarse sweep is the `brute_force_topk` plan (pre-
-    top-k prefilter included) over 1/8th of the vector payload; the fine
-    stage touches |Q| x shortlist full vectors via a point-lookup join —
-    the PQ-rerank fetch shape with the prefix dims as the cheap code."""
-    from pyspark.sql import Window
-
-    coarse = brute_force_topk(
-        queries.select(id_col, F.slice(F.col(vec_col), 1, d_coarse).alias(vec_col)),
-        corpus.select(id_col, F.slice(F.col(vec_col), 1, d_coarse).alias(vec_col)),
-        id_col,
-        vec_col,
-        shortlist,
-    ).select("query_id", "neighbor_id", F.col("similarity").alias("coarse_sim"))
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
-    rer = (
-        coarse.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "similarity",
-            F.round(dot(F.col("qv"), F.col("cv")) / F.col("qn") / F.col("cn"), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "coarse_sim", "similarity", "rank")
-    )
-
-
 def hard_negative_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -218,8 +110,8 @@ def hard_negative_topk(
     Same exact-math conventions as ``brute_force_topk`` (rounded
     similarity as the ranking key, neighbor-id tiebreak); same broadcast-
     queries scan shape — one corpus pass, per-anchor window top-k, no
-    corpus shuffle.  At 100 TB swap the candidate source for the LSH /
-    IVFPQ index (mine negatives among probed candidates only) — the
+    corpus shuffle.  At 100 TB swap the candidate source for the IVFPQ
+    index (mine negatives among probed candidates only) — the
     band-filter + top-k stages are unchanged.
     """
     from pyspark.sql import Window
@@ -268,7 +160,7 @@ def cosine_pairs_above(
     """Embedding near-dup pairs: all (a < b) with cosine >= threshold.
 
     Quadratic by construction — correct baseline for modest corpora; use
-    ``lsh_bucketed_topk`` buckets as the pre-filter at scale.
+    ``lsh_verified_pairs`` candidates as the pre-filter at scale.
     """
     a = df.select(
         F.col(id_col).alias("id_a"), as_double_array(F.col(vec_col)).alias("va")
@@ -280,7 +172,7 @@ def cosine_pairs_above(
     # partitions instead of a P_a x P_b cartesian task grid.  Norms are
     # precomputed per vector (dot/na/nb == the oracle's op order).  Only
     # viable while the corpus fits a broadcast; beyond that use
-    # lsh_bucketed_topk.
+    # lsh_verified_pairs.
     return (
         a.crossJoin(F.broadcast(b))
         .filter(F.col("id_a") < F.col("id_b"))
@@ -301,7 +193,7 @@ def cosine_pairs_above_blocked(
     block_rows: int = 4096,
 ) -> DataFrame:
     """All-pairs cosine >= threshold via block-pair EQUI-join decomposition —
-    exact values, no corpus x corpus BroadcastNestedLoopJoin (VERDICT r2 #3).
+    exact values, no corpus x corpus BroadcastNestedLoopJoin.
 
     Rows are hashed into B = ceil(N / block_rows) blocks; each row is
     replicated to its (block_i <= block_j) pair cells via an exploded
@@ -388,11 +280,11 @@ def cosine_pairs_above_mm(
     Same semantics as ``cosine_pairs_above`` but the O(N^2 * d) inner loop
     runs as numpy/BLAS gemm inside ``applyInPandas`` — the classic ~100x
     Pandas-UDF-over-row-expressions win for dense numeric kernels — and,
-    unlike the v1 formulation VERDICT r1 flagged, NOTHING funnels through
-    the driver: rows are hashed into ceil(N / block_rows) blocks, each row
-    is replicated to its (block_i <= block_j) pair groups via an exploded
-    sequence, and every block pair multiplies its two sub-matrices
-    executor-side.  This is the standard distributed all-pairs decomposition:
+    unlike a formulation that collects blocks to the driver, NOTHING
+    funnels through the driver: rows are hashed into ceil(N / block_rows)
+    blocks, each row is replicated to its (block_i <= block_j) pair
+    groups via an exploded sequence, and every block pair multiplies its
+    two sub-matrices executor-side.  This is the standard distributed all-pairs decomposition:
     B(B+1)/2 independent gemm tasks, shuffle volume O(N * B) rows, driver
     sees only the single metadata ``count()`` used to size B.
 
@@ -459,21 +351,6 @@ def cosine_pairs_above_mm(
         return pd.DataFrame({"id_a": lo, "id_b": hi, "similarity": sims[ka, kb]})
 
     return rep.groupBy("bi", "bj").applyInPandas(score_block_pair, out_schema)
-
-
-def _deterministic_hyperplanes(dim: int, n_planes: int, seed: str = "lsh") -> list[list[float]]:
-    """Pseudo-random unit-free hyperplanes from md5 bytes — reproducible
-    across runs/processes without RNG state.  Values in [-0.5, 0.5)."""
-    planes: list[list[float]] = []
-    for p in range(n_planes):
-        vals: list[float] = []
-        i = 0
-        while len(vals) < dim:
-            h = hashlib.md5(f"{seed}:{p}:{i}".encode()).digest()
-            vals.extend(b / 256.0 - 0.5 for b in h)
-            i += 1
-        planes.append(vals[:dim])
-    return planes
 
 
 def signature_col(vec: F.Column, planes: list[list[float]]) -> F.Column:
@@ -552,7 +429,7 @@ def lsh_verified_pairs(
     dim: int = 64,
 ) -> DataFrame:
     """Near-dup pairs via LSH candidates -> exact cosine verify — the
-    production-scale composition (VERDICT r4 #3): candidate pairs are those
+    production-scale composition: candidate pairs are those
     whose n-bit signatures lie within Hamming distance ``probe_bits`` in ANY
     of ``n_tables`` deterministic hyperplane tables; ONLY candidates are
     scored with the exact cosine and thresholded.
@@ -581,7 +458,7 @@ def lsh_verified_pairs(
         F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v")
     )
     if n_planes is None:
-        # Self-scaling default (VERDICT r7 #2): one cheap count job (parquet
+        # Self-scaling default: one cheap count job (parquet
         # footer row-counts; a warehouse would use table stats) picks the
         # signature width that pins expected bucket occupancy — on the
         # driver fixtures this resolves to the historical 8, so oracle
@@ -628,92 +505,6 @@ def lsh_verified_pairs(
     )
 
 
-def lsh_bucketed_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_planes: int | None = None,
-    dim: int = 64,
-    n_tables: int = 1,
-    probe_bits: int = 1,
-) -> DataFrame:
-    """ANN top-k: sign-of-projection LSH bucketing, then exact cosine over
-    the deduplicated candidate set.
-
-    Per table t, the signature is n bits (bit p = sign of <v, plane_{t,p}>),
-    computed as a column expression over a literal plane matrix — the corpus
-    is hashed in one codegen'd pass and shuffled only by (signature) for the
-    candidate join.  The two standard recall levers are exposed:
-
-    - ``n_tables``: independent plane sets; a neighbor is recalled if ANY
-      table buckets it with the query (recall 1-(1-p^b)^L).
-    - ``probe_bits``: multi-probe radius — each query also probes every
-      signature within Hamming distance ``probe_bits`` of its own, rescuing
-      neighbors that one marginal hyperplane split away.  Cost grows
-      C(b,0)+...+C(b,probe_bits) probe rows per query-table; queries are
-      the small side, so this trades query fan-out for recall without
-      touching the corpus.
-
-    Candidate (query, neighbor) id pairs are unioned across tables and
-    deduplicated BEFORE scoring, so each survivor costs exactly one cosine
-    regardless of how many tables bucket it.  Tuning note: the synthetic
-    testdata's embeddings are near-random (neighbor cosine ~0.4-0.5, i.e.
-    barely tighter than chance), the adversarial case for LSH — recall>=0.9
-    there needs generous probing (see tests).  Real embedding corpora
-    cluster far more sharply, giving the same recall at a fraction of the
-    candidate volume.
-    """
-    from pyspark.sql import Window
-
-    signature = signature_col
-    if n_planes is None:
-        # self-scaling default — see auto_n_planes / lsh_verified_pairs
-        n_planes = auto_n_planes(corpus.count())
-    # XOR masks for all probe signatures within Hamming <= probe_bits
-    masks = probe_masks(n_planes, probe_bits)
-
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
-    )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("cv")
-    )
-
-    cand = None
-    for t in range(n_tables):
-        planes = _deterministic_hyperplanes(dim, n_planes, seed=f"lsh{t}" if t else "lsh")
-        q = qvecs.withColumn("sig", signature(F.col("qv"), planes)).withColumn(
-            "sig", F.explode(F.array(*[F.col("sig").bitwiseXOR(F.lit(m)) for m in masks]))
-        )
-        c = cvecs.withColumn("sig", signature(F.col("cv"), planes))
-        pairs = q.join(c, "sig").select("query_id", "neighbor_id")
-        cand = pairs if cand is None else cand.unionByName(pairs)
-    cand = cand.distinct()
-
-    from bigdata_rags_spark.similarity.topk import local_topk_prefilter
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    scored = (
-        cand.filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(qvecs), "query_id")
-        .join(cvecs, "neighbor_id")
-        .withColumn("similarity", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "similarity")
-    )
-    return (
-        local_topk_prefilter(
-            scored, ["query_id"], [("similarity", False), ("neighbor_id", True)], k
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
-    )
-
-
 def lsh_bucket_skew_report(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -723,7 +514,7 @@ def lsh_bucket_skew_report(
     probe_bits: int = 2,
     dim: int = 64,
 ) -> DataFrame:
-    """LSH/banded-join bucket-skew PRE-FLIGHT (VERDICT r14 next #4): price
+    """LSH/banded-join bucket-skew PRE-FLIGHT: price
     a signature table's pair join BEFORE running it, from the bucket
     histogram alone.
 
@@ -808,7 +599,7 @@ def lsh_bucket_skew_report(
             # the N^2-scale products route through DECIMAL(38,0) (HUGEINT in
             # the oracle): bigint overflows the uniform floor at ~5e8 docs
             # and the micro multiplies at ~9.2e12 pairs — counter to the
-            # operator's 100-TB pre-flight framing (ADVICE r15 #2)
+            # operator's 100-TB pre-flight framing
             F.expr(
                 "CASE WHEN eq_pair_cost > 0 THEN"
                 " CAST(CAST(max_bucket AS DECIMAL(38,0)) * (max_bucket - 1)"

@@ -1,9 +1,10 @@
 """Product quantization (PQ) ANN serving: codes + asymmetric-distance top-k.
 
-Third classic ANN family next to LSH (`similarity/knn.py`) and IVF
-(`similarity/ivf.py`); the reference has no similarity surface at all
-(its transform DAG is relational-only, `reference/dag-transform.py`;
-SURVEY.md §2 extension tier).  Split the embedding into M subspaces, quantize each
+The library's one ANN serving path; ``similarity/ivf.py`` is its coarse
+quantizer and ``similarity/knn.py:brute_force_topk`` the exact reference.
+The reference has no similarity surface at all (its transform DAG is
+relational-only, `reference/dag-transform.py`; SURVEY.md §2 extension
+tier).  Split the embedding into M subspaces, quantize each
 to one of K codebook centroids (Jégou, Douze, Schmid, "Product quantization
 for nearest neighbor search", TPAMI 2011).  The corpus is then M small ints
 per vector (here 16 codes in [0,16) — a nibble each at scale, 8 bytes vs
@@ -11,7 +12,7 @@ per vector (here 16 codes in [0,16) — a nibble each at scale, 8 bytes vs
 table lookups instead of a d-dim dot product — the asymmetric distance
 computation (ADC).  Raw ADC ranking is lossy (the codebooks here are
 untrained md5 literals and the fixture embeddings are near-random — the
-ANN adversarial case, same note as the LSH recall test), so every serve is
+ANN adversarial case), so every serve is
 ADC shortlist, then EXACT cosine rerank of the shortlist only — FAISS's
 IVFPQ+refine shape.
 
@@ -24,11 +25,10 @@ frame it encodes per call; ``pq_adc_topk``/``pq_search_rerank`` are IVFPQ
 with a single coarse list (Jégou et al. §V), one all-zero centroid
 (``_ONE_CELL``) holding every vector.
 
-Spark-first, fully oracle-checkable (the whole reason this exists next to
-`embedding_ivf_probe_fixed`):
+Spark-first, fully oracle-checkable:
 - codebooks are FIXED md5-derived literals, exact multiples of 1/256, the
-  same repr-stable construction as the LSH planes / IVF codebook — k-means
-  PQ training would be rows-only, serving shouldn't be;
+  same repr-stable construction as the fixed IVF codebook — k-means PQ
+  training is rows-only, serving shouldn't be;
 - encode = per-subspace argmax of (dot - ||c||^2/2) over the fixed
   centroids (equivalent to argmin L2 since ||x||^2 is constant per
   subspace), computed in an Arrow-vectorized numpy pass whose per-element
@@ -54,7 +54,10 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bigdata_rags_spark.functions.vectors import as_double_array
+from bigdata_rags_spark.functions.vectors import (
+    _deterministic_hyperplanes,
+    as_double_array,
+)
 
 # independent index-table writes / bounded check jobs overlap on driver
 # threads (guide §2.6) — shared helper, also used by the dedup stores
@@ -70,8 +73,6 @@ def pq_codebooks(
     dim: int = 64, m: int = M_SUB, k: int = K_CODES, seed: str = "pq"
 ) -> list[list[list[float]]]:
     """Per-subspace literal codebooks: m lists of k centroids of dim/m."""
-    from bigdata_rags_spark.similarity.knn import _deterministic_hyperplanes
-
     sub = dim // m
     return [_deterministic_hyperplanes(sub, k, seed=f"{seed}{j}") for j in range(m)]
 
@@ -331,10 +332,10 @@ def _adc_topk(side: _QuerySide, codes: DataFrame, n: int) -> DataFrame:
         .groupBy("query_id", F.col("id").alias("neighbor_id"))
         .agg(F.sum("dot_micro").cast("bigint").alias("approx_sim_micro"))
     )
-    # partition-local pre-top-k (VERDICT r12 #2 family-wide): the agg's
-    # exchange is unavoidable (it IS the ADC sum), but the per-query
-    # window would re-shuffle all |Q| x candidates rows into one task per
-    # query — prune each partition to its own per-query best n first
+    # partition-local pre-top-k: the agg's exchange is unavoidable (it IS
+    # the ADC sum), but the per-query window would re-shuffle all
+    # |Q| x candidates rows into one task per query — prune each
+    # partition to its own per-query best n first
     # (hash-identical superset; similarity/topk.py)
     scored = local_topk_prefilter(
         scored, ["query_id"], [("approx_sim_micro", False), ("neighbor_id", True)], n
@@ -411,9 +412,9 @@ def train_pq_codebooks(
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd k-means (Jégou et al. 2011 §III.A) — the trained
     sibling of the fixed literal codebooks, completing the PQ family the
-    way ``train_ivf_centroids`` completes IVF (VERDICT r7 #4): train once
-    (rows-only — partition-order float sums make the result
-    oracle-inexact by nature), pin the result as literals, serve through
+    way ``train_ivf_centroids`` completes IVF: train once (rows-only —
+    partition-order float sums make the result oracle-inexact by
+    nature), pin the result as literals, serve through
     the SAME oracle-checkable ``pq_adc_topk`` / ``pq_search_rerank`` path.
 
     Iteration contract (the ``train_ivf_centroids`` discipline): each Lloyd
@@ -709,10 +710,10 @@ def build_ivfpq_index(
     metadata: DataFrame | None = None,
 ) -> tuple[str, str]:
     """Persist the IVFPQ index: the build half of FAISS's build-once /
-    serve-many lifecycle (VERDICT r8 #2 — ``ivfpq_search_rerank`` is the
-    right plan SHAPE but re-encodes the whole corpus inside every serving
-    call, the wrong LIFECYCLE at 100 TB where the index is built once and
-    served thousands of times).
+    serve-many lifecycle (``ivfpq_search_rerank`` is the right plan SHAPE
+    but re-encodes the whole corpus inside every serving call, the wrong
+    LIFECYCLE at 100 TB where the index is built once and served thousands
+    of times).
 
     Writes two managed tables and returns their names:
 
@@ -723,7 +724,7 @@ def build_ivfpq_index(
       in tests/test_ann_index.py).  ``metadata`` (optional id-keyed frame:
       first column the vector id, the rest filterable attributes like
       lang/source/date) is denormalized INTO the codes table at build
-      time — the production vector-store layout (VERDICT r15 next #2):
+      time — the production vector-store layout:
       ``ivfpq_index_serve(predicate=...)`` then filters the bucket-pruned
       codes scan DIRECTLY, no id-frame join at serve time.  The M-fold
       duplication of attribute values is parquet-dictionary-encoded
@@ -826,7 +827,6 @@ def ivfpq_index_serve(
     table_prefix: str = "ivfpq_idx",
     n_probe: int = 4,
     shortlist: int = 50,
-    eligible_ids: DataFrame | None = None,
     predicate: str | Column | None = None,
 ) -> DataFrame:
     """Serve ANN top-k from a PERSISTED IVFPQ index (``build_ivfpq_index``)
@@ -837,24 +837,15 @@ def ivfpq_index_serve(
     and codebooks are always the ones the build froze in ``{prefix}_meta``
     — any others would score the stored codes as garbage.
 
-    ``eligible_ids`` (optional 1-column id frame) serves the FILTERED
-    form "top-k WHERE <metadata predicate>" by PRE-FILTERING: the
-    eligible set semi-joins the codes scan before ADC, composing with —
-    never replacing — bucket pruning, so the shortlist is drawn from
-    eligible candidates only (no post-filter starvation; the tradeoff is
-    measured by `ivfpq_filtered_serving_report`).  When None the plan is
-    byte-identical to the unfiltered serve.
-
     ``predicate`` (optional SQL string or Column over the index's stored
-    predicate columns — ``build_ivfpq_index(metadata=...)``) is the
-    PRODUCTION filtered-serving path (VERDICT r15 next #2): the predicate
-    becomes a plain filter ON the bucket-pruned codes scan — Catalyst
-    pushes it into the parquet read (plan-pinned: PushedFilters carries
-    it, zero joins, bucket pruning intact), so at 100 TB a selective
-    predicate prunes row groups inside the probed buckets instead of
-    materializing an id frame and shipping a semi-join.  ``eligible_ids``
-    remains for ad-hoc predicates the index doesn't carry columns for;
-    both compose when given together.
+    predicate columns — ``build_ivfpq_index(metadata=...)``) serves the
+    FILTERED form "top-k WHERE <metadata predicate>" by PRE-FILTERING: the
+    predicate becomes a plain filter ON the bucket-pruned codes scan, so
+    the shortlist is drawn from eligible candidates only (no post-filter
+    starvation).  Catalyst pushes it into the parquet read (plan-pinned:
+    PushedFilters carries it, zero joins, bucket pruning intact), so at
+    100 TB a selective predicate prunes row groups inside the probed
+    buckets.  When None the plan is the unfiltered serve.
 
     Serving shape, in scan order:
     1. the request's queries reach the driver ONCE (``_query_side``),
@@ -883,16 +874,6 @@ def ivfpq_index_serve(
         codes = codes.filter(
             F.expr(predicate) if isinstance(predicate, str) else predicate
         )
-    if eligible_ids is not None:
-        # pre-filter serving: the predicate composes with bucket pruning
-        # (cells first, then the id semi-join on the pruned scan)
-        codes = codes.join(
-            eligible_ids.select(
-                F.col(eligible_ids.columns[0]).alias("id")
-            ),
-            "id",
-            "left_semi",
-        )
     vectors = spark.table(f"{table_prefix}_vectors")
     return _serve(
         side,
@@ -912,7 +893,7 @@ def append_ivfpq_index(
 ) -> tuple[str, str]:
     """Upsert a vector batch into an EXISTING persisted IVFPQ index —
     build-once/serve-many becomes build-once/UPSERT-many/serve-many
-    (VERDICT r9 gap #5: without this, every ingest is a full rebuild).
+    (without it, every ingest is a full rebuild).
     A batch id that is new is inserted; one already in the index (live or
     deleted) is replaced.  Batch ids must be unique
     (``ingest_vectors_batch`` collapses duplicates first).
@@ -1217,7 +1198,7 @@ def ivfpq_tuning_report(
 ) -> DataFrame:
     """Recall/cost planner for a persisted IVFPQ index — answers "what
     ``n_probe`` do I serve with" the way `lsh_tuning_planner` answers "how
-    many hyperplanes" (VERDICT r10 #6): for every ``n_probe`` in the grid,
+    many hyperplanes": for every ``n_probe`` in the grid,
     the CELL-COVERAGE recall@k against the exact brute-force answer and the
     codes-scanned cost, all from ONE pass over the index.
 
@@ -1312,144 +1293,3 @@ def ivfpq_tuning_report(
             F.coalesce(F.col("scanned_codes"), F.lit(0)).cast("bigint").alias("scanned_codes"),
         )
     )
-
-
-def ivfpq_filtered_serving_report(
-    queries: DataFrame,
-    corpus: DataFrame,
-    eligible_ids: DataFrame | dict[str, DataFrame],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    shortlist: int = 50,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    unfiltered_topk: DataFrame | None = None,
-) -> DataFrame:
-    """FILTERED ANN serving report (VERDICT r14 next #3): serve "top-k
-    WHERE <metadata predicate>" both ways every production vector store
-    weighs, and report the recall/cost tradeoff per query.
-
-    ``eligible_ids`` may be a dict {label: id-frame}: all predicates then
-    share ONE corpus encode+assign, ONE query read (``_query_side``) and
-    ONE unfiltered serve, and the output gains a leading ``pred`` label
-    column; each predicate's prefilter serve is one ``_serve`` call.
-    ``unfiltered_topk`` optionally supplies a precomputed unfiltered serve
-    (query_id, neighbor_id, similarity, rank) — it is predicate-
-    independent.
-
-    - ``prefilter``: the predicate restricts the INDEXED corpus before
-      scoring (only eligible codes are ADC-scored, the shortlist is drawn
-      from eligible candidates only) — recall against the filtered truth
-      is as good as unfiltered IVFPQ recall, but the eligible id set must
-      reach the scan (here a semi-join; on a persisted index, a predicate
-      column in the codes table).
-    - ``postfilter``: serve UNFILTERED top-k, then drop ineligible
-      results — no index change needed, but under a selective predicate
-      the unfiltered top-k may contain few (or zero) eligible rows:
-      SHORTLIST STARVATION, n_results < k with no way to recover without
-      re-serving.
-
-    ``eligible_ids`` is any 1-column (vec_id) frame — the registered query
-    derives it from `documents` metadata joined on vec_id.  Returns one
-    row per (mode, query): (mode, query_id, n_results, n_hits,
-    recall_micro, scanned_rows) where n_hits/recall_micro compare against
-    the EXACT filtered truth (brute-force cosine top-k over eligible
-    corpus) and scanned_rows counts the ADC-scored candidates — the cost
-    axis: prefilter scans only eligible codes in probed cells, postfilter
-    scans every code in probed cells.
-
-    100 TB shape: both modes stay bucket-pruned (the predicate composes
-    with cell pruning, never replaces it); the report's exact side runs on
-    a benchmark-sized query sample only.  The practical reading at scale:
-    postfilter's starvation rate tells you when to pay for predicate
-    columns in the index (pre-filtering), and scanned_rows prices the
-    difference.
-    """
-    from bigdata_rags_spark.similarity.ivf import fixed_centroids
-    from bigdata_rags_spark.similarity.knn import brute_force_topk
-
-    cents = centroids if centroids is not None else fixed_centroids(64, n_cells)
-    books = codebooks if codebooks is not None else pq_codebooks()
-    preds = (
-        eligible_ids
-        if isinstance(eligible_ids, dict)
-        else {None: eligible_ids}
-    )
-
-    # encode + cell-assign the corpus and read the queries ONCE: every
-    # predicate's serves and cost counts read these codes and this query
-    # side (multi-branch rule: materialize the codes)
-    codes = _encode_with_cells(corpus, books, cents).localCheckpoint()
-    side = _query_side(queries, cents, books, n_probe)
-    if unfiltered_topk is None:
-        unfiltered_topk = _serve(side, codes, corpus, k, shortlist)
-
-    def scanned(c: DataFrame) -> DataFrame:
-        # scanned-candidate cost: corpus vectors (m = 0 is one code row per
-        # vector) whose cell lands in the query's probed cells, excluding
-        # self — what ADC actually prices per mode
-        return (
-            c.filter(F.col("m") == 0)
-            .join(F.broadcast(side.probes), "cell")
-            .filter(F.col("id") != F.col("query_id"))
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("scanned_rows"))
-        )
-
-    qids = side.qvec.select("query_id")
-
-    def mode_report(res, cost, exact, mode: str) -> DataFrame:
-        nres = res.groupBy("query_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_results")
-        )
-        hits = (
-            res.join(exact, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
-        )
-        return (
-            qids.join(nres, "query_id", "left")
-            .join(hits, "query_id", "left")
-            .join(cost, "query_id", "left")
-            .select(
-                F.lit(mode).alias("mode"),
-                "query_id",
-                F.coalesce(F.col("n_results"), F.lit(0)).cast("bigint").alias(
-                    "n_results"
-                ),
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-                F.expr(f"coalesce(n_hits, 0) * 1000000 DIV {k}")
-                .cast("bigint")
-                .alias("recall_micro"),
-                F.coalesce(F.col("scanned_rows"), F.lit(0)).cast("bigint").alias(
-                    "scanned_rows"
-                ),
-            )
-        )
-
-    out = None
-    for label, elig_df in preds.items():
-        elig = elig_df.select(F.col(elig_df.columns[0]).alias("vec_id"))
-        corpus_elig = corpus.join(elig, "vec_id", "left_semi")
-        codes_elig = codes.join(
-            elig.select(F.col("vec_id").alias("id")), "id", "left_semi"
-        )
-        pre = _serve(side, codes_elig, corpus_elig, k, shortlist).select(
-            "query_id", "neighbor_id"
-        )
-        post = unfiltered_topk.join(
-            elig.select(F.col("vec_id").alias("neighbor_id")),
-            "neighbor_id",
-            "left_semi",
-        ).select("query_id", "neighbor_id")
-        exact = brute_force_topk(queries, corpus_elig, k=k).select(
-            "query_id", "neighbor_id"
-        )
-        rep = mode_report(pre, scanned(codes_elig), exact, "prefilter").unionByName(
-            mode_report(post, scanned(codes), exact, "postfilter")
-        )
-        if label is not None:
-            rep = rep.select(F.lit(label).alias("pred"), "*")
-        out = rep if out is None else out.unionByName(rep)
-    return out

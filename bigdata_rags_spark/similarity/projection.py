@@ -4,7 +4,7 @@ Projects ``array<float>`` embeddings onto ``out_dim`` fixed pseudo-random
 directions — the cheap, data-oblivious alternative to PCA for shrinking
 vectors before ANN indexing or clustering (public technique: Achlioptas
 2003, database-friendly random projections).  The projection matrix is
-md5-derived (``knn._deterministic_hyperplanes``), so it is a pure function
+md5-derived (``vectors._deterministic_hyperplanes``), so it is a pure function
 of (seed, dims): identical across runs, engines, and cluster topologies —
 which is what makes an exact DuckDB oracle possible (the same literal
 matrix is embedded in the oracle SQL at import time).
@@ -12,7 +12,7 @@ matrix is embedded in the oracle SQL at import time).
 100 TB: one codegen'd pass over the scan — each output dim is a zip_with/
 aggregate dot product against a literal array; no shuffle, no UDFs, no
 driver state.  Output is ``out_dim`` double columns (4x-16x narrower than
-the input vector), ready to persist or feed the LSH/IVF index builders.
+the input vector), ready to persist or feed the LSH pair join or the IVFPQ index build.
 """
 
 from __future__ import annotations
@@ -20,8 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_rags_spark.functions.vectors import as_double_array
-from bigdata_rags_spark.similarity.knn import _deterministic_hyperplanes
+from bigdata_rags_spark.functions.vectors import (
+    _deterministic_hyperplanes,
+    as_double_array,
+)
 
 
 def projection_planes(dim: int, out_dim: int, seed: str = "rproj") -> list[list[float]]:

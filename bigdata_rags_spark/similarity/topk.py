@@ -56,7 +56,7 @@ def local_topk_prefilter(
     under any partitioning.  Schema is unchanged — select the narrow
     columns (ids + score) BEFORE calling so the Arrow hop stays thin.
 
-    ``order`` columns must be NON-NULL and NON-NaN (ADVICE r13): pandas'
+    ``order`` columns must be NON-NULL and NON-NaN: pandas'
     ``sort_values`` places NaN/None LAST regardless of direction, while
     Spark orders NULL first under asc and treats NaN as the largest
     double — a NaN/null row the global window would keep could be pruned
@@ -69,7 +69,7 @@ def local_topk_prefilter(
     under the row count — the output is bounded by |keys-in-partition| x
     keep per partition, so when keep x P >= N the Arrow hop cannot shrink
     the downstream exchange and is pure overhead.  Callers that already
-    know the row count can pass ``n_rows`` (VERDICT r13 #8): when
+    know the row count can pass ``n_rows``: when
     ``keep * num_partitions >= n_rows`` the prune is SKIPPED and ``df``
     returns unchanged (visible in the plan as the missing MapInPandas
     stage).  Without ``n_rows`` the prune always applies — counting here

@@ -79,11 +79,9 @@ REGISTRY_QUERIES = [
     "incremental_minhash_dedup",
     "incremental_semantic_dedup",
     "bpe_merge_training",
-    # r16 probes (VERDICT r15 #7): the store-aware funnel's vs-store join
-    # and the filtered report's per-predicate serves — the two r15 shapes
-    # without measured scale curves — plus the r16 operators
+    # r16 probes: the store-aware funnel's vs-store join — a shape without
+    # a measured scale curve — plus the r16 operators
     "incremental_curation_funnel",
-    "ann_filtered_serving_report",
     "ann_predicate_serving",
     "video_capstone_retrieval",
     "dsir_importance_resampling",

@@ -46,6 +46,35 @@ def test_index_serve_matches_on_the_fly(spark, built_index):
     assert len(served) > 0
 
 
+@pytest.mark.parametrize("quantizer", ["fixed", "trained"])
+def test_full_probe_full_shortlist_equals_brute_force(spark, sf_oracle, quantizer):
+    """Exactness anchor of the one ANN path: probing every cell with a
+    shortlist as large as the corpus leaves nothing to approximate, so the
+    exact-cosine rerank must reproduce ``brute_force_topk`` row for row
+    (query, neighbor, similarity, rank), under a fixed or a trained coarse
+    quantizer.  Training the quantizer must be deterministic."""
+    from bigdata_rags_spark.similarity.ivf import fixed_centroids, train_ivf_centroids
+    from bigdata_rags_spark.similarity.knn import brute_force_topk
+
+    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
+    q = e.filter(F.col("vec_id") < 10)
+    if quantizer == "fixed":
+        cents = fixed_centroids(64, 16)
+    else:
+        cents = train_ivf_centroids(e, n_cells=8, n_iter=2)
+        assert cents == train_ivf_centroids(e, n_cells=8, n_iter=2)
+    rows = lambda df: sorted(  # noqa: E731
+        (r["query_id"], r["neighbor_id"], r["similarity"], r["rank"]) for r in df.collect()
+    )
+    got = rows(
+        ivfpq_search_rerank(
+            q, e, k=5, n_probe=len(cents), shortlist=e.count(), centroids=cents
+        )
+    )
+    assert got == rows(brute_force_topk(q, e, k=5))
+    assert len(got) == 50
+
+
 def _n_arrow_stages(plan: str) -> int:
     # formatted explain prints every node twice (tree line + details
     # header) — count the "(nn) MapInPandas" details headers, one per node
@@ -438,86 +467,6 @@ def test_compact_rerun_after_crash(spark, sf_smoke, _drop_tables, monkeypatch, c
     assert got == expected and len(got) == 25
 
 
-@pytest.mark.slow  # ~16 s measured r17
-def test_filtered_serving_postfilter_starves_prefilter_does_not(spark):
-    """VERDICT r14 next #3's done-criterion: under a selective predicate
-    whose eligible vectors are NOT in the unfiltered top-k, postfilter
-    provably starves (n_results < k) while prefilter returns a full k —
-    and prefilter scans strictly fewer candidates."""
-    from bigdata_rags_spark.similarity.pq import ivfpq_filtered_serving_report
-
-    dim, k = 64, 10
-
-    def vec(main: float, alt_idx: int, alt: float) -> list[float]:
-        v = [0.0] * dim
-        v[0] = main
-        if alt:
-            v[alt_idx] = alt
-        return v
-
-    # 15 ineligible vectors essentially parallel to the query, 12 eligible
-    # ones slightly rotated — the unfiltered top-10 is all-ineligible
-    corpus_rows = [(i, vec(1.0, 1, 0.001 * i)) for i in range(1, 16)]
-    corpus_rows += [(i, vec(1.0, 2, 0.15)) for i in range(16, 28)]
-    corpus = spark.createDataFrame(
-        corpus_rows, "vec_id bigint, embedding array<double>"
-    )
-    queries = spark.createDataFrame(
-        [(1000, vec(1.0, 0, 0.0))], "vec_id bigint, embedding array<double>"
-    )
-    elig = spark.createDataFrame([(i,) for i in range(16, 28)], "vec_id bigint")
-    rep = {
-        r["mode"]: r
-        for r in ivfpq_filtered_serving_report(
-            queries, corpus, elig, k=k, n_probe=4, shortlist=50
-        ).collect()
-    }
-    assert rep["postfilter"]["n_results"] < k  # starved
-    assert rep["prefilter"]["n_results"] == k  # recovered by pre-filtering
-    assert rep["prefilter"]["recall_micro"] > rep["postfilter"]["recall_micro"]
-    assert rep["prefilter"]["scanned_rows"] < rep["postfilter"]["scanned_rows"]
-    # exact filtered truth is the top-10 of the 12 eligible: prefilter
-    # should recover it fully here (shortlist covers every eligible code)
-    assert rep["prefilter"]["recall_micro"] == 1_000_000
-
-
-@pytest.mark.slow  # ~26 s measured r17
-def test_persisted_index_filtered_serve_matches_filtered_corpus(spark):
-    """ivfpq_index_serve(eligible_ids=...) — pre-filter on the PERSISTED
-    index — must equal serving an index built over only the eligible
-    corpus (same quantizers), and the unfiltered serve must be unchanged
-    by the new parameter's default."""
-    from pyspark.sql import functions as F
-
-    from bigdata_rags_spark.io.bucketing import drop_managed_table
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.pq import build_ivfpq_index, ivfpq_index_serve
-
-    e = read_testdata(spark, "/root/testdata/sf0.001", "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 3)
-    elig = e.filter(F.col("vec_id") % 2 == 0).select("vec_id")
-    for prefix in ("t_fserve_full", "t_fserve_elig"):
-        for s in ("codes", "vectors", "meta", "tombstones"):
-            drop_managed_table(spark, f"{prefix}_{s}")
-    build_ivfpq_index(e, table_prefix="t_fserve_full")
-    build_ivfpq_index(
-        e.join(elig, "vec_id", "left_semi"), table_prefix="t_fserve_elig"
-    )
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    filtered = sorted(
-        ivfpq_index_serve(
-            q, k=5, table_prefix="t_fserve_full", eligible_ids=elig
-        ).collect(),
-        key=key,
-    )
-    rebuilt = sorted(
-        ivfpq_index_serve(q, k=5, table_prefix="t_fserve_elig").collect(), key=key
-    )
-    assert [tuple(r) for r in filtered] == [tuple(r) for r in rebuilt]
-    assert filtered  # non-vacuous
-    assert all(r["neighbor_id"] % 2 == 0 for r in filtered)
-
-
 def test_merge_indexes_lifecycle_and_guards(spark, sf_smoke, _drop_tables):
     """merge_ivfpq_indexes: a delete in a source shard survives the merge
     (tombstone union), bucket pruning holds on the merged index, and the
@@ -565,15 +514,15 @@ def test_merge_indexes_lifecycle_and_guards(spark, sf_smoke, _drop_tables):
 
 
 def test_predicate_columns_serve_plan_and_parity(spark, sf_smoke, _drop_tables):
-    """VERDICT r15 next #2's done-criterion: build with metadata columns,
-    serve with predicate="lang = 'en'" — the predicate must appear as a
-    PUSHED filter on the codes scan, the plan must contain zero joins
-    against documents, bucket pruning must survive, and the result must
-    equal the eligible-ids pre-filter form (the r15 path) on the same
-    index."""
+    """Build with metadata columns, serve with predicate="lang = 'en'" —
+    the predicate must appear as a PUSHED filter on the codes scan, the
+    plan must contain zero joins against documents, bucket pruning must
+    survive, and the result must equal serving an index built over the
+    lang = 'en' corpus only (the replay the ann_predicate_serving oracle
+    runs)."""
     from bigdata_rags_spark.similarity.pq import build_ivfpq_index, ivfpq_index_serve
 
-    _drop_tables.append("t_ann_pred")
+    _drop_tables.extend(["t_ann_pred", "t_ann_pred_en"])
     e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"]
     docs = read_testdata(spark, sf_smoke, "documents")["documents"]
     build_ivfpq_index(
@@ -588,17 +537,17 @@ def test_predicate_columns_serve_plan_and_parity(spark, sf_smoke, _drop_tables):
     assert "documents" not in plan  # zero metadata joins at serve time
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     assert m and int(m.group(1)) < int(m.group(2)), plan[:3000]
-    # value parity with the id-frame pre-filter form on the SAME index
+    # value parity with an index over the eligible corpus alone (same
+    # fixed quantizers), served unfiltered
     elig = docs.filter(F.col("lang") == "en").select(
         F.col("doc_id").alias("vec_id")
     )
-    via_ids = ivfpq_index_serve(
-        q, k=5, table_prefix="t_ann_pred", eligible_ids=elig
-    )
+    build_ivfpq_index(e.join(elig, "vec_id", "left_semi"), table_prefix="t_ann_pred_en")
+    rebuilt = ivfpq_index_serve(q, k=5, table_prefix="t_ann_pred_en")
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     srows = sorted(served.collect(), key=key)
     assert [tuple(r) for r in srows] == [
-        tuple(r) for r in sorted(via_ids.collect(), key=key)
+        tuple(r) for r in sorted(rebuilt.collect(), key=key)
     ]
     assert srows  # non-vacuous
     # ... and the unfiltered serve on a metadata-carrying index is

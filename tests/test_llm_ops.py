@@ -9,11 +9,7 @@ from pyspark.sql import functions as F
 
 from bigdata_rags_spark.dedup.exact import dup_clusters, exact_dedup
 from bigdata_rags_spark.dedup.minhash import lsh_candidate_pairs, ngram_jaccard_pairs
-from bigdata_rags_spark.similarity.knn import (
-    brute_force_topk,
-    cosine_pairs_above,
-    lsh_bucketed_topk,
-)
+from bigdata_rags_spark.similarity.knn import brute_force_topk, cosine_pairs_above
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -127,100 +123,6 @@ def test_cosine_pairs_blocked_matches_expr_path_across_block_sizes(vectors):
             )
         )
         assert blocked == expr, block_rows
-
-
-def test_lsh_bucketed_topk_recalls_near_identical(vectors):
-    out = lsh_bucketed_topk(
-        vectors.filter(F.col("vec_id") == 1), vectors, k=3, n_planes=6, dim=16
-    ).collect()
-    # near-identical vectors land in the same hyperplane bucket
-    assert out and out[0]["neighbor_id"] == 100
-
-
-@pytest.mark.slow  # ~12 s measured r17
-def test_lsh_recall_at_5_on_real_embeddings(spark, sf_oracle):
-    # VERDICT r1 #7: recall measured against brute force on the REAL
-    # embeddings table (sf0.01: 500 x 64-dim), not toy vectors.  The
-    # synthetic embeddings are near-random (best-neighbor cosine ~0.5) —
-    # LSH's adversarial case — so the tuned config leans on multi-table +
-    # 2-bit multi-probe; measured 0.99 at (6 planes, 6 tables), asserted
-    # >= 0.9.
-    from bigdata_rags_spark.io.readers import read_testdata
-
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 20)
-    truth: dict[int, set[int]] = {}
-    for r in brute_force_topk(q, e, k=5).collect():
-        truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    got: dict[int, set[int]] = {}
-    for r in lsh_bucketed_topk(
-        q, e, k=5, n_planes=6, dim=64, n_tables=6, probe_bits=2
-    ).collect():
-        got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recall = sum(len(truth[i] & got.get(i, set())) for i in truth) / (5 * len(truth))
-    assert recall >= 0.9, recall
-
-
-def test_binary_quantize_packs_sign_bits_into_32bit_words(spark):
-    from bigdata_rags_spark.similarity.binary import binary_quantize
-
-    # dim=64: component 0 positive -> w0 bit 0; component 63 positive -> w1
-    # bit 31 (the highest bit any word carries — still non-negative); zeros
-    # and negatives quantize to 0.
-    v = [0.0] * 64
-    v[0] = 1.5
-    v[33] = -2.0  # negative -> bit stays 0
-    v[63] = 0.25
-    df = spark.createDataFrame([(7, v)], ["vec_id", "embedding"])
-    row = binary_quantize(df, dim=64).collect()[0]
-    assert row["w0"] == 1
-    assert row["w1"] == 1 << 31
-    assert row["w0"] >= 0 and row["w1"] >= 0
-
-
-def test_binary_hamming_topk_equals_brute_force_at_full_shortlist(spark, sf_oracle):
-    # shortlist >= |corpus| makes the Hamming stage a no-op filter, so the
-    # rerank must reproduce the exact brute-force top-k row-for-row — the
-    # equivalence anchor for the binary-rescore architecture.
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.binary import binary_hamming_topk
-
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 5)
-    exact = sorted(
-        (r["query_id"], r["neighbor_id"], r["similarity"], r["rank"])
-        for r in brute_force_topk(q, e, k=5).collect()
-    )
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], r["similarity"], r["rank"])
-        for r in binary_hamming_topk(q, e, shortlist=10**6, k=5).collect()
-    )
-    assert got == exact
-
-
-def test_binary_hamming_recall_and_partitioning_invariance(spark, sf_oracle):
-    # production shortlist (50 of 500 codes): recall@5 vs brute force on the
-    # REAL embeddings — near-random vectors are the adversarial case for
-    # sign-bit codes (true-neighbor angles barely beat chance), so the floor
-    # is deliberately modest; clustered real corpora sit far higher.  Also
-    # pins partitioning invariance: a repartitioned corpus yields the same
-    # rows (deterministic tiebreaks end to end).
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.binary import binary_hamming_topk
-
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 20)
-    truth: dict[int, set[int]] = {}
-    for r in brute_force_topk(q, e, k=5).collect():
-        truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    out = binary_hamming_topk(q, e, shortlist=50, k=5).collect()
-    got: dict[int, set[int]] = {}
-    for r in out:
-        got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recall = sum(len(truth[i] & got.get(i, set())) for i in truth) / (5 * len(truth))
-    assert recall >= 0.35, recall
-    rep = binary_hamming_topk(q, e.repartition(13), shortlist=50, k=5).collect()
-    assert sorted(map(tuple, rep)) == sorted(map(tuple, out))
 
 
 def test_pass_at_k_matches_closed_form(spark):
@@ -433,68 +335,6 @@ def test_repetition_quality_gates_planted_docs(spark):
     assert out[1]["distinct_ratio"] == 1.0 and out[1]["top_unigram_frac"] < 0.05
 
 
-def test_ivf_probe_all_cells_equals_brute_force(spark, sf_oracle):
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.ivf import ivf_topk, train_ivf_centroids
-
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 10)
-    cents = train_ivf_centroids(e, n_cells=8, n_iter=2)
-    exact = {tuple(r) for r in brute_force_topk(q, e, k=5).collect()}
-    full = {tuple(r) for r in ivf_topk(q, e, k=5, n_probe=8, centroids=cents).collect()}
-    # probing every cell degenerates to exact search: same rows, scores, ranks
-    assert full == exact
-
-
-@pytest.mark.slow  # ~30 s measured r17
-def test_ivf_recall_at_5_on_real_embeddings(spark, sf_oracle):
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.ivf import ivf_topk, train_ivf_centroids
-
-    # Same adversarial fixture as the LSH recall test (near-random vectors):
-    # measured 0.93 at n_cells=16 / n_probe=10, asserted >= 0.9.  Real
-    # embedding corpora cluster sharply and reach this recall at far lower
-    # probe fractions.
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 20)
-    truth: dict[int, set[int]] = {}
-    for r in brute_force_topk(q, e, k=5).collect():
-        truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    cents = train_ivf_centroids(e, n_cells=16, n_iter=5)
-    got: dict[int, set[int]] = {}
-    for r in ivf_topk(q, e, k=5, n_probe=10, centroids=cents).collect():
-        got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recall = sum(len(truth[i] & got.get(i, set())) for i in truth) / (5 * len(truth))
-    assert recall >= 0.9, recall
-    # codebook is deterministic: retraining yields the identical centroids
-    assert cents == train_ivf_centroids(e, n_cells=16, n_iter=5)
-
-
-def test_ivf_probe_fixed_codebook_is_exact_within_probed_cells(spark, sf_oracle):
-    """The oracle-checked serving path (embedding_ivf_probe_fixed): every
-    emitted neighbor carries the EXACT rounded cosine (ANN only prunes
-    candidates, never approximates scores), and probing all cells of the
-    fixed codebook degenerates to brute force."""
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.queries.catalog import REGISTRY
-    from bigdata_rags_spark.similarity.ivf import fixed_centroids, ivf_topk
-
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 5)
-    exact_sim = {
-        (r["query_id"], r["neighbor_id"]): r["similarity"]
-        for r in brute_force_topk(q, e, k=10_000).collect()
-    }
-    got = REGISTRY["embedding_ivf_probe_fixed"].spark(spark, sf_oracle).collect()
-    assert got and all(r["rank"] <= 5 for r in got)
-    for r in got:
-        assert exact_sim[(r["query_id"], r["neighbor_id"])] == r["similarity"]
-    cents = fixed_centroids(64, 16)
-    full = {tuple(r) for r in ivf_topk(q, e, k=5, n_probe=16, centroids=cents).collect()}
-    brute = {tuple(r) for r in brute_force_topk(q, e, k=5).collect()}
-    assert full == brute
-
-
 def test_int8_quantization_bounds(spark, sf_oracle):
     from bigdata_rags_spark.queries.llm_ops import embedding_int8_quantization
 
@@ -647,8 +487,8 @@ def test_lsh_and_ivf_projections_have_numeric_margin(spark, sf_oracle):
     import numpy as np
 
     from bigdata_rags_spark.io.readers import read_testdata
+    from bigdata_rags_spark.functions.vectors import _deterministic_hyperplanes
     from bigdata_rags_spark.similarity.ivf import fixed_centroids
-    from bigdata_rags_spark.similarity.knn import _deterministic_hyperplanes
 
     e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
     mat = np.array([list(r["embedding"]) for r in e.collect()], dtype=np.float64)
@@ -1021,8 +861,8 @@ def test_bloom_words_merge_across_builds(spark):
 
 
 def test_pq_rerank_recall_on_real_embeddings(spark, sf_oracle):
-    # Same caveat as the LSH recall test: the fixture embeddings are
-    # near-random (ANN's adversarial case) and the PQ codebooks are
+    # The fixture embeddings are near-random, best-neighbor cosine ~0.5
+    # (ANN's adversarial case), and the PQ codebooks are
     # untrained md5 literals, so raw ADC ranking is lossy by construction.
     # The production path (ADC shortlist=100 of 1000 -> exact rerank)
     # measured 0.80 recall@5; assert >= 0.6.
@@ -2584,41 +2424,6 @@ def test_temperature_mixing_rebalances_and_caps(spark):
     assert got["big"]["rate_micro"] < 500000  # big domain sampled BELOW the flat rate
 
 
-def test_matryoshka_recall_signal_placement(spark):
-    """Planted embeddings: when all ranking signal lives in the first 8
-    components, every prefix dim achieves full recall; when the signal
-    lives only in the tail, the dim-8 prefix is blind (its cosine sees
-    identical prefixes) while the full dim recovers truth."""
-    import math
-
-    from bigdata_rags_spark.similarity.knn import matryoshka_recall
-
-    def head_vec(theta):  # signal in dims 0-1, zeros after
-        return [math.cos(theta), math.sin(theta)] + [0.0] * 14
-
-    def tail_vec(theta):  # constant head, signal in dims 14-15
-        return [1.0] + [0.0] * 13 + [math.cos(theta), math.sin(theta)]
-
-    for maker, expect_d8_full in [(head_vec, True), (tail_vec, False)]:
-        # scramble theta vs id so the id tiebreak does NOT coincide with
-        # angular nearest-neighbor truth
-        rows = [(i, maker(0.1 * ((i * 5) % 12))) for i in range(12)]
-        e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        got = {
-            (r["dim"], r["query_id"]): r["recall_milli"]
-            for r in matryoshka_recall(
-                e.filter("vec_id < 2"), e, dims=(8, 16), k=3
-            ).collect()
-        }
-        assert got[(16, 0)] == 1000 and got[(16, 1)] == 1000  # truth band
-        if expect_d8_full:
-            assert got[(8, 0)] == 1000 and got[(8, 1)] == 1000
-        else:
-            # prefix-8 cosine is constant across candidates -> ranking falls
-            # back to the id tiebreak and misses most of the true top-3
-            assert got[(8, 0)] < 1000 or got[(8, 1)] < 1000
-
-
 def test_sequence_packing_exact_replay(spark):
     """Packing plan equals a python replay of the concatenate-then-chunk
     layout (md5 order per shard, prefix-sum cuts), and the derived
@@ -3139,31 +2944,6 @@ def test_ivfpq_recall_report_bounds_and_nonvacuous(spark, sf_oracle):
     assert sum(r["n_hits"] for r in out) > 0
 
 
-def test_matryoshka_funnel_degenerates_to_exact_at_full_shortlist(spark, sf_oracle):
-    """Family anchor: with shortlist >= corpus the coarse stage cannot
-    drop anything, so the funnel's final ranking equals the exact
-    full-dimension brute force."""
-    from bigdata_rags_spark.io.readers import read_testdata
-    from bigdata_rags_spark.similarity.knn import (
-        brute_force_topk,
-        matryoshka_coarse_to_fine_topk,
-    )
-
-    e = read_testdata(spark, sf_oracle, "embeddings")["embeddings"]
-    q = e.filter(F.col("vec_id") < 3)
-    n = e.count()
-    funnel = {
-        (r["query_id"], r["neighbor_id"], r["similarity"], r["rank"])
-        for r in matryoshka_coarse_to_fine_topk(
-            q, e, d_coarse=8, shortlist=n, k=5
-        ).collect()
-    }
-    exact = {
-        tuple(r) for r in brute_force_topk(q, e, k=5).collect()
-    }
-    assert funnel == exact
-
-
 def test_tokenizer_fertility_higher_for_unseen_language(spark):
     """A language whose words the merges never compress must pay more
     tokens per word than the language the merges were trained on."""
@@ -3244,8 +3024,8 @@ def test_lsh_skew_preflight_prices_pair_join_exactly(spark):
     (a < b) pairs at signature Hamming <= probe_bits, per table."""
     from itertools import combinations
 
+    from bigdata_rags_spark.functions.vectors import _deterministic_hyperplanes
     from bigdata_rags_spark.similarity.knn import (
-        _deterministic_hyperplanes,
         lsh_bucket_skew_report,
         signature_col,
     )

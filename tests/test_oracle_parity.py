@@ -20,7 +20,6 @@ ORACLE_SPECS = sorted(n for n, s in REGISTRY.items() if s.oracle)
 # (e.g. the IVFPQ lifecycle keeps the on-the-fly rerank + index tests, the
 # tokenizer family keeps subword stats/training parity).
 _SLOW_PARITY = {
-    "ann_filtered_serving_report",
     "ann_predicate_serving",
     "bpe_byte_encode_docs",
     "bpe_byte_roundtrip",
@@ -88,8 +87,6 @@ def test_registry_contract():
     assert rows_only == {
         "approx_count_distinct_orders",       # HLL sketch: engine-specific
         "embedding_near_dup_pairs_mm",        # BLAS reduction order
-        # (embedding_ivf_topk retired r13 — superseded by the oracle-checked
-        # embedding_ivf_probe_fixed; trained path stays test-pinned)
         "approx_percentile_prices",           # GK quantile sketch: engine-specific
         "zone_compaction_invariant",          # filesystem effect (part-file count)
         "embedding_pq_trained_rerank",        # iterative Lloyd training (r8)

@@ -90,9 +90,7 @@ def test_sweep_queries_plan_the_local_prefilter(spark, sf_smoke):
     shuffle, not after."""
     for name in (
         "embedding_cosine_topk",
-        "embedding_binary_hamming_topk",
         "embedding_hard_negatives",
-        "embedding_lsh_topk",
     ):
         p = _plan(REGISTRY[name].spark(spark, sf_smoke))
         assert "MapInPandas" in p, f"{name} lost the local pre-top-k:\n{p[:1500]}"
@@ -141,14 +139,3 @@ def test_prefilter_skips_when_keep_times_partitions_covers_n(spark):
     assert "MapInPandas" in _plan(applied)  # 2 * 8 < 100 -> prune
     # and the no-op path is value-identical to the input
     assert _global_topk(skipped, 20) == _global_topk(df, 20)
-
-
-def test_binary_topk_values_unchanged_by_prefilter(spark, sf_oracle):
-    """End-to-end anchor: the registered binary query (prefilter inside)
-    equals the pre-r13 semantics — shortlist>=corpus degenerate equals the
-    exact brute force, pinned already in test_llm_ops; here pin the
-    registered pinned-shortlist result is stable across partitioning."""
-    from bigdata_rags_spark.queries.catalog import REGISTRY as R
-
-    rows = {tuple(r) for r in R["embedding_binary_hamming_topk"].spark(spark, sf_oracle).collect()}
-    assert len(rows) == 25  # 5 queries x k=5, fully populated
