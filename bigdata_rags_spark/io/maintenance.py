@@ -33,7 +33,8 @@ def _swap_dirs(spark: SparkSession, staging: str, final: str) -> None:
     rename is the store's copy+delete).  Sequence: ``final`` ->
     ``final__old``, ``staging`` -> ``final``, delete ``final__old``; a
     crash between the renames leaves the previous data intact under
-    ``__old`` for manual recovery instead of a deleted zone (ADVICE r1).
+    ``__old`` for manual recovery instead of a deleted zone (deleting
+    ``final`` before the rename would lose it to such a crash).
     NOT transactional — concurrent readers can observe a missing ``final``
     for the instant between the two renames; use a table format
     (Delta/Iceberg MERGE) when that window matters.
@@ -58,8 +59,7 @@ def _zone_exists(spark: SparkSession, zone_path: str) -> bool:
     exists but the read failed" (corrupt footer, FS hiccup, permissions).
     Swallowing the latter would make a merge treat the zone as empty and
     the staging swap would then replace real history with only the fresh
-    batch (ADVICE r2) — so any read error after a positive probe
-    propagates.
+    batch — so any read error after a positive probe propagates.
     """
     fs, jvm = _hadoop_fs(spark, zone_path)
     return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(zone_path)))
@@ -284,8 +284,8 @@ def as_of_snapshot(
 ) -> DataFrame:
     """Reconstruct the table EXACTLY as of time ``ts`` from an SCD-2
     history frame (the output of ``scd2_apply`` / ``merge_scd2``) — zone
-    time travel (VERDICT r13 next #6): the natural consumer of the
-    retained-history layout, and the table-grain generalization of the
+    time travel, so a past state can be read back without keeping
+    snapshots: the natural consumer of the retained-history layout, and the table-grain generalization of the
     key-grain ``scd2_point_in_time_lookup``.
 
     A row is live at ``ts`` iff ``valid_from <= ts < valid_to`` (NULL

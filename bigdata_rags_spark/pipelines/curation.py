@@ -1,5 +1,5 @@
 """Pretraining-data curation capstone: the full raw-pages -> packed-tokens
-funnel as ONE composed plan (VERDICT r14 next #2 — the curation tier's
+funnel as ONE composed plan (the curation tier's counterpart of
 `rag_capstone_retrieval`).
 
 Every stage is an operator this repo already ships and oracle-checks on its
@@ -275,10 +275,10 @@ def cross_modal_image_gate(
     prefix_k: int = 8,
     max_hamming: int = 7,
 ) -> DataFrame:
-    """CROSS-MODAL dedup gate (VERDICT r14 next #6): drop documents whose
-    attached IMAGE is a near-dup of a lower-id kept document's image, even
-    when their text differs — the image-level re-post case text dedup
-    misses (same meme/photo, new caption).
+    """CROSS-MODAL dedup gate: drop documents whose attached IMAGE is a
+    near-dup of a lower-id kept document's image, even when their text
+    differs — the image-level re-post case text dedup misses (same
+    meme/photo, new caption).
 
     ``h`` is a 128-bit image-hash frame (doc_id, w0..w3) — the
     `multimodal/codecs.image_ahash128` output; ``docs`` carries (doc_id,

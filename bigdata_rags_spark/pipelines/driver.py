@@ -6,11 +6,16 @@ SparkSession — no Airflow:
 - extract (reference dag-extract.py:41-111): per-dataset write to the raw
   zone with per-dataset try/except error isolation, empty-result detection
   (ERROR status, reference :91-93), and SUCCESS/ERROR markers (:114-161).
+  The datasets' writes are independent, so they run as concurrent Spark
+  jobs (``io/jobs.run_overlapped``, at most ``defaultParallelism`` at once).
 - transform (dag-transform.py): all-sources gate (ShortCircuit analog,
-  :55-63), the three football pipelines in one Spark app (the reference's
-  TaskGroup parallelism becomes Spark job scheduling), stage writes +
-  single ``transform_SUCCESS`` marker (:393-412).
-- load (dag-load.py): stage gate (:24-39), write exploration tables.
+  :55-63), then the three football pipelines written concurrently — the
+  reference's TaskGroup parallelism (:426-496) becomes overlapped Spark
+  jobs — and a single ``transform_SUCCESS`` marker once all three writes
+  succeed (:393-412).
+- load (dag-load.py): stage gate (:24-39), write exploration tables one at
+  a time: ``write_table`` is the caller's callback, which need not be
+  thread-safe.
   Deviations by design: run date is an explicit parameter (fixes the
   reference's import-time ``datetime.now()`` day-rollover bug, SURVEY §3.2),
   and load failures RAISE instead of being silently swallowed (the
@@ -22,10 +27,12 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Callable, Mapping
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_rags_spark.io.jobs import run_overlapped
 from bigdata_rags_spark.io.maintenance import remove_dir
 from bigdata_rags_spark.io.writers import write_partitioned
 from bigdata_rags_spark.operators.observability import observe_metrics
@@ -71,12 +78,15 @@ def run_extract(
     layout: ZoneLayout,
     run_date: dt.date,
 ) -> dict[str, str]:
-    """Source frames -> raw zone, one dataset at a time with error isolation.
+    """Source frames -> raw zone, every dataset's write submitted at once
+    (``run_overlapped``) with per-dataset error isolation.
 
-    Returns the per-dataset status dict (the reference's XCom payload,
-    dag-extract.py:111 — here a plain return value)."""
-    status: dict[str, str] = {}
-    for name in dict.fromkeys(sources):
+    Returns the per-dataset status dict in registration order (the
+    reference's XCom payload, dag-extract.py:111 — here a plain return
+    value)."""
+    status: dict[str, str] = dict.fromkeys(sources, ERROR)
+
+    def extract(name: str) -> None:
         df = sources[name]
         try:
             # ONE job per dataset: the row counter rides the write action via
@@ -98,6 +108,8 @@ def run_extract(
         except Exception:
             status[name] = ERROR
         write_status_marker(layout, "raw", name, status[name], run_date)
+
+    run_overlapped(*[partial(extract, name) for name in status])
     return status
 
 
@@ -113,9 +125,15 @@ def run_transform(spark: SparkSession, layout: ZoneLayout, run_date: dt.date) ->
         name: spark.read.schema(FOOTBALL[name]).parquet(layout.table_dir("raw", name, run_date))
         for name in ALL_INPUTS
     }
-    for prefix, (inputs, fn) in TRANSFORMS.items():
+
+    def transform(prefix: str) -> None:
+        inputs, fn = TRANSFORMS[prefix]
         out = fn({k: tables[k] for k in inputs})
         write_partitioned(out, layout.table_dir("stage", prefix, run_date))
+
+    # the three pipelines are independent (the reference's TaskGroup); a
+    # failed write re-raises after all three finish, before the marker
+    run_overlapped(*[partial(transform, prefix) for prefix in TRANSFORMS])
     write_status_marker(layout, "stage", "transform", SUCCESS, run_date)
     return True
 

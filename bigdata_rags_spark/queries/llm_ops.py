@@ -16,7 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_rags_spark.dedup.exact import dup_clusters, exact_dedup
-from bigdata_rags_spark.dedup.minhash import lsh_candidate_pairs, ngram_jaccard_pairs
+from bigdata_rags_spark.dedup.minhash import (
+    _affine as _minhash_affine,
+    lsh_candidate_pairs,
+    ngram_jaccard_pairs,
+)
 from bigdata_rags_spark.functions.text import (
     BPE_TOKEN_RE,
     STOPWORDS,
@@ -182,11 +186,7 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_minhash_oracle() -> str:
     # mirrors dedup/minhash.py's affine family / 12-2 banding (the width
     # auto_minhash_params pins for the stored-index size at sf<=0.1)
-    min_exprs = ",\n         ".join(
-        f"MIN(({(s * 2 + 1) * 2654435761 % 2147483648} * base + {s * 40503})"
-        f" % 2147483647) AS h{s}"
-        for s in range(12)
-    )
+    min_exprs = ",\n         ".join(f"MIN({_minhash_affine(s)}) AS h{s}" for s in range(12))
     band_keys = ", ".join(
         f"CAST(h{2 * i} AS VARCHAR) || '_' || CAST(h{2 * i + 1} AS VARCHAR)"
         for i in range(6)
@@ -337,11 +337,7 @@ def prefix_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # mirror of dedup/minhash.py's affine hash family and band layout
-_MIN_EXPRS = ",\n         ".join(
-    f"MIN(({(s * 2 + 1) * 2654435761 % 2147483648} * base + {s * 40503})"
-    f" % 2147483647) AS h{s}"
-    for s in range(12)
-)
+_MIN_EXPRS = ",\n         ".join(f"MIN({_minhash_affine(s)}) AS h{s}" for s in range(12))
 _BAND_KEYS = ", ".join(
     f"CAST(h{2 * i} AS VARCHAR) || '_' || CAST(h{2 * i + 1} AS VARCHAR)" for i in range(6)
 )

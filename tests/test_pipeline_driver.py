@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from pyspark.sql import functions as F
 
 from bigdata_rags_spark.io.zones import ERROR, SUCCESS, ZoneLayout, read_status
 from bigdata_rags_spark.pipelines.driver import (
@@ -57,6 +58,20 @@ def test_empty_source_gets_error_and_gates_transform(spark, sources, tmp_path):
     assert read_status(layout, "stage", "transform", RUN_DATE) is None
 
 
+def test_failing_source_is_isolated_and_gates_transform(spark, sources, tmp_path):
+    layout = ZoneLayout(str(tmp_path / "lake"))
+    broken = sources["saves_team"].withColumn("Team", F.raise_error("source read failed"))
+    status = run_extract({**sources, "saves_team": broken}, layout, RUN_DATE)
+    assert list(status) == list(sources)  # registration order
+    assert status["saves_team"] == ERROR
+    assert read_status(layout, "raw", "saves_team", RUN_DATE) == ERROR
+    others = [name for name in sources if name != "saves_team"]
+    assert all(status[n] == SUCCESS for n in others)
+    assert all(read_status(layout, "raw", n, RUN_DATE) == SUCCESS for n in others)
+    assert run_transform(spark, layout, RUN_DATE) is False
+    assert read_status(layout, "stage", "transform", RUN_DATE) is None
+
+
 def test_load_raises_without_stage_gate(spark, tmp_path):
     layout = ZoneLayout(str(tmp_path / "lake"))
     with pytest.raises(RuntimeError, match="transform_SUCCESS missing"):
@@ -69,11 +84,15 @@ def test_duplicate_source_registration_is_deduped():
 
 
 def test_transform_reads_raw_tables_without_schema_inference(spark, sources, tmp_path):
-    """Raw tables are read with their registered schemas: no per-table
-    schema-inference job (the schema-less reads took 38 jobs)."""
+    """Extract runs one job per dataset; transform reads the raw tables
+    with their registered schemas: no per-table schema-inference job (the
+    schema-less reads took 38 jobs)."""
     from bigdata_rags_spark.testing import spark_jobs
 
     layout = ZoneLayout(str(tmp_path / "lake"))
-    run_extract(sources, layout, RUN_DATE)
-    assert spark_jobs(spark, lambda: run_transform(spark, layout, RUN_DATE)) <= 20
+    # one job per dataset: the row count rides the write; the overlapped
+    # writes' jobs stay in the caller's job group, so the pins see them
+    assert len(sources) == 18
+    assert spark_jobs(spark, lambda: run_extract(sources, layout, RUN_DATE)) == 18
+    assert 0 < spark_jobs(spark, lambda: run_transform(spark, layout, RUN_DATE)) <= 20
     assert read_status(layout, "stage", "transform", RUN_DATE) == SUCCESS
